@@ -29,16 +29,16 @@ import org.apache.spark.sql.SparkSession
   * behavior stays visible rather than hidden by the summary statistic.
   *
   * Attribution note: WITHIN a rep, caches are shared — the CANONICAL
-  * PAYER of each shared pipeline (q35 for the shingle/verified-pair
-  * kernels, q40 for the LSH candidate set, q14 for the co-pair graph)
-  * runs FIRST and pays its build cost; every other member then times a
-  * cache hit. Payer-first ordering (round 10) replaced plain
-  * lexicographic order after q149 — which sorts before q35 — silently
-  * absorbed the shingle build and drifted 0.95x -> 1.49x against an
-  * envelope that attributed that cost to q35. Per-query numbers are
-  * therefore suite-relative, not standalone; the emitted JSON carries
-  * the shared groups under "shared_cache_groups" and the actual payer
-  * under "cache_build_paid_by" so a BENCH_ONLY subset is read correctly.
+  * PAYER of each shared kernel family ([[cachePayers]]) runs FIRST and
+  * pays its build cost; every other reader then times a cache hit.
+  * Payer-first ordering (round 10) replaced plain lexicographic order
+  * after q149 — which sorts before q35 — silently absorbed the shingle
+  * build and drifted 0.95x -> 1.49x against an envelope that attributed
+  * that cost to q35. Per-query numbers are therefore suite-relative,
+  * not standalone; the emitted JSON carries each family's readers, as
+  * the warm-up pass recorded them, under "shared_cache_groups" and the
+  * actual payer under "cache_build_paid_by" so a BENCH_ONLY subset is
+  * read correctly.
   *
   * A query that throws is reported as null in `queries` and listed in
   * `errors` instead of contributing a near-zero time to the total.
@@ -53,73 +53,19 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Within-rep shared session caches as (group, canonical payer,
-    * members): the canonical payer runs FIRST (see run-order note in
-    * main) and pays the build cost; later members time a cache hit.
-    * Members are every catalog entry that reads the group's persisted
-    * kernel, headline or not, so BENCH_ALL runs attribute correctly.
+  /** Canonical payers of the within-rep shared session caches, in run
+    * order: each runs FIRST (see run-order note in main) and pays the
+    * build of the kernel families it reads — q35 the shingle rows and
+    * verified pairs, q40 the LSH candidates, q165 the ANN buckets, q14
+    * the co-pair graph, m01 the ALS model, m05 the GBT model — so every
+    * later reader times a cache hit. Only the order is kept by hand:
+    * which queries read which family is recorded during the warm-up
+    * pass ([[queries.KernelCache.recording]]).
     */
-  private[graft] val sharedGroups: Seq[(String, String, Seq[String])] = Seq(
-    ("verified_pairs", "q35_ngram_jaccard_neardup",
-      Seq("q35_ngram_jaccard_neardup", "q50_corpus_curation",
-        "q62_dedup_components", "q130_canonical_selection",
-        "q135_dedup_yield",
-        // round-11 membership completion (full consumer audit of
-        // ngramNearDupPairs): every truth-kernel reader, headline or not
-        "q139_leakage_free_split", "q234_dedup_token_ledger",
-        "q296_blocking_quality", "q305_fellegi_sunter",
-        "q307_sorted_neighborhood")),
-    ("lsh_candidates", "q40_embedding_lsh_ann",
-      Seq("q40_embedding_lsh_ann", "q57_embedding_neardup_ann")),
-    // the adaptive multi-probe LSH bucket/candidate kernel
-    // (annBucketCache/annCandCache) — q165 sorts first among consumers,
-    // so it is the payer in any BENCH_ALL run
-    ("ann_buckets", "q165_semantic_decontamination",
-      Seq("q165_semantic_decontamination", "q204_mutual_knn",
-        "q238_matryoshka_audit",
-        // round 12: caught by BenchGroupsSpec's derived-membership
-        // audit on its first run — q240 composes the LSH cut and reads
-        // this family's caches (ScaleSweep knew; this list didn't)
-        "q240_contamination_report")),
-    ("shingle_rows", "q35_ngram_jaccard_neardup",
-      Seq("q35_ngram_jaccard_neardup", "q36_minhash_lsh_neardup",
-        "q50_corpus_curation", "q62_dedup_components",
-        "q65_incremental_dedup", "q67_decontamination",
-        "q86_bloom_decontamination", "q112_containment_neardup",
-        "q130_canonical_selection", "q132_ingest_merge",
-        "q135_dedup_yield",
-        // round-10 additions: the minhash/prefix AUDIT entries read the
-        // same shingle/signature kernels (q149's round-9 drift was this
-        // membership gap — it sorted before q35 and silently paid the
-        // build the envelope attributed to q35)
-        "q149_minhash_estimate_audit", "q296_blocking_quality",
-        "q297_bbit_minwise",
-        // round-11 membership completion (full consumer audit of
-        // shingleRows/shingleTids/shingleSizes/minhashSigs/simhashPerDoc/
-        // prefixRows/verifyJaccard — all read the persisted shingle rows)
-        "q37_simhash", "q38_simhash_pairs", "q45_fingerprint",
-        "q60_ngram_novelty", "q139_leakage_free_split",
-        "q140_source_overlap", "q172_source_minhash_overlap",
-        "q231_accession_novelty", "q234_dedup_token_ledger",
-        "q260_coverage_selection", "q305_fellegi_sunter",
-        "q307_sorted_neighborhood",
-        // round 12: BenchGroupsSpec derived-membership audit — q240's
-        // lexical probe reads the shingle kernel too
-        "q240_contamination_report")),
-    ("co_pairs", "q14_part_pairs",
-      Seq("q14_part_pairs", "q85_pagerank", "q94_triangle_count",
-        "q95_item_similarity", "q111_degree_stats",
-        "q137_association_rules",
-        // round-10: the iterative graph family reads coEdges/coPairCounts
-        "q290_greedy_matching", "q291_butterfly_census",
-        "q294_katz_centrality", "q300_two_sweep_diameter",
-        // round-11 membership completion (full consumer audit of
-        // coPairCounts/coEdges)
-        "q127_kcore_decomposition", "q164_label_propagation",
-        "q222_bfs_distances", "q243_clustering_buckets",
-        "q251_sssp_weighted", "q252_modularity",
-        "q258_link_prediction", "q313_louvain_move",
-        "q314_wl_refinement", "q317_anf")))
+  private[graft] val cachePayers: Seq[String] = Seq(
+    "q35_ngram_jaccard_neardup", "q40_embedding_lsh_ann",
+    "q165_semantic_decontamination", "q14_part_pairs",
+    "m01_als_user_factors", "m05_gbt_eval")
 
   private def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._
@@ -196,7 +142,7 @@ object Bench {
     // Payer-first ordering pins the build cost on the designated
     // payer every run, so per-query numbers stay comparable across
     // rounds as members are added.
-    val payersFirst = sharedGroups.map(_._2).distinct.filter(names.map(_._1).toSet)
+    val payersFirst = cachePayers.filter(names.map(_._1).toSet)
     val runOrder = names.filter(n => payersFirst.contains(n._1))
       .sortBy(n => payersFirst.indexOf(n._1)) ++
       names.filterNot(n => payersFirst.contains(n._1))
@@ -214,11 +160,15 @@ object Bench {
     }
     // full untimed warm-up pass: every selected query runs once so JIT +
     // codegen compilation is paid before any timed rep (a failure here is
-    // logged but not recorded — the timed reps classify it)
+    // logged but not recorded — the timed reps classify it). It also
+    // records the shared-cache families each query reads.
+    val reads = scala.collection.mutable.Map.empty[String, Set[String]]
     runOrder.foreach { case (name, spec) =>
       val t0 = System.nanoTime()
-      try spec.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] warmup $name FAILED: $e") }
+      reads(name) = queries.KernelCache.recording {
+        try spec.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        catch { case e: Throwable => System.err.println(s"[bench] warmup $name FAILED: $e") }
+      }._2
       System.err.println(f"[bench] warmup $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     for (rep <- 1 to reps) {
@@ -279,19 +229,17 @@ object Bench {
     val swJson = perRep(swDeltas, (l: Long) => l.toString)
     val spJson = perRep(spDeltas, (l: Long) => l.toString)
     val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val shared = sharedGroups.map { case (g, _, ms) =>
+    // each family's readers in run order; caches are cleared before every
+    // rep, so the first reader is the query that paid the build — the
+    // canonical payer when it is in the suite (it runs first by
+    // construction), else the earliest reader (BENCH_ONLY subsets)
+    val readers = runOrder.flatMap { case (q, _) => reads(q).map(_ -> q) }
+      .groupMap(_._1)(_._2).toSeq.sortBy(_._1)
+    val shared = readers.map { case (g, ms) =>
       "\"" + g + "\":" + ms.map("\"" + _ + "\"").mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    // self-describing anchors: for each group, WHICH selected query
-    // actually paid the build this run — the canonical payer when it is
-    // in the suite (it runs first by construction), else the earliest
-    // member in run order (BENCH_ONLY subsets without the payer)
-    val inSuite = names.map(_._1).toSet
-    val runIdx = runOrder.map(_._1).zipWithIndex.toMap
-    val attribution = sharedGroups.flatMap { case (g, payer, ms) =>
-      (if (inSuite(payer)) Some(payer)
-       else ms.filter(inSuite).sortBy(runIdx).headOption)
-        .map(p => "\"" + g + "\":\"" + p + "\"")
+    val attribution = readers.map { case (g, ms) =>
+      "\"" + g + "\":\"" + ms.head + "\""
     }.mkString("{", ",", "}")
     // Two lines, diagnostics FIRST: the driver captures only a ~2000-char
     // tail of the output, so the LAST line must be a compact scalar summary

@@ -5,12 +5,12 @@ import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
 import org.apache.spark.ml.classification.GBTClassifier
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
 import org.apache.spark.ml.regression.IsotonicRegression
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.queries.QuerySpec
+import graft.queries.{KernelCache, QuerySpec}
 
 /** The reference's ML operator surface (SURVEY.md §2.10) re-expressed on
   * `spark.ml`:
@@ -54,12 +54,9 @@ object MlCatalog {
   }
 
   /** One ALS model per (session, fixture dir) — Verify runs several ALS
-    * queries back-to-back and must not retrain for each; keying on the
-    * session keeps the cache from serving a model whose SparkContext
-    * has been stopped.
+    * queries back-to-back and must not retrain for each.
     */
-  private val alsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), ALSModel]
+  private val alsCache = KernelCache[String, ALSModel]("als_model")
 
   /** ALS estimator with the REFERENCE's hyperparameters as the default
     * contract (batch_als_train.py:154-165: rank 50, maxIter 10,
@@ -76,13 +73,13 @@ object MlCatalog {
       .setSeed(42L)
 
   private def alsModel(s: SparkSession, dir: String): ALSModel =
-    alsCache.getOrElseUpdate((s, dir), {
+    alsCache(s, dir) {
       // fixture-scaled override: rank 50→16, maxIter 10→5 (the sf≤0.1
       // ratings table is far below the reference's interaction volume)
       val r = ratings(s, dir).cache()
       try alsEstimator(rank = 16, maxIter = 5).fit(r)
       finally r.unpersist() // fit is eager; only the model's factors live on
-    })
+    }
 
   /** Runs `body`, then unpersists every RDD it left persisted — both
     * explicit `.cache()`s and estimator-internal persists (ALS final
@@ -265,11 +262,15 @@ object MlCatalog {
       sum(col("pos").cast(org.apache.spark.sql.types.DecimalType(38, 0)) *
         (col("c") * 2 - col("g") + 1)).as("rank2"),
       sum(col("pos")).as("p"), sum(col("g")).as("n")).head()
-    val rank2 = r.getDecimal(0).doubleValue()
-    val p = r.getLong(1).toDouble
-    val n = r.getLong(2).toDouble
-    if (p == 0 || n - p == 0) Double.NaN
-    else (rank2 / 2.0 - p * (p + 1) / 2.0) / (p * (n - p))
+    // an empty frame sums to NULL everywhere, the rank sum included
+    if (r.isNullAt(2) || r.getLong(2) == 0) Double.NaN
+    else {
+      val rank2 = r.getDecimal(0).doubleValue()
+      val p = r.getLong(1).toDouble
+      val n = r.getLong(2).toDouble
+      if (p == 0 || n - p == 0) Double.NaN
+      else (rank2 / 2.0 - p * (p + 1) / 2.0) / (p * (n - p))
+    }
   }
 
   /** Scored validation frame (label, rawPrediction, p) behind m05's
@@ -281,13 +282,11 @@ object MlCatalog {
     * whole GBT a second time (measured 43 s vs 13 s in the full-catalog
     * bench).
     */
-  private val gbtScoredCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Boolean), org.apache.spark.sql.DataFrame]
+  private val gbtScoredCache = KernelCache[(String, Boolean), DataFrame]("gbt_model")
 
   private[graft] def gbtScored(s: SparkSession, dir: String,
-      categorical: Boolean): org.apache.spark.sql.DataFrame =
-    gbtScoredCache.getOrElseUpdate((s, dir, categorical),
-      gbtScoredBuild(s, dir, categorical))
+      categorical: Boolean): DataFrame =
+    gbtScoredCache(s, (dir, categorical))(gbtScoredBuild(s, dir, categorical))
 
   /** Featurized (train, valid) split shared by m05's model and m13's
     * learning curve — one place for the feature contract.
@@ -332,18 +331,21 @@ object MlCatalog {
       .setOutputCol("features")
     // Round-15 note (tried, measured, REVERTED): persisting the
     // featurized PRE-SPLIT frame here (to stop the 3-split scan chain
-    // re-executing ~6× per m05 — a profiled ~3.9 s) made the FITTED
-    // MODEL context-sensitive: the full-suite MlSpec run produced a
-    // different model than the isolated run (AUC 0.5284 → 0.5123) and
-    // the evaluator wobbled by 1 ulp between same-session calls —
-    // randomSplit's per-partition pre-sample sort is not a total
-    // order over (label, vector) ties, so row order through a
-    // CacheManager entry whose materialization state varies with
-    // suite context shifts split membership. The 1.04× bench delta
-    // was not worth a model that depends on cache state; the
-    // DF-level train cache below (whose materialization order is
-    // fixed by the fit that triggers it) stays the only cache, as
-    // shipped in round 14.
+    // re-executing ~6× per m05 — a profiled ~3.9 s) was read as making
+    // the FITTED MODEL context-sensitive. With the persist, an ISOLATED
+    // MlSpec run read sf0.001 AUC 0.5284 and the FULL-SUITE run 0.5123,
+    // and the evaluator wobbled by 1 ulp between same-session calls
+    // (suspected: randomSplit's per-partition pre-sample sort is not a
+    // total order over (label, vector) ties). This is not a second
+    // cause of docs/GBT_CONTRACT.md's history pair, whose two values
+    // are both UNCACHED: 0.528431 is the pre-round-14 3-split layout,
+    // then the MlSpec pin; 0.512286 is the 16-way layout, pinned since.
+    // Re-run isolated on local[4] after round 15, m05 read 0.512286
+    // both with and without the persist, so the isolated 0.5284 did
+    // not reproduce; it equals the then-stale pin to four digits. The
+    // wobble was the evaluator's own ([[exactAuc]] replaced it). The
+    // 1.04× bench delta still does not pay for the risk; the DF-level
+    // train cache below stays the only cache, as shipped in round 14.
     val Array(train, valid) = feats.transform(indexed)
       .select("label", "features").randomSplit(Array(0.8, 0.2), seed = 42L)
     (train, valid)
@@ -353,19 +355,18 @@ object MlCatalog {
     * importance must re-SCORE six perturbed validation frames with the
     * SAME model, which the scored-frame memo alone can't serve.
     */
-  private val gbtModelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Boolean),
-      org.apache.spark.ml.classification.GBTClassificationModel]
+  private val gbtModelCache = KernelCache[(String, Boolean),
+    org.apache.spark.ml.classification.GBTClassificationModel]("gbt_model")
 
   private[graft] def gbtModel(s: SparkSession, dir: String,
       categorical: Boolean)
       : org.apache.spark.ml.classification.GBTClassificationModel =
-    gbtModelCache.getOrElseUpdate((s, dir, categorical), {
+    gbtModelCache(s, (dir, categorical)) {
       val (train, _) = gbtData(s, dir, categorical)
       new GBTClassifier()
         .setMaxIter(10).setMaxDepth(4).setStepSize(0.05).setSeed(42L)
         .fit(train.cache())
-    })
+    }
 
   private def gbtScoredBuild(s: SparkSession, dir: String,
       categorical: Boolean): org.apache.spark.sql.DataFrame = {
@@ -846,7 +847,6 @@ object MlCatalog {
     */
   val m16PqAnn: QuerySpec = QuerySpec(
     fn = (s, dir) => {
-      import s.implicits._
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       val M = 8; val K = 16; val sub = 8
@@ -1475,11 +1475,4 @@ object MlCatalog {
     "m20_whitening_audit" -> m20WhiteningAudit,
     "q64_model_registry" -> q64ModelRegistry,
   )
-
-  /** Forget this session's trained ALS models (bench repetitions). */
-  def clearCaches(s: SparkSession): Unit = {
-    alsCache.keys.filter(_._1 eq s).foreach(alsCache.remove)
-    gbtScoredCache.keys.filter(_._1 eq s).foreach(gbtScoredCache.remove)
-    gbtModelCache.keys.filter(_._1 eq s).foreach(gbtModelCache.remove)
-  }
 }

@@ -289,14 +289,13 @@ object Catalog {
     * count aggregation ran identically inside each of those queries;
     * computing it once per (session, fixture) and persisting removes
     * the suite's largest duplicated stage. Bounded: one row per
-    * observed pair (~85k at sf0.01). Bench declares the sharing under
+    * observed pair (~85k at sf0.01). Bench reports its readers under
     * `shared_cache_groups.co_pairs`; [[clearCaches]] drops it.
     */
-  private val coPairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val coPairCache = KernelCache.frames("co_pairs")
 
   private def coPairCounts(s: SparkSession, dir: String): DataFrame =
-    coPairCache.getOrElseUpdate((s, dir), {
+    coPairCache(s, dir) {
       // Round 15 (guide §2.4 share one exchange): partition the
       // projection by the JOIN key before the dedup — HashPartitioning
       // on l_orderkey satisfies the distinct's clustering requirement
@@ -315,7 +314,7 @@ object Catalog {
         .groupBy(col("a.l_partkey").as("p1"), col("b.l_partkey").as("p2"))
         .agg(count(lit(1)).as("co"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Size-gated broadcast hint for the vertex-sized tables of the
     * iterative graph kernels (q85 ranks, q290 proposals/gone, q294
@@ -337,23 +336,25 @@ object Catalog {
     * bench/oracle plans keep the hinted shape deterministically.
     *
     * TWO TIERS so the gate is free where it cannot bind: a fixture
-    * whose total input bytes sit under SPARK_GRAFT_BCAST_INPUT_BYTES
-    * (default 8 GB — vertex tables of an 8 GB input are at most tens
-    * of MB) broadcasts on the metadata check alone; only past that
-    * does the precise row count run (the `rows` thunk is by-name and
-    * callers pass a lazy count, so the extra job exists only at the
-    * scale where it is noise — the first A/B showed the
-    * unconditional count costing 0.1-0.26 s on 1.5-3 s queries at
-    * sf0.1). An unwalkable path (object store at cluster scale)
-    * counts as NOT small, falling through to the precise gate —
-    * never the other way.
+    * whose total input bytes sit under [[VertexBcastInputBytes]] (8 GB
+    * — vertex tables of an 8 GB input are at most tens of MB)
+    * broadcasts on the metadata check alone; only past that does the
+    * precise row count run (the `rows` thunk is by-name and callers
+    * pass a lazy count, so the extra job exists only at the scale
+    * where it is noise — the first A/B showed the unconditional count
+    * costing 0.1-0.26 s on 1.5-3 s queries at sf0.1). An unwalkable
+    * path (object store at cluster scale) counts as NOT small, falling
+    * through to the precise gate — never the other way.
+    *
+    * An EXPLICITLY set SPARK_GRAFT_BCAST_MAX_ROWS skips the byte tier,
+    * and 0 never broadcasts: the variable is the kill switch for A/Bs,
+    * and at fixture scale the byte tier would otherwise always answer.
     */
-  private val vertexBcastMaxRows: Long =
-    sys.env.getOrElse("SPARK_GRAFT_BCAST_MAX_ROWS", "8000000").toLong
+  private val vertexBcastMaxRows: Option[Long] =
+    sys.env.get("SPARK_GRAFT_BCAST_MAX_ROWS").map(_.toLong)
 
-  private val vertexBcastInputBytes: Long =
-    sys.env.getOrElse("SPARK_GRAFT_BCAST_INPUT_BYTES",
-      (8L << 30).toString).toLong
+  private val VertexBcastInputBytes: Long = 8L << 30
+  private val VertexBcastDefaultMaxRows: Long = 8000000L
 
   private val fixtureBytesCache =
     scala.collection.concurrent.TrieMap.empty[String, Long]
@@ -367,10 +368,20 @@ object Catalog {
       if (root.exists) walk(root) else Long.MaxValue
     })
 
+  /** The [[bcastIfSmall]] decision. `maxRows` is the explicitly set
+    * row limit, if any; both thunks run only when the decision needs
+    * them.
+    */
+  private[graft] def vertexBcast(maxRows: Option[Long], inputBytes: => Long,
+      rows: => Long): Boolean = maxRows match {
+    case Some(max) => max > 0 && rows <= max
+    case None => inputBytes <= VertexBcastInputBytes ||
+      rows <= VertexBcastDefaultMaxRows
+  }
+
   private def bcastIfSmall(df: DataFrame, dir: String,
       rows: => Long): DataFrame =
-    if (fixtureBytes(dir) <= vertexBcastInputBytes ||
-      rows <= vertexBcastMaxRows) broadcast(df)
+    if (vertexBcast(vertexBcastMaxRows, fixtureBytes(dir), rows)) broadcast(df)
     else df
 
   /** J4 self-join co-occurrence (course pairs, train_module.py:397-405):
@@ -11711,18 +11722,7 @@ object Catalog {
     * would otherwise plan-match across bench reps and skip the read.
     */
   def clearCaches(s: org.apache.spark.sql.SparkSession): Unit = {
-    coPairCache.keys.filter(_._1 eq s).foreach { k =>
-      coPairCache.remove(k).foreach(_.unpersist(blocking = true))
-    }
-    PipelineCatalog.clearCaches(s)
-    graft.ml.MlCatalog.clearCaches(s)
+    KernelCache.clear(s)
     s.catalog.clearCache()
   }
-
-  /** Shared-cache-family introspection for BenchGroupsSpec — see
-    * [[PipelineCatalog.cacheFamiliesFor]].
-    */
-  private[graft] def cacheFamiliesFor(s: SparkSession): Set[String] =
-    PipelineCatalog.cacheFamiliesFor(s) ++
-      (if (coPairCache.keys.exists(_._1 eq s)) Set("co_pairs") else Set.empty)
 }

@@ -43,14 +43,10 @@ object PipelineCatalog {
     * row, parallelizes across the doc_id shuffle, and is the layout a
     * 100 TB dedup actually uses.
     */
-  // keyed by session too: a persisted DataFrame is bound to the
-  // SparkContext that built it — after spark.stop()+rebuild in the same
-  // JVM a dir-only key would hand back a corpse
-  private val shingleRowCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val shingleRowCache = KernelCache.frames("shingle_rows")
 
   private def shingleRows(s: SparkSession, dir: String): DataFrame =
-    shingleRowCache.getOrElseUpdate((s, dir), {
+    shingleRowCache(s, dir) {
       // The repartition is a deliberate Exchange barrier: it
       // materializes the token array once, so the shingle transform
       // reads `w` as an attribute (CollapseProject cannot cross an
@@ -69,7 +65,7 @@ object PipelineCatalog {
         // several dedup queries fan out over this table 2-3 times each;
         // persist once per fixture dir (bounded: ~260k rows at sf0.1)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** (doc_id, shingle, tid): codegen polyhash, once per shingle row. */
   private def shingleTids(s: SparkSession, dir: String): DataFrame =
@@ -93,14 +89,13 @@ object PipelineCatalog {
     * times per construction — the single most duplicated stage left in
     * the dedup family after the round-2 shingle cache. Bounded: one
     * row per doc. Registered under the `shingle_rows` bench family
-    * (every consumer is already a member); [[clearCaches]] drops it
+    * (every consumer is already a member); [[Catalog.clearCaches]] drops it
     * between bench reps so each rep pays the build exactly once.
     */
-  private val minhashSigCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val minhashSigCache = KernelCache.frames("shingle_rows")
 
   private def minhashSigs(s: SparkSession, dir: String): DataFrame =
-    minhashSigCache.getOrElseUpdate((s, dir),
+    minhashSigCache(s, dir)(
       shingleTids(s, dir).groupBy(col("doc_id"))
         .agg(
           min(expr(s"(1*tid + 0) % $P")).as("mh0"),
@@ -118,11 +113,10 @@ object PipelineCatalog {
     * replaces all five (guide §2.4); bounded by Σ bucket² — the same
     * LSH-candidate volume every consumer already materialized.
     */
-  private val bandCandCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val bandCandCache = KernelCache.frames("shingle_rows")
 
   private def lshBandCandidates(s: SparkSession, dir: String): DataFrame =
-    bandCandCache.getOrElseUpdate((s, dir), {
+    bandCandCache(s, dir) {
       val bands = minhashSigs(s, dir).select(col("doc_id"),
         posexplode(array((0 to 3).map(b =>
           concat_ws("-", col(s"mh${4 * b}"), col(s"mh${4 * b + 1}"),
@@ -135,7 +129,7 @@ object PipelineCatalog {
         .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
         .distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** 16-bit SimHash per doc: 16 sum aggregates (±1 parity votes) in one
     * groupBy pass, combined arithmetically.
@@ -291,23 +285,21 @@ object PipelineCatalog {
   // q35 emits it and q50's near-dup removal stage consumes it — without
   // the cache q50 re-ran the whole prefix-filter/candidate/verify join
   // tree (the round-2 bench paid ~22 s for q50 on top of q35's 27 s)
-  private val nearDupPairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val nearDupPairCache = KernelCache.frames("verified_pairs")
 
   // Rarity-ordered PPJoin prefix rows, shared by every prefix-filter
   // consumer (q35's self-join AND q65's asymmetric batch-vs-corpus
   // probe — without the cache each of q65's two filter branches
   // re-ran the whole double-window chain). Bounded: a subset of the
   // already-persisted shingle rows.
-  private val prefixRowCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val prefixRowCache = KernelCache.frames("shingle_rows")
 
   /** (doc_id, shingle) restricted to each doc's rarity-ordered PPJoin
     * prefix for t=0.8. A pair with jaccard ≥ t MUST collide inside both
     * prefixes (pigeonhole), so joins over these rows lose no candidate.
     */
   private def prefixRows(s: SparkSession, dir: String): DataFrame =
-    prefixRowCache.getOrElseUpdate((s, dir), {
+    prefixRowCache(s, dir) {
       val inv = shingleRows(s, dir)
       // df as a count-over-window on the SAME shingle exchange the rows
       // need anyway — one shuffle of the index instead of the
@@ -330,10 +322,10 @@ object PipelineCatalog {
         .filter(col("df") > 1)
         .select(col("doc_id"), col("shingle"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   private def ngramNearDupPairs(s: SparkSession, dir: String): DataFrame =
-    nearDupPairCache.getOrElseUpdate((s, dir), {
+    nearDupPairCache(s, dir) {
       val pref = prefixRows(s, dir)
       val cand = pref.as("a").join(pref.as("b"),
           col("a.shingle") === col("b.shingle") &&
@@ -343,7 +335,7 @@ object PipelineCatalog {
       verifyJaccard(s, dir, cand, 0.8)
         .orderBy(col("d1"), col("d2"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   val q35NgramJaccardNearDup: QuerySpec = QuerySpec(
     fn = (s, dir) => ngramNearDupPairs(s, dir),
@@ -719,11 +711,10 @@ object PipelineCatalog {
     * 100 TB raise k to shrink buckets, raise L for recall, AQE
     * skew-split hot buckets.
     */
-  private val lshScoredCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val lshScoredCache = KernelCache.frames("lsh_candidates")
 
   private def lshScoredPairs(s: SparkSession, dir: String): DataFrame =
-    lshScoredCache.getOrElseUpdate((s, dir), {
+    lshScoredCache(s, dir) {
       // plane coefficients precomputed on the driver with the EXACT
       // arithmetic the oracle replays (two LCG rounds mod P, then
       // v/P - 0.5 in doubles); projected via the codegen mixed-
@@ -758,7 +749,7 @@ object PipelineCatalog {
             (col("na") * col("nb")), 6))
         .select(col("a_id"), col("b_id"), col("cosine"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   val q40EmbeddingLshAnn: QuerySpec = QuerySpec(
     fn = (s, dir) => {
@@ -925,10 +916,9 @@ object PipelineCatalog {
     * and raising L (more tables) is the recall knob that leaves the
     * per-bucket bound untouched.
     */
-  private val annBucketCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, Int)]
-  private val annCandCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val annBucketCache = KernelCache[String, (DataFrame, Int)]("ann_buckets",
+    _._1.unpersist(blocking = true))
+  private val annCandCache = KernelCache.frames("ann_buckets")
 
   /** The shared bucket table (vec_id, tbl, bucket) plus the adaptive
     * bit width k — built once per (session, fixture) and consumed by
@@ -957,14 +947,14 @@ object PipelineCatalog {
   }
 
   private def annBuckets(s: SparkSession, dir: String): (DataFrame, Int) =
-    annBucketCache.getOrElseUpdate((s, dir), {
+    annBucketCache(s, dir) {
       val e0 = withNorm(Tables.embeddings(s, dir))
       val n = e0.count()
       val k = (4 to 16).find(kk => (1L << kk) * 32L >= n).getOrElse(16)
       val tb = annBucketTable(e0, k)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (tb, k)
-    })
+    }
 
   /** Generic all-pairs form of the adaptive multi-probe cut over ANY
     * (vec_id, embedding) frame — m20's whitening audit runs its two
@@ -1003,11 +993,11 @@ object PipelineCatalog {
       .distinct()
 
   private def annCandidates(s: SparkSession, dir: String): DataFrame =
-    annCandCache.getOrElseUpdate((s, dir), {
+    annCandCache(s, dir) {
       val (tb, k) = annBuckets(s, dir)
       annCandidatesFrom(tb, tb, k)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** DuckDB replica of [[annCandidates]]: WITH-clause body emitting
     * `cand(a_id, b_id)` (directed). Arithmetic-only — the same LCG
@@ -7358,63 +7348,4 @@ object PipelineCatalog {
     "q311_perceptual_hash_dedup" -> q311PerceptualHashDedup,
     "q268_readability_stats" -> q268ReadabilityStats,
   )
-
-  /** One registered session-keyed kernel cache: its Bench shared-cache
-    * family plus how to unpersist an evicted value.
-    */
-  private final case class KernelCache[V](
-      family: String,
-      map: scala.collection.concurrent.TrieMap[(SparkSession, String), V],
-      unpersist: V => Unit) {
-    def clear(s: SparkSession): Unit =
-      map.keys.filter(_._1 eq s).foreach(k => map.remove(k).foreach(unpersist))
-    def heldBy(s: SparkSession): Boolean = map.keys.exists(_._1 eq s)
-  }
-
-  /** SINGLE-SOURCE registry: BOTH clearCaches and cacheFamiliesFor
-    * consume this list, so a future kernel cache registered here is
-    * automatically cleared between bench reps AND visible to
-    * BenchGroupsSpec's derived-membership audit — the two consumers
-    * cannot diverge. (Round-12 self-review: the family derivation was
-    * previously a second hand-maintained list beside clearCaches —
-    * recreating the q149 drift class one level up; a cache added to
-    * one and forgotten in the other would silently escape the audit.)
-    */
-  private val kernelCaches: Seq[KernelCache[_]] = Seq(
-    KernelCache[DataFrame]("shingle_rows", shingleRowCache,
-      _.unpersist(blocking = true)),
-    KernelCache[DataFrame]("shingle_rows", prefixRowCache,
-      _.unpersist(blocking = true)),
-    KernelCache[DataFrame]("shingle_rows", minhashSigCache,
-      _.unpersist(blocking = true)),
-    KernelCache[DataFrame]("shingle_rows", bandCandCache,
-      _.unpersist(blocking = true)),
-    KernelCache[DataFrame]("verified_pairs", nearDupPairCache,
-      _.unpersist(blocking = true)),
-    KernelCache[DataFrame]("lsh_candidates", lshScoredCache,
-      _.unpersist(blocking = true)),
-    KernelCache[(DataFrame, Int)]("ann_buckets", annBucketCache,
-      _._1.unpersist(blocking = true)),
-    KernelCache[DataFrame]("ann_buckets", annCandCache,
-      _.unpersist(blocking = true)),
-  )
-
-  /** Drop this session's persisted shared intermediates (shingle rows,
-    * verified near-dup pairs, LSH-scored pairs). Bench repetitions call
-    * this between reps so every rep pays the full pipeline cost —
-    * otherwise rep 2+ of q35/q40/q50/q57 would time a cache hit.
-    */
-  def clearCaches(s: SparkSession): Unit =
-    kernelCaches.foreach(_.clear(s))
-
-  /** Which Bench shared-cache families this session currently holds
-    * entries for — the introspection behind BenchGroupsSpec, which
-    * DERIVES group membership (construct a query with cleared caches,
-    * snapshot what appeared) instead of trusting the hand-maintained
-    * member lists (the round-9 q149 envelope drift was exactly a
-    * membership gap). Cache maps fill at CONSTRUCTION time
-    * (getOrElseUpdate in the kernel helpers), so no execution is needed.
-    */
-  private[graft] def cacheFamiliesFor(s: SparkSession): Set[String] =
-    kernelCaches.filter(_.heldBy(s)).map(_.family).toSet
 }

@@ -1,52 +1,47 @@
 package graft
 
-/** Bench's shared-cache attribution is only as good as its
-  * hand-maintained member lists: the round-9 q149 envelope drift
-  * (0.95x → 1.49x) was a query that read the shingle kernel but was
-  * missing from the group, so whenever it sorted before the payer it
-  * silently paid a build the envelope attributed elsewhere. This spec
-  * DERIVES membership instead of trusting it: every catalog entry is
-  * constructed with cleared caches, the cache maps are snapshotted
-  * (kernels register at construction time via getOrElseUpdate — no
-  * execution needed), and the derived consumer set must equal
-  * Bench.sharedGroups exactly, both directions, for every group.
+import queries.{Catalog, KernelCache}
+
+/** Bench derives its shared-cache groups from the families each query's
+  * cache gets record in the warm-up pass; only the payer order
+  * ([[Bench.cachePayers]]) is kept by hand. A reader missing from its
+  * group was the round-9 q149 drift (it sorted before the payer and
+  * silently paid a build the envelope attributed elsewhere), so the
+  * record is checked against an independent derivation: construct every
+  * entry ALONE on cleared caches and snapshot which families appeared
+  * (kernels fill at construction time — no execution needed).
   */
 class BenchGroupsSpec extends SparkSpec {
 
-  test("sharedGroups member lists equal the derived cache consumers") {
-    val derived = scala.collection.mutable.Map.empty[String, Set[String]]
-      .withDefaultValue(Set.empty)
-    queries.Catalog.all.toSeq.sortBy(_._1).foreach { case (name, spec) =>
-      queries.Catalog.clearCaches(spark)
-      // construction alone registers kernel caches; execution not needed.
-      // Construction failures are CatalogSmokeSpec's job.
-      scala.util.Try(spec.fn(spark, sf0001))
-      queries.Catalog.cacheFamiliesFor(spark).foreach { fam =>
-        derived(fam) = derived(fam) + name
-      }
+  /** family -> readers, running `families` once per catalog entry in
+    * name order (construction failures are CatalogSmokeSpec's job).
+    */
+  private def readers(families: (() => Any) => Set[String]): Map[String, Set[String]] = {
+    val byQuery = Catalog.all.toSeq.sortBy(_._1).map { case (name, spec) =>
+      name -> families(() => scala.util.Try(spec.fn(spark, sf0001)))
     }
-    queries.Catalog.clearCaches(spark)
+    Catalog.clearCaches(spark)
+    byQuery.flatMap { case (q, fs) => fs.map(_ -> q) }
+      .groupMap(_._1)(_._2).map { case (f, qs) => f -> qs.toSet }
+  }
 
-    val declared = Bench.sharedGroups.map { case (g, _, ms) => g -> ms.toSet }
-    // every declared group must exist and match the derivation exactly
-    declared.foreach { case (group, members) =>
-      val got = derived(group)
-      val missing = got -- members   // consumes the kernel, not declared
-      val stale = members -- got     // declared, no longer consumes
-      assert(missing.isEmpty,
-        s"group '$group': consumers missing from Bench.sharedGroups " +
-          s"(the q149 drift class): ${missing.toSeq.sorted.mkString(", ")}")
-      assert(stale.isEmpty,
-        s"group '$group': declared members that no longer read the " +
-          s"kernel: ${stale.toSeq.sorted.mkString(", ")}")
-    }
-    // and no cache family may exist without a declared group
-    val undeclared = derived.keySet -- declared.map(_._1).toSet
-    assert(undeclared.isEmpty,
-      s"cache families with no Bench.sharedGroups entry: $undeclared")
-    // payers must be members of their own group (run-order contract)
-    Bench.sharedGroups.foreach { case (g, payer, ms) =>
-      assert(ms.contains(payer), s"group '$g': payer $payer not a member")
-    }
+  private lazy val derived = readers { construct =>
+    Catalog.clearCaches(spark); construct(); KernelCache.familiesFor(spark)
+  }
+
+  test("touch-recorded cache families equal the clear-and-construct derivation") {
+    Catalog.clearCaches(spark)
+    val recorded = readers(construct => KernelCache.recording(construct())._2)
+    assert(Set("als_model", "gbt_model").subsetOf(derived.keySet))
+    assert(recorded == derived)
+  }
+
+  test("every cache family has a canonical payer that registers it on cleared caches") {
+    // `derived` constructed each entry alone on cleared caches, so a
+    // payer among a family's readers registers the family by itself
+    val paidBy = derived.map { case (fam, qs) => fam -> Bench.cachePayers.find(qs) }
+    assert(paidBy.forall(_._2.nonEmpty), s"families without a payer: $paidBy")
+    assert(Bench.cachePayers.toSet == paidBy.values.flatten.toSet,
+      s"Bench.cachePayers entries that pay for no family: $paidBy")
   }
 }

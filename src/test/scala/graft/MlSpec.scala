@@ -194,4 +194,11 @@ class MlSpec extends SparkSpec {
     val leaked = sc.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"leaked persisted RDD ids: $leaked")
   }
+
+  test("exactAuc is NaN on an empty scored frame") {
+    import spark.implicits._
+    val empty = Seq.empty[(Double, org.apache.spark.ml.linalg.Vector)]
+      .toDF("label", "rawPrediction")
+    assert(MlCatalog.exactAuc(empty).isNaN)
+  }
 }
