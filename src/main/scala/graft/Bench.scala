@@ -1,13 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times the headline queries (BENCH_ALL=1 for the
   * whole catalog) on SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
-  * Each query is materialized through the noop sink — `count()` would
-  * let Catalyst prune every column the count doesn't need and
-  * undermeasure projection-heavy queries.
+  * Each query is materialized through the noop sink ([[Harness.timed]]).
   *
   * De-noising: one FULL untimed warm-up pass runs the whole selected
   * suite first (HotSpot JIT + codegen compilation land there, not in
@@ -50,6 +46,13 @@ import org.apache.spark.sql.SparkSession
   * pressure vs codegen-cache thrash vs a genuine plan change without
   * rerunning under a profiler (round-5 verdict: medians alone made the
   * q63/q74/q83 transient-spike class undiagnosable).
+  *
+  * Per-job view: `jobs` carries each query's Spark job count per rep,
+  * and the final rep lists on stderr every job of at least 20 ms (id,
+  * ms, task count, description). `BENCH_ONLY=<q> BENCH_REPS=1` is a
+  * shared-cache payer's regime (warm-up, caches cleared, one timed
+  * run); `BENCH_ONLY=<payer>,<q>` is a member's (the payer runs first
+  * and leaves the cache warm).
   */
 object Bench {
 
@@ -67,6 +70,13 @@ object Bench {
     "q165_semantic_decontamination", "q14_part_pairs",
     "m01_als_user_factors", "m05_gbt_eval")
 
+  /** One successful timed run of a query: wall seconds, then the GC
+    * ms, codegen compilations, shuffle-write MB, spill MB and Spark jobs
+    * it added.
+    */
+  private final case class Rep(secs: Double, gcMs: Long, codegen: Long,
+      shuffleWriteMb: Long, spillMb: Long, jobs: Int)
+
   private def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -77,27 +87,6 @@ object Bench {
   private def codegenCompiles(): Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
-  /** Cumulative shuffle-write / spill bytes across all completed stages
-    * — the per-query deltas are the bench's plan-cost attribution (a
-    * query whose time grows with data but whose shuffle bytes don't is
-    * compute-bound; one shuffling more than its input re-partitions
-    * too much; any nonzero spill at sf0.1 flags an executor-memory
-    * cliff long before 100 TB would). Listener events are async, so
-    * snapshots drain the bus first ([[org.apache.spark.graft.SparkShims]]).
-    */
-  private final class StageMetricsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    val spill = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = e.stageInfo.taskMetrics
-      if (m != null) {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spill.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
-      }
-    }
-  }
   /** 1/5/15-min load averages, or empty off-Linux — recorded at suite
     * start and end in the diagnostics line. Round-13 lesson: an
     * orphaned hung test JVM (~1.4 cores for 8 h) inflated two rounds
@@ -116,15 +105,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadStart = loadavg()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus("4"))
     val selected = sys.env.get("BENCH_ONLY") match {
       case Some(names) =>
         val keep = names.split(",").map(_.trim).toSet
@@ -146,30 +128,21 @@ object Bench {
     val runOrder = names.filter(n => payersFirst.contains(n._1))
       .sortBy(n => payersFirst.indexOf(n._1)) ++
       names.filterNot(n => payersFirst.contains(n._1))
-    val times = scala.collection.mutable.Map.empty[String, Vector[Double]]
-    val gcDeltas = scala.collection.mutable.Map.empty[String, Vector[Long]]
-    val cgDeltas = scala.collection.mutable.Map.empty[String, Vector[Long]]
-    val swDeltas = scala.collection.mutable.Map.empty[String, Vector[Long]]
-    val spDeltas = scala.collection.mutable.Map.empty[String, Vector[Long]]
+    val runs = scala.collection.mutable.Map.empty[String, Vector[Rep]]
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    val stageMetrics = new StageMetricsListener
-    spark.sparkContext.addSparkListener(stageMetrics)
-    def drainedShuffleSpill(): (Long, Long) = {
-      org.apache.spark.graft.SparkShims.drainListenerBus(spark.sparkContext)
-      (stageMetrics.shuffleWrite.get(), stageMetrics.spill.get())
-    }
+    val metrics = Harness.metrics(spark)
     // full untimed warm-up pass: every selected query runs once so JIT +
     // codegen compilation is paid before any timed rep (a failure here is
     // logged but not recorded — the timed reps classify it). It also
     // records the shared-cache families each query reads.
     val reads = scala.collection.mutable.Map.empty[String, Set[String]]
     runOrder.foreach { case (name, spec) =>
-      val t0 = System.nanoTime()
-      reads(name) = queries.KernelCache.recording {
-        try spec.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] warmup $name FAILED: $e") }
-      }._2
-      System.err.println(f"[bench] warmup $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
+      val (run, read) = queries.KernelCache.recording(Harness.timed(spec.fn(spark, sfDir)))
+      reads(name) = read
+      run match {
+        case Right(dt) => System.err.println(f"[bench] warmup $name $dt%.2fs")
+        case Left(e) => System.err.println(s"[bench] warmup $name FAILED: $e")
+      }
     }
     for (rep <- 1 to reps) {
       queries.Catalog.clearCaches(spark)
@@ -177,57 +150,55 @@ object Bench {
       // from the previous pass are actually freed before timing resumes
       System.gc()
       runOrder.foreach { case (name, spec) =>
-        val (sw0, sp0) = drainedShuffleSpill()
+        val s0 = metrics.take(spark.sparkContext)
         val gc0 = gcMillis(); val cg0 = codegenCompiles()
-        val t0 = System.nanoTime()
-        val ok =
-          try { spec.fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable => System.err.println(s"[bench] $name FAILED: $e"); false }
-        val dt = (System.nanoTime() - t0) / 1e9
+        val run = Harness.timed(spec.fn(spark, sfDir))
         val gcd = gcMillis() - gc0; val cgd = codegenCompiles() - cg0
-        val (sw1, sp1) = drainedShuffleSpill()
-        if (ok) {
-          times(name) = times.getOrElse(name, Vector()) :+ dt
-          gcDeltas(name) = gcDeltas.getOrElse(name, Vector()) :+ gcd
-          cgDeltas(name) = cgDeltas.getOrElse(name, Vector()) :+ cgd
-          swDeltas(name) = swDeltas.getOrElse(name, Vector()) :+ ((sw1 - sw0) >> 20)
-          spDeltas(name) = spDeltas.getOrElse(name, Vector()) :+ ((sp1 - sp0) >> 20)
-        } else failed += name
+        val s1 = metrics.take(spark.sparkContext)
+        val sw = (s1.shuffleWriteBytes - s0.shuffleWriteBytes) >> 20
+        val sp = (s1.spillBytes - s0.spillBytes) >> 20
+        run match {
+          case Right(dt) =>
+            runs(name) = runs.getOrElse(name, Vector()) :+ Rep(dt, gcd, cgd, sw, sp, s1.jobs.size)
+          case Left(e) =>
+            System.err.println(s"[bench] $name FAILED: $e")
+            failed += name
+        }
         System.err.println(
-          f"[bench] rep $rep $name $dt%.2fs gc=${gcd}ms cg=$cgd " +
-            f"shufW=${(sw1 - sw0) >> 20}MB spill=${(sp1 - sp0) >> 20}MB" +
-            (if (ok) "" else " (failed)"))
+          s"[bench] rep $rep $name ${run.fold(_ => "(failed)", d => f"$d%.2fs")} " +
+            s"gc=${gcd}ms cg=$cgd shufW=${sw}MB spill=${sp}MB jobs=${s1.jobs.size}")
+        // the per-job view of the final rep: which jobs carry the time,
+        // and at what task count
+        if (rep == reps) s1.jobs.filter(_.ms >= 20).foreach { j =>
+          System.err.println(
+            f"[bench]   job ${j.id}%4d ${j.ms}%6d ms tasks=${j.tasks}%4d ${j.description.take(90)}")
+        }
       }
     }
-    def best(v: Vector[Double]): Double = v.min
-    // JSON-bound doubles must be locale-fixed (ADVICE r13): the f
-    // interpolator honors the default locale, so a comma-decimal locale
-    // would emit `0,27` and corrupt the machine-parsed lines.
-    def num(d: Double, prec: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${prec}f", Double.box(d))
+    def best(v: Vector[Rep]): Double = v.map(_.secs).min
+    import Harness.num
     // a query that failed in ANY rep is null — a partial min next to
     // an errors entry would read as both failed and timed
-    def goodTimes(k: String): Option[Vector[Double]] =
-      if (failed(k)) None else times.get(k).filter(_.nonEmpty)
+    def goodRuns(k: String): Option[Vector[Rep]] =
+      if (failed(k)) None else runs.get(k).filter(_.nonEmpty)
     val qs = names.map { case (k, _) =>
-      goodTimes(k) match {
+      goodRuns(k) match {
         case Some(v) => "\"" + k + "\":" + num(best(v), 3)
         case None => "\"" + k + "\":null"
       }
     }.mkString("{", ",", "}")
-    val total = names.flatMap { case (k, _) => goodTimes(k).map(best) }.sum
+    val total = names.flatMap { case (k, _) => goodRuns(k).map(best) }.sum
     // per-rep diagnostics, keyed like `queries` (successful reps only)
-    def perRep[A](m: collection.Map[String, Vector[A]], fmt: A => String): String =
+    def perRep(field: Rep => Any): String =
       names.flatMap { case (k, _) =>
-        if (failed(k)) None
-        else m.get(k).filter(_.nonEmpty).map(v =>
-          "\"" + k + "\":" + v.map(fmt).mkString("[", ",", "]"))
+        goodRuns(k).map(v => "\"" + k + "\":" + v.map(field).mkString("[", ",", "]"))
       }.mkString("{", ",", "}")
-    val repTimes = perRep(times, (d: Double) => num(d, 3))
-    val gcJson = perRep(gcDeltas, (l: Long) => l.toString)
-    val cgJson = perRep(cgDeltas, (l: Long) => l.toString)
-    val swJson = perRep(swDeltas, (l: Long) => l.toString)
-    val spJson = perRep(spDeltas, (l: Long) => l.toString)
+    val repTimes = perRep(r => num(r.secs, 3))
+    val gcJson = perRep(_.gcMs)
+    val cgJson = perRep(_.codegen)
+    val swJson = perRep(_.shuffleWriteMb)
+    val spJson = perRep(_.spillMb)
+    val jobsJson = perRep(_.jobs)
     val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // each family's readers in run order; caches are cleared before every
     // rep, so the first reader is the query that paid the build — the
@@ -249,7 +220,7 @@ object Bench {
     // "diagnostics" line for humans and tools/check_bench.py.
     def loadJson(v: Seq[Double]): String =
       v.map(d => num(d, 2)).mkString("[", ",", "]")
-    println(f"""{"diagnostics":true,"rep_times":$repTimes,"gc_ms":$gcJson,"codegen_compiles":$cgJson,"shuffle_write_mb":$swJson,"spill_mb":$spJson,"shared_cache_groups":$shared,"cache_build_paid_by":$attribution,"warmup":true,"heap_gb":${Runtime.getRuntime.maxMemory / (1 << 30)},"loadavg_start":${loadJson(loadStart)},"loadavg_end":${loadJson(loadavg())}}""")
+    println(f"""{"diagnostics":true,"rep_times":$repTimes,"gc_ms":$gcJson,"codegen_compiles":$cgJson,"shuffle_write_mb":$swJson,"spill_mb":$spJson,"jobs":$jobsJson,"shared_cache_groups":$shared,"cache_build_paid_by":$attribution,"warmup":true,"heap_gb":${Runtime.getRuntime.maxMemory / (1 << 30)},"loadavg_start":${loadJson(loadStart)},"loadavg_end":${loadJson(loadavg())}}""")
     val summary = s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":$qs,"stat":"min","reps":$reps,"errors":$errs,"sf":"$sfDir"}"""
     // BENCH_ALL's ~150-query map would overflow the tail window too —
     // drop the per-query detail (it survives via rep_times above) before

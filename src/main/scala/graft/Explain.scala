@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
 
 /** Plan-audit main: dumps the formatted physical plan of every catalog
   * query to `outDir/<name>.txt` plus a one-line-per-query smell report
@@ -169,55 +172,44 @@ object Explain {
       .exists(s => !exempt.exists(_ eq s))
   }
 
+  /** Runs `body` and returns the query executions it completed — the
+    * eager-barrier coverage every plan audit needs: a
+    * `localCheckpoint(true)` subtree executes at CONSTRUCTION time and
+    * is replaced by a leaf, so its plan never reaches the final
+    * optimizedPlan. The listener bus is drained before and after, so
+    * executions still in flight from earlier work (a failed previous
+    * query's barriers) are not attributed to `body`.
+    */
+  def eagerExecutions[A](spark: SparkSession)(body: => A): (A, Vector[QueryExecution]) = {
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        captured.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    org.apache.spark.graft.SparkShims.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val result = body
+      org.apache.spark.graft.SparkShims.drainListenerBus(spark.sparkContext)
+      (result, captured.asScala.toVector)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_plans"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // Audit-mode planning, matching PlanBudgetSpec: no AQE wrapper
-      // (executedPlan stays statically walkable) and no stat-based
-      // broadcast (counts reflect the HINTED shape — the one a 100 TB
-      // input gets, where nothing fits the threshold by accident).
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // audit-mode planning, matching PlanBudgetSpec; fixed at 4 cores so
+    // the fingerprints do not depend on SPARK_GRAFT_CPUS
+    val spark = Harness.session("4", confs = Harness.auditConfs, logLevel = "ERROR")
     Files.createDirectories(Paths.get(outDir))
-    // Eager-barrier coverage, matching ExplainSpec's lint: a
-    // localCheckpoint(true) subtree executes at CONSTRUCTION time and
-    // is replaced by a leaf, so its plan never reaches the final
-    // optimizedPlan — capture every construction-time execution and
-    // lint those too (before round 12 the standalone audit was blind
-    // where the spec was not).
-    val captured = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.QueryExecution]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        scala.util.Try(captured.add(qe))
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
     queries.Catalog.all.toSeq.sortBy(_._1).foreach { case (name, spec) =>
       try {
-        // drain BEFORE clearing: a failed previous query may have eager
-        // plans still in flight on the async bus — delivered after the
-        // clear they would attribute to THIS entry's smell report
-        org.apache.spark.graft.SparkShims.drainListenerBus(spark.sparkContext)
-        captured.clear()
-        val df = spec.fn(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        Files.writeString(Paths.get(s"$outDir/$name.txt"), plan)
-        org.apache.spark.graft.SparkShims.drainListenerBus(spark.sparkContext)
-        val eagerQs = {
-          import scala.jdk.CollectionConverters._
-          captured.iterator().asScala.toVector
+        val (df, eagerQs) = eagerExecutions(spark) {
+          val df = spec.fn(spark, sfDir)
+          Files.writeString(Paths.get(s"$outDir/$name.txt"), df.queryExecution
+            .explainString(org.apache.spark.sql.execution.FormattedMode))
+          df
         }
         val plans = df.queryExecution.optimizedPlan +: eagerQs.map(_.optimizedPlan)
         // scalar-broadcast BNLJ (crossJoin(broadcast(1-row agg))) is an
@@ -247,7 +239,6 @@ object Explain {
           println(s"[plan] $name ERROR ${String.valueOf(e.getMessage).take(80)}")
       }
     }
-    spark.listenerManager.unregister(listener)
     spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Nondeterministic, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -64,15 +64,10 @@ object RetryProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus, 3]") // 3 task attempts — the probe's point
-      .appName("graft-retry-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Harness.cpus("8")
+    val spark = Harness.session(cpus,
+      master = Some(s"local[$cpus, 3]"), // 3 task attempts — the probe's point
+      confs = Seq("spark.app.name" -> "graft-retry-probe"), logLevel = "ERROR")
 
     val observedFailures = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(

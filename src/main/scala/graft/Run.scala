@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Named-query CLI — the analytics surface (SURVEY.md §7.1 item 8,
   * replacing the reference's Streamlit data layer):
   *
@@ -19,13 +17,7 @@ object Run {
     val n = if (args.length > 2) args(2).toInt else 20
     val spec = queries.Catalog.all.getOrElse(name,
       sys.error(s"unknown query '$name'; known: ${queries.Catalog.all.keys.toSeq.sorted.mkString(", ")}"))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus("4"))
     plans.GraftExtensions.register(spark)
     val df = spec.fn(spark, sfDir)
     if (sys.env.get("GRAFT_EXPLAIN").contains("1")) df.explain("formatted")

@@ -309,14 +309,7 @@ object ScaleSweep {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_scale10"
     val mult = sys.env.getOrElse("SCALE_MULT", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus("32"))
 
     if (!new java.io.File(s"$outDir/documents.parquet").exists()) {
       System.err.println(s"[sweep] building ${mult}x fixtures under $outDir")
@@ -339,21 +332,18 @@ object ScaleSweep {
       queries.Catalog.clearCaches(spark)
       System.gc()
       names.filter(n => onlyQ.forall(_.contains(n))).foreach { name =>
-        val t0 = System.nanoTime()
-        try {
-          queries.Catalog.all(name).fn(spark, outDir)
-            .write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
-          times(name) = dt
-          System.err.println(f"[sweep] $family/$name $dt%.2fs")
-        } catch {
-          case e: Throwable =>
+        Harness.timed(queries.Catalog.all(name).fn(spark, outDir)) match {
+          case Right(dt) =>
+            times(name) = dt
+            System.err.println(f"[sweep] $family/$name $dt%.2fs")
+          case Left(e) =>
             errors += name
             System.err.println(s"[sweep] $family/$name FAILED: $e")
         }
       }
     }
-    val qs = times.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
+    val qs = times.map { case (k, v) => "\"" + k + "\":" + Harness.num(v, 3) }
+      .mkString("{", ",", "}")
     val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
     println(s"""{"metric":"scale_sweep","mult":$mult,"queries":$qs,"errors":$errs,"src":"$srcDir","dir":"$outDir"}""")
     spark.stop()

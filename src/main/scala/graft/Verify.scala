@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -21,7 +20,6 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spillMode = sys.env.get("SPARK_GRAFT_SPILL").contains("1")
     // SPARK_GRAFT_OFFHEAP=1 re-runs the dump with Tungsten allocation
     // flipped OFF-HEAP (spark.memory.offHeap.*) — the config most large
@@ -33,11 +31,6 @@ object Verify {
     // off-heap-parity gate; tools/compare_dumps.py against a default
     // dump = the bitwise A/B form (round 14).
     val offHeapMode = sys.env.get("SPARK_GRAFT_OFFHEAP").contains("1")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // 256 Ki rows/file with read-ahead OFF, not "as small as possible":
     // every open spill reader allocates a 1 MB heap buffer (2 MB with
     // read-ahead) and the merge phase opens ALL of a sort's files at
@@ -65,7 +58,7 @@ object Verify {
     // fallback second value.
     val aggFallback =
       sys.env.getOrElse("SPARK_GRAFT_SPILL_AGG_FALLBACK", "64, 128")
-    if (spillMode) Seq(
+    val spillConfs = if (!spillMode) Nil else Seq(
       "spark.shuffle.spill.numElementsForceSpillThreshold" -> spillThreshold,
       "spark.unsafe.sorter.spill.read.ahead.enabled" -> "false",
       // per-buffer thresholds sized like SpillSweep's (4096 rows/file,
@@ -80,19 +73,15 @@ object Verify {
       "spark.sql.cartesianProductExec.buffer.in.memory.threshold" -> "64",
       "spark.sql.cartesianProductExec.buffer.spill.threshold" -> "4096",
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "16",
-      "spark.sql.TungstenAggregate.testFallbackStartsAt" -> aggFallback,
-    ).foreach { case (k, v) => builder.config(k, v) }
-    if (offHeapMode) {
-      builder.config("spark.memory.offHeap.enabled", "true")
+      "spark.sql.TungstenAggregate.testFallbackStartsAt" -> aggFallback)
+    val offHeapConfs = if (!offHeapMode) Nil else Seq(
+      "spark.memory.offHeap.enabled" -> "true",
       // bounded, not "big": off-heap EXECUTION pages come from this pool
       // only, so sizing it near the data's working set keeps the run
       // honest about page-boundary handling under pressure. 4g covers
       // the sf0.01 gate at 4 cpus with headroom; override for sf0.1.
-      builder.config("spark.memory.offHeap.size",
-        sys.env.getOrElse("SPARK_GRAFT_OFFHEAP_SIZE", "4g"))
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.memory.offHeap.size" -> sys.env.getOrElse("SPARK_GRAFT_OFFHEAP_SIZE", "4g"))
+    val spark = Harness.session(Harness.cpus("4"), confs = spillConfs ++ offHeapConfs)
     val offHeapPeak = new java.util.concurrent.atomic.AtomicLong
     if (offHeapMode) {
       val mode = org.apache.spark.graft.SparkShims
@@ -116,15 +105,7 @@ object Verify {
       sampler.setDaemon(true)
       sampler.start()
     }
-    val spilled = new java.util.concurrent.atomic.AtomicLong
-    if (spillMode) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = e.stageInfo.taskMetrics
-          if (m != null) spilled.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
-        }
-      })
+    val metrics = Harness.metrics(spark)
     new java.io.File(outDir).mkdirs()
     // VERIFY_ONLY=q64_...,q35_... restricts the dump (and the emitted
     // oracle JSON) to a named subset — targeted re-checks at big scale
@@ -161,21 +142,21 @@ object Verify {
     require(!spark.sparkContext.isStopped,
       "[verify] SparkContext died mid-run — the dump above is PARTIAL")
     if (spillMode) {
-      org.apache.spark.graft.SparkShims.drainListenerBus(spark.sparkContext)
+      val spilled = metrics.take(spark.sparkContext).spillBytes
       System.err.println(
-        s"[verify] forced-spill mode: ${spilled.get() >> 20} MB spilled")
+        s"[verify] forced-spill mode: ${spilled >> 20} MB spilled")
       // The hard require guards the FULL-catalog gate against renamed
       // confs degrading it to a silent default-path run. A VERIFY_ONLY
       // subset of small queries can legitimately spill zero bytes
       // (ADVICE r13) — there the zero-spill reading is a warning, and
       // the subset must not be recorded as a spill-parity pass anyway.
       if (only.isEmpty)
-        require(spilled.get() > 0L,
+        require(spilled > 0L,
           "SPARK_GRAFT_SPILL=1 was set but the run spilled ZERO bytes — " +
             "the threshold confs no longer bite; this dump exercised only " +
             "the default in-memory paths and must not be recorded as a " +
             "spill-parity pass")
-      else if (spilled.get() == 0L)
+      else if (spilled == 0L)
         System.err.println(
           "[verify] WARNING: VERIFY_ONLY subset spilled zero bytes — " +
             "either the subset is too small to spill or the threshold " +

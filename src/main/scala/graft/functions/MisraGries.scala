@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DataTypes, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 
 /** The MISRA–GRIES frequent-items summary (Misra & Gries 1982) as a
   * native Catalyst aggregate — the deterministic-guarantee complement

@@ -78,7 +78,6 @@ object BinaryPipeline {
     * of the source file layout.
     */
   def decodeFrames(media: DataFrame, decoder: MediaDecoder): DataFrame = {
-    val spark = media.sparkSession
     val enc = RowEncoder.encoderFor(frameSchema)
     media.select(col("media_id"), col("payload"))
       .repartition(col("media_id"))

@@ -1875,21 +1875,7 @@ object Catalog {
       val edges = pairs.select(col("p1").as("src"), col("p2").as("dst"))
         .unionByName(pairs.select(col("p2").as("src"), col("p1").as("dst")))
         .localCheckpoint(true)
-      var labels = edges.select(col("src").as("v")).distinct()
-        .select(col("v"), col("v").as("lbl"))
-      for (_ <- 1 to 3) {
-        val counted = edges
-          .join(broadcast(labels.select(col("v").as("dst"), col("lbl"))), "dst")
-          .groupBy(col("src"), col("lbl"))
-          .agg(count(lit(1)).as("c"))
-        labels = counted
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("src"))
-              .orderBy(col("c").desc, col("lbl"))))
-          .filter(col("rn") === 1)
-          .select(col("src").as("v"), col("lbl"))
-      }
-      labels = labels.localCheckpoint(true)
+      val labels = labelPropagation(edges).localCheckpoint(true)
       val m = pairs.agg(count(lit(1)).as("m"))
       val dc = edges.groupBy(col("src"))
         .agg(count(lit(1)).as("deg"))
@@ -6043,6 +6029,25 @@ object Catalog {
       WHERE rk = (n_pairs + 1) // 2
       ORDER BY o_orderstatus"""))
 
+  /** Three synchronous label-propagation rounds over a symmetric
+    * (src, dst) edge list, shared by q164 and q252: every node adopts
+    * its neighbors' most frequent previous-round label, ties to the
+    * smallest label. Returns (v, lbl).
+    */
+  private def labelPropagation(edges: DataFrame): DataFrame =
+    (1 to 3).foldLeft(edges.select(col("src").as("v")).distinct()
+        .select(col("v"), col("v").as("lbl"))) { (labels, _) =>
+      edges
+        .join(broadcast(labels.select(col("v").as("dst"), col("lbl"))), "dst")
+        .groupBy(col("src"), col("lbl"))
+        .agg(count(lit(1)).as("c"))
+        .withColumn("rn", row_number().over(
+          Window.partitionBy(col("src"))
+            .orderBy(col("c").desc, col("lbl"))))
+        .filter(col("rn") === 1)
+        .select(col("src").as("v"), col("lbl"))
+    }
+
   /** LABEL-PROPAGATION community detection (Raghavan et al. 2007)
     * over the part co-occurrence graph — the graph-family completion
     * beside PageRank (q85), triangles (q94), k-core (q127) and
@@ -6066,21 +6071,8 @@ object Catalog {
         pairs.select(col("dst").as("src"), col("src").as("dst")))
         .repartition(s.sparkContext.defaultParallelism, col("src"))
         .localCheckpoint(true)
-      var labels = edges.select(col("src").as("v")).distinct()
-        .select(col("v"), col("v").as("lbl"))
-      for (_ <- 1 to 3) {
-        val counted = edges
-          .join(broadcast(labels.select(col("v").as("dst"), col("lbl"))), "dst")
-          .groupBy(col("src"), col("lbl"))
-          .agg(count(lit(1)).as("c"))
-        labels = counted
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("src"))
-              .orderBy(col("c").desc, col("lbl"))))
-          .filter(col("rn") === 1)
-          .select(col("src").as("v"), col("lbl"))
-      }
-      labels.select(col("v").as("part"), col("lbl").as("community"))
+      labelPropagation(edges)
+        .select(col("v").as("part"), col("lbl").as("community"))
         .orderBy(col("part"))
     },
     oracle = Some {

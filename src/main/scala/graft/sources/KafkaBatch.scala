@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** S10: bounded Kafka BATCH read — the dashboard's "last N events"
   * tail query (`dashboard/app.py:980-1014`: seek_to_end, rewind N,

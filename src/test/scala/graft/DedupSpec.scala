@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.{Catalog, PipelineCatalog}
+import graft.queries.PipelineCatalog
 
 /** Semantic tests for the dedup/similarity family on literal data
   * (the fixtures contain no exact dups, so the hand-built frames here

@@ -90,44 +90,26 @@ class ExplainSpec extends SparkSpec {
     // its subtree at CONSTRUCTION time and replaces it with a leaf, so
     // a smell behind an eager barrier never reaches the final
     // optimizedPlan — the lint used to be blind there (ADVICE r10).
-    // A QueryExecutionListener captures every plan the construction
+    // Explain.eagerExecutions captures every plan the construction
     // executes (checkpoint/collect barriers) and lints those too.
     val boundedByDomain: Map[String, String] = ExplainSpec.windowAllowlist
     val nlAllowed: Map[String, String] = ExplainSpec.nestedLoopAllowlist
-    val captured = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        // optimizedPlan is a memoized lazy val already forced by the
-        // execution itself; Try guards exotic executions only
-        scala.util.Try(captured.add(qe.optimizedPlan))
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val (winOffenders, nlOffenders) = try {
+    val (winOffenders, nlOffenders) = {
       val results = queries.Catalog.all.toSeq.sortBy(_._1).map {
         case (name, spec) =>
-          captured.clear()
           // construction failures are CatalogSmokeSpec's job, not this lint's
-          val opt = scala.util.Try(
-            spec.fn(spark, sf0001).queryExecution.optimizedPlan).toOption
-          org.apache.spark.graft.SparkShims
-            .drainListenerBus(spark.sparkContext)
-          val eager = {
-            import scala.jdk.CollectionConverters._
-            captured.iterator().asScala.toVector
-          }
+          val (opt, eagerQs) = Explain.eagerExecutions(spark)(scala.util.Try(
+            spec.fn(spark, sf0001).queryExecution.optimizedPlan).toOption)
+          // optimizedPlan is a memoized lazy val already forced by the
+          // execution itself; Try guards exotic executions only
+          val eager = eagerQs.flatMap(qe => scala.util.Try(qe.optimizedPlan).toOption)
           val plans = opt.toVector ++ eager
           (name, plans.exists(Explain.unboundedGlobalWindow),
             plans.exists(Explain.nonScalarNestedLoopJoin))
       }
       (results.collect { case (n, true, _) => n },
         results.collect { case (n, _, true) => n })
-    } finally spark.listenerManager.unregister(listener)
+    }
     val unexplained = winOffenders.filterNot(boundedByDomain.contains)
     assert(unexplained.isEmpty,
       s"unproven partitionless Window in: ${unexplained.mkString(", ")} — " +
@@ -149,7 +131,6 @@ class ExplainSpec extends SparkSpec {
   }
 
   test("nested-loop classifier: scalar broadcast quiet, unbounded cross flagged") {
-    import spark.implicits._
     // scalar-aggregate broadcast: the intended crossJoin(broadcast(tot))
     // shape — quiet
     val fact = Tables.orders(spark, sf0001)

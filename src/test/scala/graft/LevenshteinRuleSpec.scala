@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, Levenshtein}
+import org.apache.spark.sql.catalyst.expressions.Levenshtein
 import org.apache.spark.sql.functions._
 
 import graft.plans.{GraftExtensions, LevenshteinBandRule}

@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 /** Deterministic plan-shape gate for the bench headlines (round 12).
   *
   * Wall-time envelopes absorb container load BY DESIGN — which is
@@ -126,32 +124,16 @@ class PlanBudgetSpec extends SparkSpec {
   )
 
   test("headline exchange fingerprints match the committed budgets") {
-    val captured =
-      new java.util.concurrent.ConcurrentLinkedQueue[
-        org.apache.spark.sql.execution.QueryExecution]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        scala.util.Try(captured.add(qe))
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try withAuditConf {
+    withAuditConf {
       val headlines = queries.Catalog.all.toSeq
         .filter { case (name, spec) => spec.headline && name.startsWith("q") }
         .sortBy(_._1)
       val actuals = headlines.map { case (name, spec) =>
         queries.Catalog.clearCaches(spark)
-        org.apache.spark.graft.SparkShims.drainListenerBus(spark.sparkContext)
-        captured.clear()
-        val df = spec.fn(spark, sf0001)
-        val (sh0, bc0) = Explain.exchangeCounts(df.queryExecution.executedPlan)
-        org.apache.spark.graft.SparkShims.drainListenerBus(spark.sparkContext)
-        val eager = captured.iterator().asScala.toVector
-          .map(qe => Explain.exchangeCounts(qe.executedPlan))
+        val ((sh0, bc0), eagerQs) = Explain.eagerExecutions(spark) {
+          Explain.exchangeCounts(spec.fn(spark, sf0001).queryExecution.executedPlan)
+        }
+        val eager = eagerQs.map(qe => Explain.exchangeCounts(qe.executedPlan))
         name -> ((sh0 + eager.map(_._1).sum, bc0 + eager.map(_._2).sum))
       }
       val rendered = actuals
@@ -173,6 +155,6 @@ class PlanBudgetSpec extends SparkSpec {
            |  stale rows (no longer q* headlines): ${stale.mkString(", ")}
            |full actual map:
            |$rendered""".stripMargin)
-    } finally spark.listenerManager.unregister(listener)
+    }
   }
 }

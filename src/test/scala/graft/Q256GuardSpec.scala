@@ -2,8 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
-
 /** q256's absorbing-chain solve collects the transition matrix to the
   * driver — legal ONLY under the documented |states|² contract
   * (event_type is a small categorical domain). VERDICT r11 #4: the

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.{LinearModel, ModelRegistry, ModelWatcher, Recommender}
@@ -34,8 +33,6 @@ class RecommenderSpec extends SparkSpec {
       avgProfile = Seq((10.0, 8.0, 2.0, 1.0, 0.5, 21.5))
         .toDF("nClick", "nView", "nPurchase", "nSignup", "nError", "total"))
   }
-
-  private val zero = (0L, 0L, 0L, 0L, 0L)
 
   test("candidate generation: failed-retry ∪ co-occurrence ∪ popular fill to 10 (ST5)") {
     import spark.implicits._

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.streaming.{DriftStream, MetricEvent, ScoringStream, ThrottleStream, TopKStream}
+import graft.streaming.{DriftStream, MetricEvent, ThrottleStream, TopKStream}
 import graft.streaming.ScoringStream.{EventState, RawEvent}
 
 /** CRASH-RECOVERY parity for every stateful stream family: the

@@ -11,23 +11,17 @@ trait SparkSpec extends AnyFunSuite {
   def sf0001 = "/root/testdata/sf0.001"
   def sf001 = "/root/testdata/sf0.01"
 
-  /** Audit-mode planning (the one definition shared by every gate that
-    * fingerprints plans — Explain.main's session builder mirrors it):
-    * AQE off so executedPlan is statically walkable (AdaptiveSparkPlanExec
-    * is a LEAF — collecting through it sees nothing), stat-based
-    * broadcast off so counts reflect the HINTED 100 TB shape. Restores
-    * both confs and clears catalog caches afterwards.
+  /** Runs `body` under [[Harness.auditConfs]], the planning regime
+    * `graft.Explain` fingerprints with. Restores the confs and clears
+    * catalog caches afterwards.
     */
   def withAuditConf[A](body: => A): A = {
     val conf = spark.conf
-    val aqe = conf.get("spark.sql.adaptive.enabled")
-    val bc = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val saved = Harness.auditConfs.map { case (k, _) => k -> conf.get(k) }
+    Harness.auditConfs.foreach { case (k, v) => conf.set(k, v) }
     try body
     finally {
-      conf.set("spark.sql.adaptive.enabled", aqe)
-      conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
+      saved.foreach { case (k, v) => conf.set(k, v) }
       queries.Catalog.clearCaches(spark)
     }
   }
@@ -36,17 +30,10 @@ trait SparkSpec extends AnyFunSuite {
 object SparkSpec {
   lazy val session: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$wh/metastore_db;create=true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    Harness.session("4", confs = Seq(
+      "spark.app.name" -> "graft-test",
+      "spark.sql.warehouse.dir" -> wh,
+      "javax.jdo.option.ConnectionURL" ->
+        s"jdbc:derby:;databaseName=$wh/metastore_db;create=true"))
   }
 }

@@ -102,14 +102,7 @@ class SpillSweep extends SparkSpec {
     val entries = queries.Catalog.all.toSeq
       .filter { case (n, spec) => spec.oracle.nonEmpty && n.startsWith("q") }
       .sortBy(_._1)
-    val spilled = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) spilled.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
-      }
-    }
+    val metrics = new Harness.Metrics
     def runAll(): Map[String, Either[String, Seq[String]]] =
       entries.map { case (n, spec) =>
         queries.Catalog.clearCaches(spark)
@@ -121,13 +114,10 @@ class SpillSweep extends SparkSpec {
     try {
       val inMemory = runAll()
       forced.foreach { case (k, v) => conf.set(k, v) }
-      spark.sparkContext.addSparkListener(listener)
-      val underSpill =
-        try runAll()
-        finally {
-          org.apache.spark.graft.SparkShims.drainListenerBus(spark.sparkContext)
-          spark.sparkContext.removeSparkListener(listener)
-        }
+      spark.sparkContext.addSparkListener(metrics)
+      val (underSpill, spilled) =
+        try (runAll(), metrics.take(spark.sparkContext).spillBytes)
+        finally spark.sparkContext.removeSparkListener(metrics)
       val bad = entries.map(_._1).flatMap { n =>
         (inMemory(n), underSpill(n)) match {
           case (Left(e), _) => Some(s"$n: failed in-memory: $e")
@@ -141,8 +131,8 @@ class SpillSweep extends SparkSpec {
       }
       assert(bad.isEmpty,
         bad.mkString("forced-spill divergences:\n  ", "\n  ", ""))
-      info(s"forced pass spilled ${spilled.get() >> 20} MB cumulative")
-      assert(spilled.get() > 0L,
+      info(s"forced pass spilled ${spilled >> 20} MB cumulative")
+      assert(spilled > 0L,
         "the forced pass spilled ZERO bytes — the threshold confs no " +
           "longer bite and this sweep has degraded to an A/A test")
     } finally {

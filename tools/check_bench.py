@@ -162,6 +162,21 @@ def main():
         else:
             print(f"load context: idle box ({desc})")
 
+    # Per-rep Spark job counts from Bench's diagnostics line — printed
+    # beside each query for information only; they never gate. Same
+    # raw-text search as the load context (a wrapper's tail may have cut
+    # the field, then nothing is shown).
+    jobs = {}
+    m = re.search(r'\\?"jobs\\?":(\{[^{}]*\})', raw)
+    if m:
+        try:
+            jobs = json.loads(m.group(1).replace('\\"', '"'))
+        except json.JSONDecodeError:
+            jobs = {}
+
+    def with_jobs(name, msg):
+        return f"{msg} jobs={jobs[name]}" if name in jobs else msg
+
     worst = 0.0
     failures, warnings, extras = [], [], []
     hygiene = [f"anchor hygiene: {msg}"
@@ -172,7 +187,7 @@ def main():
             failures.append(f"{name}: FAILED in bench (null)")
             continue
         if short not in envelope:
-            extras.append(f"{name}: {secs:.3f}s (no committed envelope)")
+            extras.append(with_jobs(name, f"{name}: {secs:.3f}s (no committed envelope)"))
             continue
         ratio = secs / envelope[short]
         worst = max(worst, ratio)
@@ -183,7 +198,7 @@ def main():
             failures.append(msg)
         elif ratio > WARN_RATIO:
             warnings.append(msg)
-        print(" ", msg)
+        print(" ", with_jobs(name, msg))
     for e in extras:
         print("  [extra]", e)
     # a full-headline run must cover the whole envelope — a missing query
