@@ -55,9 +55,20 @@ object Verify {
     // (q243's triangle corners at sf0.1) creates tens of thousands of
     // files per task and trips the fd ulimit no matter what the static
     // row threshold says. Scale it with the data: groups/file ≈
-    // fallback second value.
-    val aggFallback =
-      sys.env.getOrElse("SPARK_GRAFT_SPILL_AGG_FALLBACK", "64, 128")
+    // fallback second value. "64, 128" is what the full-catalog gate runs
+    // green with on build.sbt's 24g heap, so heaps from 24 GiB up keep it.
+    // Smaller heaps get more keys per file, inversely with the heap, since
+    // the merge holds one read buffer per file: "64, 128" OOM'd 3-6 GB
+    // heaps even at sf0.001, where "4096, 8192" on a 4 GB heap still
+    // spilled 64 MB on q243 at 4 cpus (128 MB at 2) — so 8192 keys at
+    // 4 GiB, to the nearest power of two.
+    val aggFallback = sys.env.getOrElse("SPARK_GRAFT_SPILL_AGG_FALLBACK", {
+      val heapGib = Runtime.getRuntime.maxMemory.toDouble / (1L << 30)
+      val keys =
+        if (heapGib >= 24) 128
+        else 1 << math.round(math.log(8192 * 4 / heapGib) / math.log(2)).toInt
+      s"${keys / 2}, $keys"
+    })
     val spillConfs = if (!spillMode) Nil else Seq(
       "spark.shuffle.spill.numElementsForceSpillThreshold" -> spillThreshold,
       "spark.unsafe.sorter.spill.read.ahead.enabled" -> "false",
@@ -144,7 +155,7 @@ object Verify {
     if (spillMode) {
       val spilled = metrics.take(spark.sparkContext).spillBytes
       System.err.println(
-        s"[verify] forced-spill mode: ${spilled >> 20} MB spilled")
+        s"[verify] forced-spill mode: ${spilled >> 20} MB spilled (agg fallback $aggFallback)")
       // The hard require guards the FULL-catalog gate against renamed
       // confs degrading it to a silent default-path run. A VERIFY_ONLY
       // subset of small queries can legitimately spill zero bytes

@@ -12,22 +12,33 @@ import graft.streaming.ScoringStream.EventState
   *
   * Two evaluation paths, guaranteed identical arithmetic:
   *  - [[score]] for driver/processor-side scalars (the stateful
-  *    operator's per-event emit), and
-  *  - [[scoreCol]] as a Catalyst column expression, so per-microbatch
-  *    re-scoring in foreachBatch picks up hot-swapped weights as plan
-  *    LITERALS — the distributed-correct version of the reference's
-  *    global-variable model swap (executors never hold stale state;
-  *    each batch's plan carries the weights it was scored with).
+  *    operator's per-event emit and the recommender's kernel), and
+  *  - [[scoreCol]] as a Catalyst column expression over counter
+  *    columns.
+  * Either way the weights travel inside each batch's plan (literals,
+  * or the kernel's closure) — the distributed-correct version of the
+  * reference's global-variable model swap: executors never hold stale
+  * state, and each batch scores with the weights it planned with.
   */
 case class LinearModel(
     wClick: Double, wView: Double, wPurchase: Double,
     wSignup: Double, wError: Double, wTotal: Double, bias: Double) {
 
-  def score(s: EventState): Double = {
-    val z = wClick * s.nClick + wView * s.nView + wPurchase * s.nPurchase +
-      wSignup * s.nSignup + wError * s.nError + wTotal * s.total + bias
-    1.0 / (1.0 + math.exp(-z))
+  /** The logistic over six counters as doubles: the one scalar form.
+    * [[scoreCol]] runs the same operations in the same order, and
+    * `StrictMath.exp` is what Catalyst's `exp` calls, so both paths agree
+    * bit for bit.
+    */
+  def score(nClick: Double, nView: Double, nPurchase: Double,
+      nSignup: Double, nError: Double, total: Double): Double = {
+    val z = wClick * nClick + wView * nView + wPurchase * nPurchase +
+      wSignup * nSignup + wError * nError + wTotal * total + bias
+    1.0 / (1.0 + StrictMath.exp(-z))
   }
+
+  def score(s: EventState): Double =
+    score(s.nClick.toDouble, s.nView.toDouble, s.nPurchase.toDouble,
+      s.nSignup.toDouble, s.nError.toDouble, s.total.toDouble)
 
   /** The same logistic over counter COLUMNS (any numeric type). */
   def scoreCol(nClick: Column, nView: Column, nPurchase: Column,
@@ -55,7 +66,7 @@ object LinearModel {
   * parquet of weights; [[ModelWatcher]] is the mtime poll; the swap
   * point is foreachBatch (see [[Recommender.recommendSink]]) so
   * in-flight batches finish on the old model and the next batch plans
-  * with the new literals — zero-downtime on a real cluster.
+  * with the new weights — zero-downtime on a real cluster.
   */
 object ModelRegistry {
 

@@ -1,12 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** ST5/ST6: the reference consumer's full recommendation semantics
-  * (`core-logic/run_consumer.py:235-303`) as pure DataFrame ops over
-  * broadcastable knowledge-base tables.
+  * (`core-logic/run_consumer.py:235-303`), one grouped pass per
+  * micro-batch.
   *
   * Per (user, current item) event:
   *  1. candidate generation (B1):
@@ -27,152 +32,232 @@ import org.apache.spark.sql.functions._
   * failed < co-occurrence < popular, then item id) before the cap, so
   * reruns and retries agree bit-for-bit.
   *
-  * Scale: every KB table here is a top-k cut or a one-row profile —
-  * broadcast by construction. The only potentially-large join is
-  * history, keyed (user, item): at 100 TB it arrives hash-partitioned
-  * on the same key the stateful operator already uses, so the
-  * candidate-scoring join co-partitions with no extra shuffle; the
-  * microbatch side is small and broadcastable.
+  * Scale: three KB inputs are bounded by construction — the top-50
+  * pair cut, the top-k popular list and the one-row success profile —
+  * and are read on the driver once per [[Kb]] (see [[Kb.cuts]]), then
+  * travel inside the kernel's closure. The only unbounded input is
+  * history, keyed (user, item): it is STREAMED through a hash join on
+  * `user` against the micro-batch's broadcast keys, never shuffled or
+  * broadcast itself. One shuffle then groups the matched history rows
+  * by (user, cur) for the per-key kernel, so a batch costs one
+  * broadcast and one exchange whatever the history's size.
   */
 object Recommender {
 
   /** The consumer's knowledge base (`run_consumer.py:28-37, 126-154`),
     * parquet tables instead of pickles:
     *  - history: (user, item, nClick, nView, nPurchase, nSignup,
-    *    nError, total, truth) — truth: 0 = passed, 1 = failed,
-    *    null = unresolved (the snapshot's NaN);
+    *    nError, total, truth) — one row per (user, item), non-null
+    *    counters; truth: 0 = passed, 1 = failed, null = unresolved (the
+    *    snapshot's NaN);
     *  - pairCounts: (i1, i2, cnt) co-occurrence counts
     *    ([[graft.operators.CoOccurrence.topPairs]] output);
-    *  - popular: (item, popRank) — popularity-ordered top-k;
+    *  - popular: (item, popRank) — popularity-ordered top-k, one row
+    *    per item;
     *  - avgProfile: ONE row (nClick..nError, total as doubles) — the
     *    average success profile (`knowledge_base['avg_features']`).
     */
   case class Kb(history: DataFrame, pairCounts: DataFrame,
-      popular: DataFrame, avgProfile: DataFrame)
+      popular: DataFrame, avgProfile: DataFrame) {
+
+    /** The three bounded tables as driver-side values, read on first
+      * use (a top-50 job and two collects, once per Kb — not at
+      * construction, so no work moves into set-up). The popular list is
+      * ordered on the driver by (popRank, item), nulls first as Spark
+      * sorts them.
+      */
+    private[streaming] lazy val cuts: Cuts = {
+      val top50 = pairCounts
+        .orderBy(col("cnt").desc, col("i1"), col("i2")).limit(50)
+        .select(col("i1"), col("i2")).collect()
+        .map(r => (r.getString(0), r.getString(1)))
+      val cooc = (top50 ++ top50.map(_.swap)).groupBy(_._1)
+        .map { case (i, ps) => i -> ps.map(_._2).toSeq }
+      val pop = popular.select(col("item"), col("popRank").cast("long")).collect()
+        .map(r => (r.getString(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
+        .sortBy(_.swap)(Ordering.Tuple2(Ordering.Option[Long], byString))
+        .map(_._1).toSeq
+      val prof = avgProfile.select(counterCols.map(c => col(c).cast("double")): _*)
+        .collect()
+      require(prof.length == 1 && !prof.head.anyNull,
+        s"avgProfile must be one row of non-null counters, got ${prof.length} rows")
+      Cuts(cooc, pop, counterCols.indices.map(prof.head.getDouble))
+    }
+  }
+
+  /** A [[Kb]]'s bounded parts: `cooc` maps an item to its partners in
+    * the top-50 pairs (both directions), `popular` is the popular list
+    * in rank order, `profile` the success profile's six counters.
+    */
+  private[streaming] final case class Cuts(cooc: Map[String, Seq[String]],
+      popular: Seq[String], profile: IndexedSeq[Double])
 
   private val counterCols =
     Seq("nClick", "nView", "nPurchase", "nSignup", "nError", "total")
 
-  /** B1 candidate generation. `events`: (user LONG, item STRING) — the
-    * microbatch's distinct (user, current-item) keys. Output: (user,
-    * cur, cand, pri) with pri 0=failed-retry, 1=co-occurrence,
-    * 2=popular-fallback, ≤ 15 rows per key.
+  /** A candidate item and its source: 0 = failed-retry,
+    * 1 = co-occurrence, 2 = popular-fallback.
     */
-  def candidates(events: DataFrame, kb: Kb): DataFrame = {
-    val ev = broadcast(
-      events.select(col("user"), col("item").as("cur")).distinct())
-    val failed = kb.history.filter(col("truth") === 1)
-      .select(col("user"), col("item"))
-    val passed = kb.history.filter(col("truth") === 0)
-      .select(col("user"), col("item").as("cand"))
+  private[streaming] final case class Pick(cand: String, pri: Int)
 
-    // 1. failed-history retry (run_consumer.py:239-242)
-    val fromFailed = failed.join(ev, "user")
-      .filter(col("item") =!= col("cur"))
-      .select(col("user"), col("cur"), col("item").as("cand"),
-        lit(0).as("pri"))
+  /** One kernel input row of a batch key: a history entry of the key's
+    * user (`h` = its six counters as doubles, the flags are Catalyst's
+    * `truth === 1`, `truth === 0` and `total > 0` with null as false),
+    * or the key itself (`h` null), which always exists so that keys
+    * without history still form a group; its `toScore` holds the
+    * candidates to score when they are given (null otherwise).
+    */
+  private[streaming] final case class KeyRow(user: Long, cur: String,
+      item: String, failed: Boolean, passed: Boolean, retake: Boolean,
+      h: Seq[Double], toScore: Seq[Pick])
 
-    // 2. co-occurrence: top-50 pairs involving the current item, both
-    // directions, minus already-passed (run_consumer.py:245-250).
-    // Symmetrize the pair table FIRST and equi-join on `cur`: the
-    // OR-predicate formulation (cur === i1 || cur === i2) has no
-    // single equi-key, so Catalyst plans BroadcastNestedLoopJoin —
-    // bounded here by the top-50 cut, but the union-of-directions
-    // form stays hash-joinable for a pair table of any size.
-    val top50 = kb.pairCounts
-      .orderBy(col("cnt").desc, col("i1"), col("i2")).limit(50)
-    val bothDirs = broadcast(
-      top50.select(col("i1").as("cur"), col("i2").as("cand"))
-        .unionByName(top50.select(col("i2").as("cur"), col("i1").as("cand"))))
-    val cooc = ev.join(bothDirs, "cur")
-      .filter(col("cand") =!= col("cur"))
-      .join(passed, Seq("user", "cand"), "left_anti")
-      .select(col("user"), col("cur"), col("cand"), lit(1).as("pri"))
+  private[streaming] final case class Candidate(user: Long, cur: String,
+      cand: String, pri: Int)
 
-    // distinct candidates so far, keeping the strongest source
-    val base = fromFailed.unionByName(cooc)
-      .groupBy(col("user"), col("cur"), col("cand"))
-      .agg(min(col("pri")).as("pri"))
+  private[streaming] final case class ScoredCandidate(user: Long, cur: String, cand: String,
+      pri: Int, isRetake: Boolean, f_nClick: Double, f_nView: Double,
+      f_nPurchase: Double, f_nSignup: Double, f_nError: Double,
+      f_total: Double, failProb: Double)
 
-    // 3. popular fallback (run_consumer.py:253-258): only for keys with
-    // < 5 candidates; walk populars in rank order, adding NEW un-passed
-    // items until the set holds 10 — i.e. admit the first (10 - n) new
-    // eligible populars.
-    val baseCnt = base.groupBy(col("user"), col("cur"))
-      .agg(count(lit(1)).as("n"))
-    val needFill = ev.join(baseCnt, Seq("user", "cur"), "left")
-      .na.fill(0L, Seq("n")).filter(col("n") < 5)
-    val popW = Window.partitionBy(col("user"), col("cur")).orderBy(col("popRank"))
-    // deliberate BroadcastNestedLoopJoin: a fan-out of the top-k popular
-    // cut against every under-filled key has no equi-key by nature; the
-    // broadcast side is a bounded top-k, so the plan stays safe at scale
-    val fromPopular = needFill.join(broadcast(kb.popular))
-      .filter(col("item") =!= col("cur"))
-      .select(col("user"), col("cur"), col("item").as("cand"),
-        col("popRank"), col("n"))
-      .join(passed, Seq("user", "cand"), "left_anti")
-      .join(base.select(col("user"), col("cur"), col("cand")),
-        Seq("user", "cur", "cand"), "left_anti")
-      .withColumn("fillRank", row_number().over(popW))
-      .filter(col("fillRank") <= lit(10) - col("n"))
-      .select(col("user"), col("cur"), col("cand"), lit(2).as("pri"))
+  private[streaming] final case class Recommendation(user: Long, cur: String, rank: Int,
+      cand: String, failProb: Double, isRetake: Boolean)
 
-    // deterministic cap at 15 (the reference's [:15], de-hash-ordered)
-    val capW = Window.partitionBy(col("user"), col("cur"))
-      .orderBy(col("pri"), col("cand"))
-    base.unionByName(fromPopular)
-      .withColumn("capRank", row_number().over(capW))
-      .filter(col("capRank") <= 15)
-      .drop("capRank")
+  /** Catalyst's orders: strings by UTF-8 bytes, doubles with NaN last. */
+  private val byString: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
   }
+  private val byPri: Ordering[Pick] =
+    Ordering.by[Pick, Int](_.pri).orElse(Ordering.by[Pick, String](_.cand)(byString))
+  private val byFailProb: Ordering[ScoredCandidate] = new Ordering[ScoredCandidate] {
+    def compare(a: ScoredCandidate, b: ScoredCandidate): Int = {
+      val c = SQLOrderingUtil.compareDoubles(a.failProb, b.failProb)
+      if (c != 0) c else byString.compare(a.cand, b.cand)
+    }
+  }
+
+  /** B1 for one key (`run_consumer.py:235-259`): at most 15 picks in
+    * (pri, cand) order.
+    */
+  private def pick(cuts: Cuts, cur: String, hist: Map[String, KeyRow]): Seq[Pick] =
+    if (cur == null) Nil
+    else {
+      def fresh(c: String) = c != null && c != cur
+      def passed(c: String) = hist.get(c).exists(_.passed)
+      val pri = mutable.HashMap.empty[String, Int]
+      // 1. failed-history retry (run_consumer.py:239-242)
+      hist.valuesIterator.filter(r => r.failed && fresh(r.item)).foreach(r => pri(r.item) = 0)
+      // 2. co-occurrence: top-50 pairs touching cur, both directions,
+      // minus already-passed (run_consumer.py:245-250)
+      cuts.cooc.getOrElse(cur, Nil)
+        .filter(c => fresh(c) && !passed(c) && !pri.contains(c))
+        .foreach(c => pri(c) = 1)
+      // 3. popular fallback (run_consumer.py:253-258): only under 5
+      // candidates; the first new un-passed populars until the set holds 10
+      val n = pri.size
+      if (n < 5) cuts.popular.iterator
+        .filter(c => fresh(c) && !passed(c) && !pri.contains(c))
+        .take(10 - n).foreach(c => pri(c) = 2)
+      // deterministic cap at 15 (the reference's [:15], de-hash-ordered)
+      pri.iterator.map { case (c, p) => Pick(c, p) }.toSeq.sorted(byPri).take(15)
+    }
+
+  /** B2 for one candidate (`run_consumer.py:261-295`). */
+  private def score(cuts: Cuts, model: LinearModel, user: Long, cur: String,
+      p: Pick, hist: Map[String, KeyRow]): ScoredCandidate = {
+    val h = hist.get(p.cand).filter(_.retake)
+    val f = h.fold(cuts.profile)(r =>
+      counterCols.indices.map(i => 0.3 * r.h(i) + 0.7 * cuts.profile(i)))
+    ScoredCandidate(user, cur, p.cand, p.pri, h.isDefined,
+      f(0), f(1), f(2), f(3), f(4), f(5),
+      model.score(f(0), f(1), f(2), f(3), f(4), f(5)))
+  }
+
+  private val toScoreType = ArrayType(Encoders.product[Pick].schema)
+
+  /** The grouped pass over `keys` (user, cur, toScore): history streams
+    * through a hash join on `user` with the keys' (user, cur) as the
+    * broadcast build side, the key rows are unioned in, and one
+    * groupByKey hands `kernel` each key with its user's history as an
+    * item-keyed map.
+    */
+  private def byKey[T <: Product : TypeTag](keys: DataFrame, kb: Kb)(
+      kernel: (Cuts, KeyRow, Map[String, KeyRow]) => Seq[T]): Dataset[T] = {
+    val cuts = kb.cuts
+    val matched = kb.history.select(col("user"), col("item"),
+        coalesce(col("truth") === 1, lit(false)).as("failed"),
+        coalesce(col("truth") === 0, lit(false)).as("passed"),
+        coalesce(col("total") > 0, lit(false)).as("retake"),
+        array(counterCols.map(c => col(c).cast("double")): _*).as("h"))
+      .join(broadcast(keys.select(col("user"), col("cur"))), "user")
+      .withColumn("toScore", lit(null).cast(toScoreType))
+    val self = keys.select(col("user"), col("cur"), lit(null).cast(StringType).as("item"),
+      lit(false).as("failed"), lit(false).as("passed"), lit(false).as("retake"),
+      lit(null).cast(ArrayType(DoubleType)).as("h"), col("toScore"))
+    matched.unionByName(self).as(Encoders.product[KeyRow])
+      .groupByKey(r => (r.user, r.cur))(Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
+      .flatMapGroups { (_, rows) =>
+        var key: KeyRow = null
+        val byItem = Map.newBuilder[String, KeyRow]
+        rows.foreach { r =>
+          if (r.h == null) key = r
+          else if (r.item != null) byItem += r.item -> r
+        }
+        kernel(cuts, key, byItem.result())
+      }(Encoders.product[T])
+  }
+
+  /** The micro-batch's distinct (user, cur) keys, no candidates given. */
+  private def eventKeys(events: DataFrame): DataFrame =
+    events.select(col("user"), col("item").as("cur")).distinct()
+      .withColumn("toScore", lit(null).cast(toScoreType))
+
+  /** B1 candidate generation. `events`: (user LONG, item STRING) — the
+    * microbatch's (user, current-item) keys. Output: (user, cur, cand,
+    * pri) with pri 0=failed-retry, 1=co-occurrence, 2=popular-fallback,
+    * ≤ 15 rows per key.
+    */
+  def candidates(events: DataFrame, kb: Kb): DataFrame =
+    byKey(eventKeys(events), kb) { (cuts, key, hist) =>
+      pick(cuts, key.cur, hist).map(p => Candidate(key.user, key.cur, p.cand, p.pri))
+    }.toDF()
 
   /** B2 scoring with 30/70 blending (`run_consumer.py:261-295`): a
     * candidate the user has prior behavior on (total > 0) scores the
     * vector 0.3·history + 0.7·avgProfile; a cold candidate scores the
-    * pure average-success profile. Output adds (isRetake, failProb).
+    * pure average-success profile. `cands`: (user, cur, cand, pri).
+    * Output adds (isRetake, f_nClick..f_total, failProb).
     */
   def scoreCandidates(cands: DataFrame, kb: Kb, model: LinearModel): DataFrame = {
-    val hist = kb.history.select(
-      col("user") +: col("item").as("cand") +:
-        counterCols.map(c => col(c).as(s"h_$c")): _*)
-    val prof = broadcast(kb.avgProfile.select(
-      counterCols.map(c => col(c).as(s"p_$c")): _*))
-    val blended = cands
-      .join(hist, Seq("user", "cand"), "left")
-      .crossJoin(prof)
-      .withColumn("isRetake", coalesce(col("h_total"), lit(0L)) > 0)
-    val feat = counterCols.map { c =>
-      when(col("isRetake"), lit(0.3) * col(s"h_$c") + lit(0.7) * col(s"p_$c"))
-        .otherwise(col(s"p_$c")).as(s"f_$c")
-    }
-    val withFeat = blended.select(
-      (Seq(col("user"), col("cur"), col("cand"), col("pri"), col("isRetake")) ++ feat): _*)
-    withFeat.withColumn("failProb",
-      model.scoreCol(col("f_nClick"), col("f_nView"), col("f_nPurchase"),
-        col("f_nSignup"), col("f_nError"), col("f_total")))
+    val keys = cands.groupBy(col("user"), col("cur"))
+      .agg(collect_list(struct(col("cand"), col("pri"))).as("toScore"))
+    byKey(keys, kb) { (cuts, key, hist) =>
+      key.toScore.map(p => score(cuts, model, key.user, key.cur, p, hist))
+    }.toDF()
   }
 
   /** The full B1+B2 pass: top-`k` lowest-fail-probability candidates
     * per (user, current item), rank 1 = safest bet
-    * (`run_consumer.py:297-303`).
+    * (`run_consumer.py:297-303`). `model` is captured in this call's
+    * plan, so a batch scores with the weights it planned with.
     */
   def recommend(events: DataFrame, kb: Kb, model: LinearModel,
-      k: Int = 5): DataFrame = {
-    val w = Window.partitionBy(col("user"), col("cur"))
-      .orderBy(col("failProb"), col("cand"))
-    scoreCandidates(candidates(events, kb), kb, model)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("user"), col("cur"), col("rank"), col("cand"),
-        col("failProb"), col("isRetake"))
-  }
+      k: Int = 5): DataFrame =
+    byKey(eventKeys(events), kb) { (cuts, key, hist) =>
+      pick(cuts, key.cur, hist)
+        .map(p => score(cuts, model, key.user, key.cur, p, hist))
+        .sorted(byFailProb).take(k).zipWithIndex
+        .map { case (s, i) =>
+          Recommendation(s.user, s.cur, i + 1, s.cand, s.failProb, s.isRetake)
+        }
+    }.toDF()
 
   /** ST7 wiring: per-microbatch hot reload + recommend + JSON snapshot
     * (`run_consumer.py:40-76, 348-360`). The watcher polls the registry
     * artifact's mtime on the DRIVER each batch; a swap takes effect in
-    * the next batch's plan as fresh literals — executors can't go
-    * stale. Snapshot is an idempotent overwrite (last batch wins),
-    * matching the reference's realtime_recommendations.json.
+    * the next batch's plan — executors can't go stale. Snapshot is an
+    * idempotent overwrite (last batch wins), matching the reference's
+    * realtime_recommendations.json.
     */
   def recommendSink(events: DataFrame, kb: Kb, watcher: ModelWatcher,
       outDir: String, checkpoint: String)

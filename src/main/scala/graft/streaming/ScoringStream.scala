@@ -52,7 +52,8 @@ object ScoringStream {
   /** The in-stream scorer: [[LinearModel.default]] over the counter
     * vector (ST4). The trained/hot-swapped path lives in
     * [[Recommender.recommendSink]], which re-scores each microbatch
-    * with the [[ModelWatcher]]'s current weights as plan literals.
+    * with the [[ModelWatcher]]'s current weights, captured in that
+    * batch's plan.
     */
   def score(s: EventState): Double = LinearModel.default.score(s)
 

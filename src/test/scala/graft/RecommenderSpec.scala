@@ -2,7 +2,18 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+  BroadcastNestedLoopJoinExec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Prop.propBoolean
 
 import graft.streaming.{LinearModel, ModelRegistry, ModelWatcher, Recommender}
 import graft.streaming.Recommender.Kb
@@ -22,7 +33,9 @@ class RecommenderSpec extends SparkSpec {
   private def kb(
       hist: Seq[(Long, String, Long, Long, Long, Long, Long, Long, java.lang.Integer)],
       pairs: Seq[(String, String, Long)],
-      popular: Seq[String]): Kb = {
+      popular: Seq[String],
+      profile: (Double, Double, Double, Double, Double, Double) =
+        (10.0, 8.0, 2.0, 1.0, 0.5, 21.5)): Kb = {
     import spark.implicits._
     Kb(
       history = hist.toDF("user", "item", "nClick", "nView", "nPurchase",
@@ -30,7 +43,7 @@ class RecommenderSpec extends SparkSpec {
       pairCounts = pairs.toDF("i1", "i2", "cnt"),
       popular = popular.zipWithIndex.map { case (i, r) => (i, r + 1) }
         .toDF("item", "popRank"),
-      avgProfile = Seq((10.0, 8.0, 2.0, 1.0, 0.5, 21.5))
+      avgProfile = Seq(profile)
         .toDF("nClick", "nView", "nPurchase", "nSignup", "nError", "total"))
   }
 
@@ -74,24 +87,110 @@ class RecommenderSpec extends SparkSpec {
     assert(byUser(9L) == (1 to 15).map(i => f"f$i%02d"))
   }
 
-  test("candidate co-occurrence join stays hash-joinable (no BroadcastNestedLoopJoin)") {
+  test("batch plan: no nested-loop join; history streamed against broadcast keys") {
     import spark.implicits._
-    // the OR-predicate form (cur === i1 || cur === i2) had no equi-key
-    // and planned BNLJ; the symmetrized union form must hash-join so the
-    // plan survives a pair table of any size (VERDICT r3 #6)
-    val k = kb(
+    // history is the one unbounded KB table: it must reach its join with
+    // the micro-batch's keys unshuffled and unbroadcast, as the streamed
+    // side of an equi-join on `user`; the pair, popular and profile cuts
+    // never enter the plan
+    val histDir = java.nio.file.Files.createTempDirectory("graft_hist").toString + "/h"
+    val k0 = kb(
       hist = Seq(histRow(7L, "cF1", (1, 0, 0, 0, 2), 1)),
       pairs = Seq(("cur", "cooc1", 10L), ("cooc2", "cur", 8L)),
       popular = Seq("p1", "p2"))
-    val ev = Seq((7L, "cur")).toDF("user", "item")
-    val plan = Recommender.candidates(ev, k).queryExecution.executedPlan.toString
-    // the co-occurrence lookup must be an equi-join on `cur`
-    assert(plan.contains("BroadcastHashJoin [cur"), s"no hash join on cur:\n$plan")
-    // the only nested-loop join left is the popular-fallback fan-out
-    // (needFill × top-k populars) — a deliberate bounded broadcast with
-    // no equi-key; its condition references `item`, never the pair table
-    val bnlj = plan.linesIterator.filter(_.contains("BroadcastNestedLoopJoin")).toSeq
-    assert(bnlj.forall(_.contains("item")), s"unexpected BNLJ:\n${bnlj.mkString("\n")}")
+    k0.history.write.parquet(histDir)
+    val k = k0.copy(history = spark.read.parquet(histDir))
+    val ev = Seq((7L, "cur"), (8L, "cur")).toDF("user", "item")
+    def isHistory(p: SparkPlan) = p match {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.toString.contains(histDir))
+      case _ => false
+    }
+    // the history table below `p`, not counting what comes out of its join
+    def reachesHistory(p: SparkPlan): Boolean = p match {
+      case _: BroadcastHashJoinExec => false
+      case _ => isHistory(p) || p.children.exists(reachesHistory)
+    }
+    withAuditConf {
+      Seq(Recommender.recommend(ev, k, LinearModel.default),
+        Recommender.candidates(ev, k)).foreach { df =>
+        val plan = df.queryExecution.executedPlan
+        assert(plan.collect { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
+          s"nested-loop join:\n$plan")
+        val joins = plan.collect { case j: BroadcastHashJoinExec => j }
+        assert(joins.size == 1, s"expected one hash join:\n$plan")
+        val j = joins.head
+        assert(j.buildSide == BuildRight && j.joinType == Inner, s"$j")
+        assert(j.leftKeys.flatMap(_.references.map(_.name)) == Seq("user") &&
+          j.rightKeys.flatMap(_.references.map(_.name)) == Seq("user"), s"$j")
+        // build side = the batch keys; streamed side = history, unexchanged
+        assert(j.right.output.map(_.name).toSet == Set("user", "cur"), s"$j")
+        assert(reachesHistory(j.left), s"history is not the streamed side:\n$plan")
+        val exchanges = plan.collect { case e: Exchange => e }
+        assert(exchanges.forall(e => !e.children.exists(reachesHistory)),
+          s"history under an Exchange:\n$plan")
+      }
+    }
+  }
+
+  test("recommend and candidates equal the DataFrame reference on random KBs (bit-equal failProb)") {
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(16).withWorkers(1),
+      Prop.forAllNoShrink(RecommenderSpec.genCase)(matchesReference))
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
+  private def matchesReference(c: RecommenderSpec.Case): Prop = {
+    import spark.implicits._
+    val k = kb(c.hist, c.pairs, c.popular, c.profile)
+    val ev = c.keys.toDF("user", "item")
+    def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    }).sortBy(_.mkString("\u0000"))
+    val ref = RecommenderSpec.Reference
+    val refCands = ref.candidates(ev, k)
+    Prop.all(
+      (rows(Recommender.candidates(ev, k)) == rows(refCands)) :| "candidates",
+      (rows(Recommender.scoreCandidates(refCands, k, c.model)) ==
+        rows(ref.scoreCandidates(refCands, k, c.model))) :| "scoreCandidates",
+      (rows(Recommender.recommend(ev, k, c.model)) ==
+        rows(ref.recommend(ev, k, c.model))) :| "recommend")
+  }
+
+  test("a micro-batch runs at most 5 Spark jobs; the KB cuts are read once per Kb") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // every row read from the pair, popular or profile table counts here
+    val cutReads = sc.longAccumulator("cut reads")
+    val touch = udf { (x: Double) => cutReads.add(1); x }
+    val k0 = kb(
+      hist = Seq(histRow(7L, "cF1", (1, 0, 0, 0, 2), 1), histRow(7L, "cP", (2, 1, 1, 0, 0), 0)),
+      pairs = Seq(("cur", "cooc1", 10L), ("cooc2", "cur", 8L)),
+      popular = Seq("p1", "p2", "cP"))
+    val k = k0.copy(
+      pairCounts = k0.pairCounts.withColumn("cnt", touch(col("cnt"))),
+      popular = k0.popular.withColumn("popRank", touch(col("popRank"))),
+      avgProfile = k0.avgProfile.withColumn("total", touch(col("total"))))
+    val ev = Seq((7L, "cur"), (8L, "cur"), (7L, "cur")).toDF("user", "item")
+    val out = java.nio.file.Files.createTempDirectory("graft_floor").toString
+    val tag = "recommender-job-floor"
+    val metrics = Harness.metrics(spark)
+    def batch(): Int = {
+      metrics.take(sc)
+      sc.setJobDescription(tag)
+      try Recommender.recommend(ev, k, LinearModel.default)
+        .write.mode("overwrite").json(out)
+      finally sc.setJobDescription(null)
+      metrics.take(sc).jobs.count(_.description == tag)
+    }
+    try {
+      batch()
+      val read = cutReads.sum
+      assert(read > 0, "the first batch did not read the KB cuts")
+      val jobs = batch()
+      assert(jobs <= 5, s"$jobs jobs per batch")
+      assert(cutReads.sum == read, "the second batch read the KB cuts again")
+    } finally sc.removeSparkListener(metrics)
   }
 
   test("30/70 blending for retake candidates, pure profile for cold ones (ST6)") {
@@ -237,7 +336,7 @@ class RecommenderSpec extends SparkSpec {
       .forall(w => !w.isNaN && !w.isInfinite))
     ModelRegistry.write(spark, s"$dir/model", m)
     assert(ModelRegistry.read(spark, s"$dir/model") == m)
-    // scoreCol arithmetic matches the scalar path bit-for-bit
+    // scoreCol arithmetic matches the scalar path bit for bit
     import spark.implicits._
     val st = graft.streaming.ScoringStream.EventState(3, 1, 0, 2, 1, 7)
     val viaCol = Seq((3L, 1L, 0L, 2L, 1L, 7L))
@@ -247,6 +346,167 @@ class RecommenderSpec extends SparkSpec {
         org.apache.spark.sql.functions.col("s"), org.apache.spark.sql.functions.col("e"),
         org.apache.spark.sql.functions.col("t")).as("p"))
       .head().getDouble(0)
-    assert(math.abs(viaCol - m.score(st)) < 1e-15)
+    assert(viaCol == m.score(st))
+  }
+}
+
+object RecommenderSpec {
+
+  type HistRow = (Long, String, Long, Long, Long, Long, Long, Long, java.lang.Integer)
+
+  /** A small random KB, a batch of (user, item) events and scorer weights. */
+  final case class Case(hist: Seq[HistRow], pairs: Seq[(String, String, Long)],
+      popular: Seq[String], profile: (Double, Double, Double, Double, Double, Double),
+      keys: Seq[(Long, String)], model: LinearModel)
+
+  private val items = (0 until 12).map(i => s"c$i")
+  private val counter = Gen.choose(0L, 3L)
+
+  /** Users 1-4 may have history, user 5 never does; truth is 0, 1 or
+    * null; pairs include self-pairs, both orientations of one pair, and
+    * sometimes more than the 50 the cut keeps; populars overlap history
+    * items and the current items.
+    */
+  val genCase: Gen[Case] = for {
+    histKeys <- Gen.someOf(for (u <- 1L to 4L; i <- items) yield (u, i))
+    hist <- Gen.sequence[Seq[HistRow], HistRow](histKeys.toSeq.map { case (u, i) =>
+      for {
+        c <- Gen.listOfN(5, counter)
+        truth <- Gen.oneOf[java.lang.Integer](0, 1, null)
+      } yield (u, i, c(0), c(1), c(2), c(3), c(4), c.sum, truth)
+    })
+    nPairs <- Gen.frequency(4 -> Gen.choose(0, 20), 1 -> Gen.choose(45, 70))
+    pairs <- Gen.listOfN(nPairs, for {
+      a <- Gen.oneOf(items)
+      b <- Gen.frequency(1 -> Gen.const(a), 6 -> Gen.oneOf(items))
+      cnt <- Gen.choose(1L, 6L)
+    } yield (a, b, cnt))
+    rank <- Gen.listOfN(items.size, Gen.choose(0, 1000))
+    nPopular <- Gen.choose(0, 10)
+    profile <- Gen.listOfN(6, Gen.choose(0.0, 20.0))
+    keys <- Gen.nonEmptyListOf(for {
+      u <- Gen.choose(1L, 5L)
+      i <- Gen.oneOf(items)
+    } yield (u, i)).map(_.take(12))
+    w <- Gen.listOfN(7, Gen.choose(-1.0, 1.0))
+  } yield Case(hist, pairs, items.zip(rank).sortBy(_._2).map(_._1).take(nPopular),
+    (profile(0), profile(1), profile(2), profile(3), profile(4), profile(5)),
+    keys, LinearModel(w(0), w(1), w(2), w(3), w(4), w(5), w(6)))
+
+  /** The DataFrame formulation `Recommender` had before the grouped
+    * kernel, kept verbatim as the reference the kernel must equal.
+    */
+  object Reference {
+    private val counterCols =
+      Seq("nClick", "nView", "nPurchase", "nSignup", "nError", "total")
+
+    def candidates(events: DataFrame, kb: Kb): DataFrame = {
+      val ev = broadcast(
+        events.select(col("user"), col("item").as("cur")).distinct())
+      val failed = kb.history.filter(col("truth") === 1)
+        .select(col("user"), col("item"))
+      val passed = kb.history.filter(col("truth") === 0)
+        .select(col("user"), col("item").as("cand"))
+
+      // 1. failed-history retry (run_consumer.py:239-242)
+      val fromFailed = failed.join(ev, "user")
+        .filter(col("item") =!= col("cur"))
+        .select(col("user"), col("cur"), col("item").as("cand"),
+          lit(0).as("pri"))
+
+      // 2. co-occurrence: top-50 pairs involving the current item, both
+      // directions, minus already-passed (run_consumer.py:245-250).
+      // Symmetrize the pair table FIRST and equi-join on `cur`: the
+      // OR-predicate formulation (cur === i1 || cur === i2) has no
+      // single equi-key, so Catalyst plans BroadcastNestedLoopJoin —
+      // bounded here by the top-50 cut, but the union-of-directions
+      // form stays hash-joinable for a pair table of any size.
+      val top50 = kb.pairCounts
+        .orderBy(col("cnt").desc, col("i1"), col("i2")).limit(50)
+      val bothDirs = broadcast(
+        top50.select(col("i1").as("cur"), col("i2").as("cand"))
+          .unionByName(top50.select(col("i2").as("cur"), col("i1").as("cand"))))
+      val cooc = ev.join(bothDirs, "cur")
+        .filter(col("cand") =!= col("cur"))
+        .join(passed, Seq("user", "cand"), "left_anti")
+        .select(col("user"), col("cur"), col("cand"), lit(1).as("pri"))
+
+      // distinct candidates so far, keeping the strongest source
+      val base = fromFailed.unionByName(cooc)
+        .groupBy(col("user"), col("cur"), col("cand"))
+        .agg(min(col("pri")).as("pri"))
+
+      // 3. popular fallback (run_consumer.py:253-258): only for keys with
+      // < 5 candidates; walk populars in rank order, adding NEW un-passed
+      // items until the set holds 10 — i.e. admit the first (10 - n) new
+      // eligible populars.
+      val baseCnt = base.groupBy(col("user"), col("cur"))
+        .agg(count(lit(1)).as("n"))
+      val needFill = ev.join(baseCnt, Seq("user", "cur"), "left")
+        .na.fill(0L, Seq("n")).filter(col("n") < 5)
+      val popW = Window.partitionBy(col("user"), col("cur")).orderBy(col("popRank"))
+      // deliberate BroadcastNestedLoopJoin: a fan-out of the top-k popular
+      // cut against every under-filled key has no equi-key by nature; the
+      // broadcast side is a bounded top-k, so the plan stays safe at scale
+      val fromPopular = needFill.join(broadcast(kb.popular))
+        .filter(col("item") =!= col("cur"))
+        .select(col("user"), col("cur"), col("item").as("cand"),
+          col("popRank"), col("n"))
+        .join(passed, Seq("user", "cand"), "left_anti")
+        .join(base.select(col("user"), col("cur"), col("cand")),
+          Seq("user", "cur", "cand"), "left_anti")
+        .withColumn("fillRank", row_number().over(popW))
+        .filter(col("fillRank") <= lit(10) - col("n"))
+        .select(col("user"), col("cur"), col("cand"), lit(2).as("pri"))
+
+      // deterministic cap at 15 (the reference's [:15], de-hash-ordered)
+      val capW = Window.partitionBy(col("user"), col("cur"))
+        .orderBy(col("pri"), col("cand"))
+      base.unionByName(fromPopular)
+        .withColumn("capRank", row_number().over(capW))
+        .filter(col("capRank") <= 15)
+        .drop("capRank")
+    }
+
+    /** B2 scoring with 30/70 blending (`run_consumer.py:261-295`): a
+      * candidate the user has prior behavior on (total > 0) scores the
+      * vector 0.3·history + 0.7·avgProfile; a cold candidate scores the
+      * pure average-success profile. Output adds (isRetake, failProb).
+      */
+    def scoreCandidates(cands: DataFrame, kb: Kb, model: LinearModel): DataFrame = {
+      val hist = kb.history.select(
+        col("user") +: col("item").as("cand") +:
+          counterCols.map(c => col(c).as(s"h_$c")): _*)
+      val prof = broadcast(kb.avgProfile.select(
+        counterCols.map(c => col(c).as(s"p_$c")): _*))
+      val blended = cands
+        .join(hist, Seq("user", "cand"), "left")
+        .crossJoin(prof)
+        .withColumn("isRetake", coalesce(col("h_total"), lit(0L)) > 0)
+      val feat = counterCols.map { c =>
+        when(col("isRetake"), lit(0.3) * col(s"h_$c") + lit(0.7) * col(s"p_$c"))
+          .otherwise(col(s"p_$c")).as(s"f_$c")
+      }
+      val withFeat = blended.select(
+        (Seq(col("user"), col("cur"), col("cand"), col("pri"), col("isRetake")) ++ feat): _*)
+      withFeat.withColumn("failProb",
+        model.scoreCol(col("f_nClick"), col("f_nView"), col("f_nPurchase"),
+          col("f_nSignup"), col("f_nError"), col("f_total")))
+    }
+
+    /** The full B1+B2 pass: top-`k` lowest-fail-probability candidates
+      * per (user, current item), rank 1 = safest bet
+      * (`run_consumer.py:297-303`).
+      */
+    def recommend(events: DataFrame, kb: Kb, model: LinearModel,
+        k: Int = 5): DataFrame = {
+      val w = Window.partitionBy(col("user"), col("cur"))
+        .orderBy(col("failProb"), col("cand"))
+      scoreCandidates(candidates(events, kb), kb, model)
+        .withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= k)
+        .select(col("user"), col("cur"), col("rank"), col("cand"),
+          col("failProb"), col("isRetake"))
+    }
   }
 }
