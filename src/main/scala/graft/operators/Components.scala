@@ -19,15 +19,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object Components {
 
-  /** Eagerly free a `localCheckpoint(true)`d round: `Dataset.unpersist`
-    * does NOT reach checkpoint blocks (they bypass the CacheManager),
-    * so unpersist the materialized RDD itself; otherwise every round's
-    * blocks linger until the ContextCleaner GCs the old reference.
-    */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    org.apache.spark.sql.graft.shims.checkpointedRdd(df)
-      .foreach(_.unpersist(blocking = false))
-
   /** Round-15 note (tried TWICE, measured, REVERTED): broadcasting the
     * per-round vertex-sized tables here (min-label table, star halves'
     * per-node minima — the Catalog kernels' Pregel shape, guide §3.1)
@@ -46,8 +37,7 @@ object Components {
     * sides of every star join are small here, so the shuffle is the
     * cheaper exchange. At a scale where the edge stream dwarfs the
     * vertex tables the broadcast becomes right again; it must return
-    * behind the Catalog's bcastIfSmall two-tier gate, not
-    * unconditionally.
+    * behind the two-tier [[Rounds.gate]], not unconditionally.
     */
 
   /** Min-label propagation. Each round: push every node's label across
@@ -57,41 +47,26 @@ object Components {
     * @return (node, label) — label = min node id of the component
     */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
-    val p = pairs.select(col("d1"), col("d2"))
-    val edges = p.union(p.select(col("d2").as("d1"), col("d1").as("d2")))
+    val edges = Rounds.symmetric(pairs.select(col("d1"), col("d2")), "d1", "d2")
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // localCheckpoint (not persist): an iterative DataFrame loop
-      // grows the LOGICAL plan every round even when the physical
-      // result is cached — analysis/optimization of the compounding
-      // self-referencing tree OOMs the driver after a few rounds.
-      // localCheckpoint truncates lineage to the materialized blocks,
-      // so round k's plan is one join deep regardless of k.
-      var labels = edges.select(col("d1").as("node")).distinct()
+      val init = edges.select(col("d1").as("node")).distinct()
         .withColumn("lbl", col("node"))
         .localCheckpoint(true)
       // Round-15 note (measured, kept as-is): broadcasting the
       // vertex-sized label table here LOST ~7% on q62 in a 5-rep idle
       // A/B — see the object-level revert note.
-      var round = 0
-      var converged = false
-      while (!converged && round < maxRounds) {
+      Rounds.converge(init, maxRounds, "label propagation") { (labels, _) =>
         val viaEdge = edges.as("e")
           .join(labels.as("l"), col("e.d2") === col("l.node"))
           .select(col("e.d1").as("node"), col("l.lbl"))
-        val next = labels.unionByName(viaEdge)
+        labels.unionByName(viaEdge)
           .groupBy(col("node")).agg(min(col("lbl")).as("lbl"))
-          .localCheckpoint(true)
-        val changed = next.as("n")
+      } { (labels, next) =>
+        next.as("n")
           .join(labels.as("o"), col("n.node") === col("o.node"))
-          .filter(col("n.lbl") =!= col("o.lbl")).count()
-        freeCheckpoint(labels) // previous round's checkpoint blocks
-        labels = next
-        converged = changed == 0
-        round += 1
-      }
-      require(converged, s"label propagation did not converge in $round rounds")
-      labels
+          .filter(col("n.lbl") =!= col("o.lbl")).count() == 0
+      }._1
     } finally edges.unpersist()
   }
 
@@ -127,7 +102,7 @@ object Components {
     // broadcast variant was measured and reverted, see the
     // object-level round-15 note.
     def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
+      val sym = Rounds.symmetric(e, "u", "v")
       val m = sym.groupBy(col("u"))
         .agg(least(min(col("v")), first(col("u"))).as("m"))
       sym.join(m, "u")
@@ -143,10 +118,8 @@ object Components {
         .unionByName(joined.select(col("u"), col("m").as("v")).distinct()) // {u, m}
     }
 
-    var edges = canon(pairs.select(col("d1").as("u"), col("d2").as("v")))
+    val init = canon(pairs.select(col("d1").as("u"), col("d2").as("v")))
       .localCheckpoint(true)
-    var round = 0
-    var converged = false
     // Round-14 (guide §1/§7): the loop is driver-gap-bound at bench
     // scale — q284 profiled as 135 jobs of ~30 ms each — so the
     // convergence protocol is trimmed from three jobs a round
@@ -158,27 +131,23 @@ object Components {
     // (union → groupBy(u,v) → any count≠2 ⇒ not equal; both inputs are
     // DISTINCT canonical sets, so multiset arithmetic is exact) instead
     // of exceptAll's two-sided except plan.
-    var prevCount = edges.count()
-    while (!converged && round < maxRounds) {
-      val ls = canon(largeStar(edges)).localCheckpoint(true)
-      val next = canon(smallStar(ls)).localCheckpoint(true)
-      freeCheckpoint(ls)
+    var prevCount = init.count()
+    val (edges, rounds) = Rounds.converge(init, maxRounds, "star contraction") {
+      (e, stage) => canon(smallStar(stage(canon(largeStar(e)))))
+    } { (e, next) =>
       val nextCount = next.count()
       // fixed point = identical canonical edge sets (both are distinct)
-      converged = nextCount == prevCount &&
-        next.unionByName(edges).groupBy(col("u"), col("v"))
+      val same = nextCount == prevCount &&
+        next.unionByName(e).groupBy(col("u"), col("v"))
           .agg(count(lit(1)).as("n")).filter(col("n") =!= 2).isEmpty
-      freeCheckpoint(edges)
-      edges = next
       prevCount = nextCount
-      round += 1
+      same
     }
-    require(converged, s"star contraction did not converge in $round rounds")
     // at the fixed point every edge is (node → component min); roots
     // appear only on the v side and label themselves
     val labels = edges.select(col("u").as("node"), col("v").as("lbl"))
       .unionByName(edges.select(col("v").as("node"), col("v").as("lbl")))
       .distinct()
-    (labels, round)
+    (labels, rounds)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.Rounds
 
 /** One named query: the Spark-side plan builder plus (when the semantics are
   * ANSI-SQL-expressible) an equivalent DuckDB SQL string for the driver's
@@ -315,74 +316,6 @@ object Catalog {
         .agg(count(lit(1)).as("co"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-
-  /** Size-gated broadcast hint for the vertex-sized tables of the
-    * iterative graph kernels (q85 ranks, q290 proposals/gone, q294
-    * scores, q300 frontiers) — the Pregel-style hinted shape: the
-    * loop-invariant adjacency streams from its checkpoint and never
-    * re-shuffles while the |V|-sized side broadcasts (guide §3.1).
-    * Round 14 shipped the hints UNCONDITIONALLY with a comment saying
-    * to drop them "once |V| outgrows the driver" (VERDICT r14 #4) —
-    * this gate automates that: callers pass the measured row count of
-    * the kernel's materialized edge/vertex checkpoint (an upper bound
-    * on every per-round broadcast side, one cheap count job per query
-    * construction), and the hint applies only under
-    * SPARK_GRAFT_BCAST_MAX_ROWS (default 8M rows ≈ low hundreds of MB
-    * as a built relation — inside Spark's 8 GB / 512M-row broadcast
-    * cap with an order of magnitude of headroom). Past the limit the
-    * plan degrades to the key-partitioned join with no code edit —
-    * the shape these queries had before round 14. The gate stays
-    * wide open at every fixture SF (|E_sym| ≤ ~600k at sf0.1), so
-    * bench/oracle plans keep the hinted shape deterministically.
-    *
-    * TWO TIERS so the gate is free where it cannot bind: a fixture
-    * whose total input bytes sit under [[VertexBcastInputBytes]] (8 GB
-    * — vertex tables of an 8 GB input are at most tens of MB)
-    * broadcasts on the metadata check alone; only past that does the
-    * precise row count run (the `rows` thunk is by-name and callers
-    * pass a lazy count, so the extra job exists only at the scale
-    * where it is noise — the first A/B showed the unconditional count
-    * costing 0.1-0.26 s on 1.5-3 s queries at sf0.1). An unwalkable
-    * path (object store at cluster scale) counts as NOT small, falling
-    * through to the precise gate — never the other way.
-    *
-    * An EXPLICITLY set SPARK_GRAFT_BCAST_MAX_ROWS skips the byte tier,
-    * and 0 never broadcasts: the variable is the kill switch for A/Bs,
-    * and at fixture scale the byte tier would otherwise always answer.
-    */
-  private val vertexBcastMaxRows: Option[Long] =
-    sys.env.get("SPARK_GRAFT_BCAST_MAX_ROWS").map(_.toLong)
-
-  private val VertexBcastInputBytes: Long = 8L << 30
-  private val VertexBcastDefaultMaxRows: Long = 8000000L
-
-  private val fixtureBytesCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  private def fixtureBytes(dir: String): Long =
-    fixtureBytesCache.getOrElseUpdate(dir, {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) Option(f.listFiles).map(_.map(walk).sum).getOrElse(0L)
-        else f.length
-      val root = new java.io.File(dir)
-      if (root.exists) walk(root) else Long.MaxValue
-    })
-
-  /** The [[bcastIfSmall]] decision. `maxRows` is the explicitly set
-    * row limit, if any; both thunks run only when the decision needs
-    * them.
-    */
-  private[graft] def vertexBcast(maxRows: Option[Long], inputBytes: => Long,
-      rows: => Long): Boolean = maxRows match {
-    case Some(max) => max > 0 && rows <= max
-    case None => inputBytes <= VertexBcastInputBytes ||
-      rows <= VertexBcastDefaultMaxRows
-  }
-
-  private def bcastIfSmall(df: DataFrame, dir: String,
-      rows: => Long): DataFrame =
-    if (vertexBcast(vertexBcastMaxRows, fixtureBytes(dir), rows)) broadcast(df)
-    else df
 
   /** J4 self-join co-occurrence (course pairs, train_module.py:397-405):
     * distinct (order, part) → equi-join on order + theta (`<`) dedup →
@@ -1235,15 +1168,14 @@ object Catalog {
       // partitioning-reuse variant was SLOWER because AQE hides cached
       // outputPartitioning and the columnar cache write costs more
       // than the saved exchange). At 100 TB checkpoint to reliable
-      // storage; the rank broadcast is size-gated via [[bcastIfSmall]]
-      // (round 15, VERDICT r14 #4) so the join degrades to the
-      // key-partitioned shape automatically once |V| outgrows the
-      // limit — no code edit at scale.
-      val edges = pairs.unionByName(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
+      // storage; the rank broadcast is size-gated via [[Rounds.gate]]
+      // (round 15, VERDICT r14 #4; |E_sym| ≥ |V| bounds it) so the join
+      // degrades to the key-partitioned shape automatically once |V|
+      // outgrows the limit — no code edit at scale.
+      val edges = Rounds.symmetric(pairs, "src", "dst")
         .repartition(s.sparkContext.defaultParallelism, col("dst"))
         .localCheckpoint(true)
-      lazy val nE = edges.count() // ≥ |V|: gates the per-round rank broadcast
+      val bc = Rounds.gate(dir, edges.count())
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .select(col("src").as("v"), col("deg"))
       var ranks = deg.select(col("v"), lit(1000000L).as("pr"))
@@ -1251,7 +1183,7 @@ object Catalog {
         val share = ranks.join(deg, "v")
           .select(col("v").as("src"),
             expr("(850000 * (pr div deg)) div 1000000").as("contrib"))
-        ranks = edges.join(bcastIfSmall(share, dir, nE), "src")
+        ranks = edges.join(bc(share), "src")
           .groupBy(col("dst")).agg(sum(col("contrib")).as("s"))
           .select(col("dst").as("v"), (lit(150000L) + col("s")).as("pr"))
       }
@@ -1786,9 +1718,7 @@ object Catalog {
       val ew = coPairCounts(s, dir)
         .select(col("p1").as("u"), col("p2").as("v"),
           expr("CAST(1 + 100 div co AS BIGINT)").as("w"))
-      val edges = ew.unionByName(
-        ew.select(col("v").as("u"), col("u").as("v"), col("w")))
-        .localCheckpoint(true)
+      val edges = Rounds.symmetric(ew, "u", "v").localCheckpoint(true)
       var dist = edges.select(col("u").as("node")).distinct()
         .orderBy(col("node")).limit(3)
         .select(col("node").as("landmark"), col("node"), lit(0L).as("d"))
@@ -1872,10 +1802,10 @@ object Catalog {
   val q252Modularity: QuerySpec = QuerySpec(
     fn = (s, dir) => {
       val pairs = coPairCounts(s, dir).select(col("p1"), col("p2"))
-      val edges = pairs.select(col("p1").as("src"), col("p2").as("dst"))
-        .unionByName(pairs.select(col("p2").as("src"), col("p1").as("dst")))
+      val edges = Rounds.symmetric(
+          pairs.select(col("p1").as("src"), col("p2").as("dst")), "src", "dst")
         .localCheckpoint(true)
-      val labels = labelPropagation(edges).localCheckpoint(true)
+      val labels = labelPropagation(edges, dir).localCheckpoint(true)
       val m = pairs.agg(count(lit(1)).as("m"))
       val dc = edges.groupBy(col("src"))
         .agg(count(lit(1)).as("deg"))
@@ -1993,9 +1923,8 @@ object Catalog {
     fn = (s, dir) => {
       val pc = coPairCounts(s, dir)
       val pairs = pc.select(col("p1"), col("p2"))
-      val adj = pc.select(col("p1").as("z"), col("p2").as("nb"), col("co"))
-        .unionByName(
-          pc.select(col("p2").as("z"), col("p1").as("nb"), col("co")))
+      val adj = Rounds.symmetric(
+          pc.select(col("p1").as("z"), col("p2").as("nb"), col("co")), "z", "nb")
         .localCheckpoint(true)
       val deg = adj.groupBy(col("z")).agg(count(lit(1)).as("deg"))
       val knn = graft.plans.GroupTopK.topKPerKey(
@@ -3819,17 +3748,10 @@ object Catalog {
       // size-gated hint as the iterative kernels; past the gate the
       // joins degrade to the key-partitioned shape)
       val cnt = op.groupBy(col("l_partkey")).agg(count(lit(1)).as("n"))
-      lazy val nParts = cnt.count()
-      val co = coPairCounts(s, dir)
-      val sym = co.unionAll(
-        co.select(col("p2").as("p1"), col("p1").as("p2"), col("co")))
-      val scored = sym
-        .join(bcastIfSmall(
-          cnt.select(col("l_partkey").as("p1"), col("n").as("n1")),
-          dir, nParts), "p1")
-        .join(bcastIfSmall(
-          cnt.select(col("l_partkey").as("p2"), col("n").as("n2")),
-          dir, nParts), "p2")
+      val bc = Rounds.gate(dir, cnt.count())
+      val scored = Rounds.symmetric(coPairCounts(s, dir), "p1", "p2")
+        .join(bc(cnt.select(col("l_partkey").as("p1"), col("n").as("n1"))), "p1")
+        .join(bc(cnt.select(col("l_partkey").as("p2"), col("n").as("n2"))), "p2")
         .withColumn("jscore", expr("(1000000 * co) div (n1 + n2 - co)"))
       val w = Window.partitionBy(col("p1"))
         .orderBy(col("jscore").desc, col("co").desc, col("p2"))
@@ -6032,13 +5954,15 @@ object Catalog {
   /** Three synchronous label-propagation rounds over a symmetric
     * (src, dst) edge list, shared by q164 and q252: every node adopts
     * its neighbors' most frequent previous-round label, ties to the
-    * smallest label. Returns (v, lbl).
+    * smallest label. The vertex-sized label table broadcasts through
+    * [[Rounds.gate]] (|edges| ≥ |V| bounds it). Returns (v, lbl).
     */
-  private def labelPropagation(edges: DataFrame): DataFrame =
+  private def labelPropagation(edges: DataFrame, dir: String): DataFrame = {
+    val bc = Rounds.gate(dir, edges.count())
     (1 to 3).foldLeft(edges.select(col("src").as("v")).distinct()
         .select(col("v"), col("v").as("lbl"))) { (labels, _) =>
       edges
-        .join(broadcast(labels.select(col("v").as("dst"), col("lbl"))), "dst")
+        .join(bc(labels.select(col("v").as("dst"), col("lbl"))), "dst")
         .groupBy(col("src"), col("lbl"))
         .agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(
@@ -6047,6 +5971,7 @@ object Catalog {
         .filter(col("rn") === 1)
         .select(col("src").as("v"), col("lbl"))
     }
+  }
 
   /** LABEL-PROPAGATION community detection (Raghavan et al. 2007)
     * over the part co-occurrence graph — the graph-family completion
@@ -6067,11 +5992,10 @@ object Catalog {
     fn = (s, dir) => {
       val pairs = coPairCounts(s, dir)
         .select(col("p1").as("src"), col("p2").as("dst"))
-      val edges = pairs.unionByName(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
+      val edges = Rounds.symmetric(pairs, "src", "dst")
         .repartition(s.sparkContext.defaultParallelism, col("src"))
         .localCheckpoint(true)
-      labelPropagation(edges)
+      labelPropagation(edges, dir)
         .select(col("v").as("part"), col("lbl").as("community"))
         .orderBy(col("part"))
     },
@@ -8013,7 +7937,7 @@ object Catalog {
     * endpoint — the q85 Pregel shape, the adjacency never re-shuffles;
     * score mass grows ~ d̄⁴ after two rounds (≈10¹² at mean degree
     * 10³) — DECIMAL(38,0) before 2^63 per the q109 rule. The explicit
-    * score-table broadcast is size-gated via [[bcastIfSmall]] (round
+    * score-table broadcast is size-gated via [[Rounds.gate]] (round
     * 15): at corpus scale — where a customer-sized score table would
     * overwhelm the driver — the join degrades to a shuffle join with
     * the same edge-side plan automatically, no code edit.
@@ -8025,14 +7949,10 @@ object Catalog {
         .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
         .distinct()
         .localCheckpoint(true)
-      // every half-round score table is vertex-sized (≤ |edges| rows):
-      // one count of the checkpointed edge list gates all four
-      // broadcasts (round 15, VERDICT r14 #4 — the scaladoc's "drop
-      // the hint at corpus scale" is now automatic past
-      // SPARK_GRAFT_BCAST_MAX_ROWS)
-      lazy val nE = edges.count()
+      // every half-round score table is vertex-sized (≤ |edges| rows)
+      val bc = Rounds.gate(dir, edges.count())
       def half(scores: DataFrame, from: String, to: String): DataFrame =
-        edges.join(bcastIfSmall(scores, dir, nE), from)
+        edges.join(bc(scores), from)
           .groupBy(col(to)).agg(sum(col("s")).as("s"))
       val a1 = edges.groupBy(col("p")).agg(count(lit(1)).as("s")) // h₀ = 1
       val h1 = half(a1, "p", "c")
@@ -9078,9 +8998,7 @@ object Catalog {
     fn = (s, dir) => {
       val pairs = coPairCounts(s, dir)
         .select(col("p1").as("src"), col("p2").as("dst"))
-      val edges = pairs.unionByName(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint(true)
+      val edges = Rounds.symmetric(pairs, "src", "dst").localCheckpoint(true)
       val landmarks = edges.select(col("src").as("node")).distinct()
         .orderBy(col("node")).limit(4)
         .select(col("node").as("landmark"), col("node"),
@@ -9607,19 +9525,15 @@ object Catalog {
   val q290GreedyMatching: QuerySpec = QuerySpec(
     fn = (s, dir) => {
       val e0 = coEdges(s, dir).localCheckpoint(true) // u < v
-      // every per-round proposal/gone table has ≤ |V| ≤ 2|E₀| rows:
-      // one count of the checkpointed edge list gates all 12 broadcasts
-      // (round 15, VERDICT r14 #4 — past SPARK_GRAFT_BCAST_MAX_ROWS
-      // the rounds degrade to the pre-r14 key-partitioned shape)
-      lazy val nE = e0.count()
+      // every per-round proposal/gone table has ≤ |V| ≤ 2|E₀| rows
+      val bc = Rounds.gate(dir, e0.count())
       var e = e0
       var out = Vector.empty[DataFrame]
       for (r <- 1 to 4) {
-        val sym = e.select(col("u").as("a"), col("v").as("b"))
-          .unionByName(e.select(col("v").as("a"), col("u").as("b")))
-        val prop = sym.groupBy(col("a")).agg(min(col("b")).as("p"))
+        val prop = Rounds.symmetric(e.select(col("u").as("a"), col("v").as("b")), "a", "b")
+          .groupBy(col("a")).agg(min(col("b")).as("p"))
           .localCheckpoint(true)
-        val matched = prop.as("x").join(bcastIfSmall(prop.as("y"), dir, nE),
+        val matched = prop.as("x").join(bc(prop.as("y")),
             col("x.p") === col("y.a") && col("y.p") === col("x.a") &&
               col("x.a") < col("x.p"))
           .select(col("x.a").as("mu"), col("x.p").as("mv"))
@@ -9628,8 +9542,8 @@ object Catalog {
           col("mu").as("u"), col("mv").as("v"))
         val gone = matched.select(col("mu").as("x"))
           .unionByName(matched.select(col("mv").as("x")))
-        e = e.join(bcastIfSmall(gone.withColumnRenamed("x", "u"), dir, nE), Seq("u"), "left_anti")
-          .join(bcastIfSmall(gone.withColumnRenamed("x", "v"), dir, nE), Seq("v"), "left_anti")
+        e = e.join(bc(gone.withColumnRenamed("x", "u")), Seq("u"), "left_anti")
+          .join(bc(gone.withColumnRenamed("x", "v")), Seq("v"), "left_anti")
           .select(col("u"), col("v"))
           .localCheckpoint(true)
       }
@@ -9742,7 +9656,7 @@ object Catalog {
     * the 64-partition edge list under a sort-merge join AND re-wrote
     * the whole reached set every round — 6.6 s; this shape 2.4 s,
     * plan 45 shuffle exchanges → 14. As with q85, the hints are
-    * size-gated via [[bcastIfSmall]] (round 15): once frontiers
+    * size-gated via [[Rounds.gate]] (round 15): once frontiers
     * outgrow the limit the join degrades to the old key-partitioned
     * shape automatically.
     * Three one-row argmax cuts; the oracle replays both chains
@@ -9753,14 +9667,9 @@ object Catalog {
     fn = (s, dir) => {
       val pairs = coPairCounts(s, dir)
         .select(col("p1").as("src"), col("p2").as("dst"))
-      val edges = pairs.unionByName(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint(true)
-      // frontier/visited are ≤ |V| ≤ |E_sym| rows: one count of the
-      // checkpointed adjacency gates every broadcast in both sweeps
-      // (round 15, VERDICT r14 #4 — past SPARK_GRAFT_BCAST_MAX_ROWS
-      // the sweeps degrade to the pre-r14 key-partitioned shape)
-      lazy val nE = edges.count()
+      val edges = Rounds.symmetric(pairs, "src", "dst").localCheckpoint(true)
+      // frontier/visited are ≤ |V| ≤ |E_sym| rows
+      val bc = Rounds.gate(dir, edges.count())
       def bfs(start: DataFrame): DataFrame = {
         var frontier = start.select(col("node"), lit(0L).as("dist"))
           .localCheckpoint(true)
@@ -9768,10 +9677,10 @@ object Catalog {
         for (r <- 1 to 6) {
           val reached = levels.map(_.select(col("node"))).reduce(_ unionByName _)
           val next = edges
-            .join(bcastIfSmall(frontier.select(col("node")), dir, nE),
+            .join(bc(frontier.select(col("node"))),
               col("node") === col("src"))
             .select(col("dst").as("node")).distinct()
-            .join(bcastIfSmall(reached, dir, nE), Seq("node"), "left_anti")
+            .join(bc(reached), Seq("node"), "left_anti")
             .withColumn("dist", lit(r.toLong))
             .localCheckpoint(true)
           levels = levels :+ next
@@ -10102,7 +10011,7 @@ object Catalog {
     * round is folded into the degree rollup (v₁(x) = |N(x)| exactly —
     * the old shape paid a distinct + a join to sum v₀ ≡ 1), the
     * walk-count vector broadcasts into the checkpointed adjacency each
-    * round (size-gated via [[bcastIfSmall]]: the edge list never
+    * round (size-gated via [[Rounds.gate]]: the edge list never
     * re-shuffles or re-sorts, the one kept shuffle per round is the
     * map-side-combined vertex sum), and the 4-way composition join
     * broadcasts the three later rounds instead of sort-merging four
@@ -10113,9 +10022,8 @@ object Catalog {
     */
   val q294KatzCentrality: QuerySpec = QuerySpec(
     fn = (s, dir) => {
-      val e = coEdges(s, dir)
-      val sym = e.select(col("u").as("x"), col("v").as("y"))
-        .unionByName(e.select(col("v").as("x"), col("u").as("y")))
+      val sym = Rounds.symmetric(
+          coEdges(s, dir).select(col("u").as("x"), col("v").as("y")), "x", "y")
         .localCheckpoint(true)
       // v1 IS the degree: the k=1 step of the recurrence sums v0 ≡ 1
       // over each neighborhood — one count rollup replaces the old
@@ -10123,16 +10031,16 @@ object Catalog {
       // every x in sym has deg ≥ 1, matching the oracle's v1 CTE)
       val v1 = sym.groupBy(col("x")).agg(count(lit(1)).as("v"))
         .localCheckpoint(true)
-      lazy val nV = v1.count() // |V|: gates every broadcast below
+      val bc = Rounds.gate(dir, v1.count()) // |V| bounds every broadcast below
       var vk = v1
       var rounds = Vector(vk.withColumnRenamed("v", "v1"))
       for (k <- 2 to 4) {
-        vk = sym.join(bcastIfSmall(vk.withColumnRenamed("x", "y"), dir, nV), Seq("y"))
+        vk = sym.join(bc(vk.withColumnRenamed("x", "y")), Seq("y"))
           .groupBy(col("x")).agg(sum(col("v")).as("v"))
           .localCheckpoint(true)
         rounds = rounds :+ vk.withColumnRenamed("v", s"v$k")
       }
-      val joined = rounds.reduce((a, b) => a.join(bcastIfSmall(b, dir, nV), Seq("x")))
+      val joined = rounds.reduce((a, b) => a.join(bc(b), Seq("x")))
       joined.select(col("x"), col("v1"), col("v2"), col("v3"), col("v4"),
           (col("v1") * 64L + col("v2") * 16L + col("v3") * 4L + col("v4"))
             .as("katz_x256"))
@@ -11094,9 +11002,8 @@ object Catalog {
   val q314WlRefinement: QuerySpec = QuerySpec(
     fn = (s, dir) => {
       val P = 2147483647L
-      val pairs = coPairCounts(s, dir).select(col("p1"), col("p2"))
-      val edges = pairs.select(col("p1").as("src"), col("p2").as("dst"))
-        .unionByName(pairs.select(col("p2").as("src"), col("p1").as("dst")))
+      val edges = Rounds.symmetric(coPairCounts(s, dir)
+          .select(col("p1").as("src"), col("p2").as("dst")), "src", "dst")
         .localCheckpoint(true) // feeds degree init + one join per round
       var colors = edges.groupBy(col("src").as("v"))
         .agg(count(lit(1)).as("c"))
@@ -11321,9 +11228,8 @@ object Catalog {
   val q317Anf: QuerySpec = QuerySpec(
     fn = (s, dir) => {
       val P = 2147483647L
-      val pairs = coPairCounts(s, dir).select(col("p1"), col("p2"))
-      val edges = pairs.select(col("p1").as("src"), col("p2").as("dst"))
-        .unionByName(pairs.select(col("p2").as("src"), col("p1").as("dst")))
+      val edges = Rounds.symmetric(coPairCounts(s, dir)
+          .select(col("p1").as("src"), col("p2").as("dst")), "src", "dst")
         .localCheckpoint(true)
       def maskExprs(idCol: String): Seq[org.apache.spark.sql.Column] =
         (0 until 8).map { e =>

@@ -249,7 +249,7 @@ object PipelineCatalog {
     // shingleSizes aggregation into blocking exchange jobs where the
     // SMJ pipeline overlapped it with the verify join. The shuffle-join
     // shape stays; at corpus scale the pair set outgrows |docs| and the
-    // broadcast becomes right — revisit with the bcastIfSmall gate if a
+    // broadcast becomes right — revisit with the Rounds.gate hint if a
     // bigger fixture ever shows it.
     cand
       .join(inv.as("ia"), col("d1") === col("ia.doc_id"))

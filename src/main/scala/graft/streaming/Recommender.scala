@@ -104,20 +104,17 @@ object Recommender {
     * user (`h` = its six counters as doubles, the flags are Catalyst's
     * `truth === 1`, `truth === 0` and `total > 0` with null as false),
     * or the key itself (`h` null), which always exists so that keys
-    * without history still form a group; its `toScore` holds the
-    * candidates to score when they are given (null otherwise).
+    * without history still form a group.
     */
   private[streaming] final case class KeyRow(user: Long, cur: String,
       item: String, failed: Boolean, passed: Boolean, retake: Boolean,
-      h: Seq[Double], toScore: Seq[Pick])
+      h: Seq[Double])
 
   private[streaming] final case class Candidate(user: Long, cur: String,
       cand: String, pri: Int)
 
-  private[streaming] final case class ScoredCandidate(user: Long, cur: String, cand: String,
-      pri: Int, isRetake: Boolean, f_nClick: Double, f_nView: Double,
-      f_nPurchase: Double, f_nSignup: Double, f_nError: Double,
-      f_total: Double, failProb: Double)
+  private final case class ScoredCandidate(cand: String, failProb: Double,
+      isRetake: Boolean)
 
   private[streaming] final case class Recommendation(user: Long, cur: String, rank: Int,
       cand: String, failProb: Double, isRetake: Boolean)
@@ -163,37 +160,34 @@ object Recommender {
     }
 
   /** B2 for one candidate (`run_consumer.py:261-295`). */
-  private def score(cuts: Cuts, model: LinearModel, user: Long, cur: String,
-      p: Pick, hist: Map[String, KeyRow]): ScoredCandidate = {
-    val h = hist.get(p.cand).filter(_.retake)
+  private def score(cuts: Cuts, model: LinearModel, cand: String,
+      hist: Map[String, KeyRow]): ScoredCandidate = {
+    val h = hist.get(cand).filter(_.retake)
     val f = h.fold(cuts.profile)(r =>
       counterCols.indices.map(i => 0.3 * r.h(i) + 0.7 * cuts.profile(i)))
-    ScoredCandidate(user, cur, p.cand, p.pri, h.isDefined,
-      f(0), f(1), f(2), f(3), f(4), f(5),
-      model.score(f(0), f(1), f(2), f(3), f(4), f(5)))
+    ScoredCandidate(cand, model.score(f(0), f(1), f(2), f(3), f(4), f(5)),
+      h.isDefined)
   }
 
-  private val toScoreType = ArrayType(Encoders.product[Pick].schema)
-
-  /** The grouped pass over `keys` (user, cur, toScore): history streams
-    * through a hash join on `user` with the keys' (user, cur) as the
-    * broadcast build side, the key rows are unioned in, and one
+  /** The grouped pass over the micro-batch's distinct (user, cur)
+    * keys: history streams through a hash join on `user` with the keys
+    * as the broadcast build side, the key rows are unioned in, and one
     * groupByKey hands `kernel` each key with its user's history as an
     * item-keyed map.
     */
-  private def byKey[T <: Product : TypeTag](keys: DataFrame, kb: Kb)(
+  private def byKey[T <: Product : TypeTag](events: DataFrame, kb: Kb)(
       kernel: (Cuts, KeyRow, Map[String, KeyRow]) => Seq[T]): Dataset[T] = {
     val cuts = kb.cuts
+    val keys = events.select(col("user"), col("item").as("cur")).distinct()
     val matched = kb.history.select(col("user"), col("item"),
         coalesce(col("truth") === 1, lit(false)).as("failed"),
         coalesce(col("truth") === 0, lit(false)).as("passed"),
         coalesce(col("total") > 0, lit(false)).as("retake"),
         array(counterCols.map(c => col(c).cast("double")): _*).as("h"))
-      .join(broadcast(keys.select(col("user"), col("cur"))), "user")
-      .withColumn("toScore", lit(null).cast(toScoreType))
+      .join(broadcast(keys), "user")
     val self = keys.select(col("user"), col("cur"), lit(null).cast(StringType).as("item"),
       lit(false).as("failed"), lit(false).as("passed"), lit(false).as("retake"),
-      lit(null).cast(ArrayType(DoubleType)).as("h"), col("toScore"))
+      lit(null).cast(ArrayType(DoubleType)).as("h"))
     matched.unionByName(self).as(Encoders.product[KeyRow])
       .groupByKey(r => (r.user, r.cur))(Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
       .flatMapGroups { (_, rows) =>
@@ -207,34 +201,15 @@ object Recommender {
       }(Encoders.product[T])
   }
 
-  /** The micro-batch's distinct (user, cur) keys, no candidates given. */
-  private def eventKeys(events: DataFrame): DataFrame =
-    events.select(col("user"), col("item").as("cur")).distinct()
-      .withColumn("toScore", lit(null).cast(toScoreType))
-
   /** B1 candidate generation. `events`: (user LONG, item STRING) — the
     * microbatch's (user, current-item) keys. Output: (user, cur, cand,
     * pri) with pri 0=failed-retry, 1=co-occurrence, 2=popular-fallback,
     * ≤ 15 rows per key.
     */
   def candidates(events: DataFrame, kb: Kb): DataFrame =
-    byKey(eventKeys(events), kb) { (cuts, key, hist) =>
+    byKey(events, kb) { (cuts, key, hist) =>
       pick(cuts, key.cur, hist).map(p => Candidate(key.user, key.cur, p.cand, p.pri))
     }.toDF()
-
-  /** B2 scoring with 30/70 blending (`run_consumer.py:261-295`): a
-    * candidate the user has prior behavior on (total > 0) scores the
-    * vector 0.3·history + 0.7·avgProfile; a cold candidate scores the
-    * pure average-success profile. `cands`: (user, cur, cand, pri).
-    * Output adds (isRetake, f_nClick..f_total, failProb).
-    */
-  def scoreCandidates(cands: DataFrame, kb: Kb, model: LinearModel): DataFrame = {
-    val keys = cands.groupBy(col("user"), col("cur"))
-      .agg(collect_list(struct(col("cand"), col("pri"))).as("toScore"))
-    byKey(keys, kb) { (cuts, key, hist) =>
-      key.toScore.map(p => score(cuts, model, key.user, key.cur, p, hist))
-    }.toDF()
-  }
 
   /** The full B1+B2 pass: top-`k` lowest-fail-probability candidates
     * per (user, current item), rank 1 = safest bet
@@ -243,12 +218,12 @@ object Recommender {
     */
   def recommend(events: DataFrame, kb: Kb, model: LinearModel,
       k: Int = 5): DataFrame =
-    byKey(eventKeys(events), kb) { (cuts, key, hist) =>
+    byKey(events, kb) { (cuts, key, hist) =>
       pick(cuts, key.cur, hist)
-        .map(p => score(cuts, model, key.user, key.cur, p, hist))
+        .map(p => score(cuts, model, p.cand, hist))
         .sorted(byFailProb).take(k).zipWithIndex
         .map { case (s, i) =>
-          Recommendation(s.user, s.cur, i + 1, s.cand, s.failProb, s.isRetake)
+          Recommendation(key.user, key.cur, i + 1, s.cand, s.failProb, s.isRetake)
         }
     }.toDF()
 

@@ -108,19 +108,6 @@ object ScoringStream {
         initialState.groupByKey(_._1).mapValues(_._2))(func)
   }
 
-  /** Minimal ST6 ranking helper (popular-set semi-join + top-5); the
-    * FULL reference semantics — failed-retry ∪ co-occurrence ∪ popular
-    * fallback candidate generation with 0.3/0.7 profile blending
-    * (`run_consumer.py:235-303`) — live in [[Recommender.recommend]].
-    */
-  def recommend(scored: DataFrame, popular: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user")).orderBy(col("failProb"), col("item"))
-    scored.join(broadcast(popular), Seq("item"), "left_semi")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-  }
-
   /** ST1 Kafka wiring (not exercised in tests — no broker in the test
     * env): subscribe + JSON parse, the reference's consumer config
     * (`run_consumer.py:159-165`) with startingOffsets=latest.

@@ -2,10 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import queries.Catalog.vertexBcast
+import operators.Rounds.vertexBcast
 
-/** The iterative graph kernels' broadcast gate ([[queries.Catalog]]'s
-  * `bcastIfSmall`): a small input broadcasts without a row count, and an
+/** The iterative graph kernels' broadcast gate ([[operators.Rounds]]'s
+  * `gate`): a small input broadcasts without a row count, and an
   * explicitly set SPARK_GRAFT_BCAST_MAX_ROWS overrides that tier — 0 is
   * the kill switch.
   */

@@ -9,18 +9,19 @@ import scala.jdk.CollectionConverters._
 
 /** Plan-level check of the vertex-broadcast kill switch (BcastGateSpec
   * covers the pure gate). The gate reads SPARK_GRAFT_BCAST_MAX_ROWS once
-  * per JVM, so each side runs `graft.Run q294_katz_centrality` with
-  * GRAFT_EXPLAIN=1 and the audit confs in a child JVM (this JVM's
-  * classpath and options) and counts BroadcastExchange in its plan.
+  * per JVM, so each side runs `graft.Run <query>` with GRAFT_EXPLAIN=1
+  * and the audit confs in a child JVM (this JVM's classpath and
+  * options) and counts BroadcastExchange in its plan — for q294's
+  * Katz rounds and q164's label propagation.
   */
 class BcastKillSwitchSpec extends SparkSpec {
 
-  private def broadcastExchanges(maxRows: Option[String]): Int = {
+  private def broadcastExchanges(query: String, maxRows: Option[String]): Int = {
     val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++
       ManagementFactory.getRuntimeMXBean.getInputArguments.asScala ++
       Seq("-Xmx1g") ++ Harness.auditConfs.map { case (k, v) => s"-D$k=$v" } ++
       Seq("-cp", System.getProperty("java.class.path"),
-        "graft.Run", "q294_katz_centrality", sf0001, "1")
+        "graft.Run", query, sf0001, "1")
     val log = File.createTempFile("graft_killswitch", ".log")
     try {
       val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true).redirectOutput(log)
@@ -41,9 +42,11 @@ class BcastKillSwitchSpec extends SparkSpec {
   }
 
   test("SPARK_GRAFT_BCAST_MAX_ROWS=0 removes q294's broadcasts; unset keeps them") {
-    val (off, on) = (broadcastExchanges(Some("0")), broadcastExchanges(None))
-    info(s"BroadcastExchange mentions: $off with =0, $on unset")
-    assert(off == 0)
-    assert(on > 0)
+    for (q <- Seq("q294_katz_centrality", "q164_label_propagation")) {
+      val (off, on) = (broadcastExchanges(q, Some("0")), broadcastExchanges(q, None))
+      info(s"$q BroadcastExchange mentions: $off with =0, $on unset")
+      assert(off == 0, q)
+      assert(on > 0, q)
+    }
   }
 }

@@ -56,7 +56,7 @@ class PlanBudgetSpec extends SparkSpec {
     // joins gone). q294 15->(10,6): the q300 Pregel treatment — seed
     // round folded into a degree rollup, walk vector broadcast into
     // the checkpointed adjacency, composition join broadcast (gated by
-    // bcastIfSmall). q296 37->39 / q305 41->43: the banded-LSH
+    // Rounds.gate). q296 37->39 / q305 41->43: the banded-LSH
     // candidate build moved into the shared persisted kernel — the
     // fingerprint counts the kernel's exchanges through its cache
     // relation (construction under cleared caches), slightly different
@@ -116,7 +116,7 @@ class PlanBudgetSpec extends SparkSpec {
     "q85_pagerank" -> ((12, 5)),
     "q86_bloom_decontamination" -> ((9, 2)),
     // q95 (12,0)->(10,1) round 15: the vertex-sized per-part count
-    // table broadcasts into both enrichment joins (bcastIfSmall gate;
+    // table broadcasts into both enrichment joins (Rounds.gate;
     // ReuseExchange dedupes the two hints into one broadcast build)
     // instead of sort-merging the symmetric pair table twice
     "q95_item_similarity" -> ((8, 1)),

@@ -148,11 +148,8 @@ class RecommenderSpec extends SparkSpec {
       case v => v
     }).sortBy(_.mkString("\u0000"))
     val ref = RecommenderSpec.Reference
-    val refCands = ref.candidates(ev, k)
     Prop.all(
-      (rows(Recommender.candidates(ev, k)) == rows(refCands)) :| "candidates",
-      (rows(Recommender.scoreCandidates(refCands, k, c.model)) ==
-        rows(ref.scoreCandidates(refCands, k, c.model))) :| "scoreCandidates",
+      (rows(Recommender.candidates(ev, k)) == rows(ref.candidates(ev, k))) :| "candidates",
       (rows(Recommender.recommend(ev, k, c.model)) ==
         rows(ref.recommend(ev, k, c.model))) :| "recommend")
   }
@@ -203,7 +200,8 @@ class RecommenderSpec extends SparkSpec {
       popular = Seq.empty)
     val ev = Seq((7L, "cur")).toDF("user", "item")
     val m = LinearModel.default
-    val got = Recommender.scoreCandidates(Recommender.candidates(ev, k), k, m)
+    // three candidates, so the top 5 holds every one of them
+    val got = Recommender.recommend(ev, k, m)
       .select("cand", "isRetake", "failProb").collect()
       .map(r => r.getString(0) -> (r.getBoolean(1), r.getDouble(2))).toMap
 

@@ -141,19 +141,6 @@ class StreamingSpec extends SparkSpec {
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
-  test("recommend ranks 5 lowest-risk candidates per user (ST6)") {
-    import spark.implicits._
-    val scored = (1 to 8).map(i =>
-      (7L, s"item$i", "click", i / 10.0)).toDF("user", "item", "action", "failProb")
-    val popular = (1 to 6).map(i => s"item$i").toDF("item")
-    val recs = ScoringStream.recommend(scored, popular)
-      .select("rank", "item").orderBy("rank").collect()
-      .map(r => (r.getInt(0), r.getString(1)))
-    // items 7,8 are not popular → excluded; 5 of the 6 remaining kept
-    assert(recs.toSeq == Seq((1, "item1"), (2, "item2"), (3, "item3"),
-      (4, "item4"), (5, "item5")))
-  }
-
   test("snapshot sink invokes the hot-reload hook per microbatch (ST7/S13)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

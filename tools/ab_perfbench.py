@@ -14,8 +14,11 @@ neither side), and two verdicts:
 
 - gain: the change won at least 9/10 of all pairs run AND its median beats
   the parent's by more than the parent's interquartile range;
-- bound: the change's median is no worse than the parent's by more than
-  the metric's bound (a fraction of the parent's median).
+- bound: EXCEEDED when the change's median is worse than the parent's by
+  more than the metric's bound (a fraction of the parent's median);
+  otherwise unresolved when either side's interquartile range, as a
+  fraction of its median, is wider than the bound, unless every change
+  run beats every parent run; otherwise within.
 
 Failed or incorrect runs are counted and reported; their metrics are left
 out. Nothing under either checkout's `perfbench/` is touched.
@@ -92,12 +95,19 @@ def main():
         gain = (pm - cm) if lower else (cm - pm)
         claimed = wins >= 0.9 * a.pairs and gain > p3 - p1
         worse = -gain / pm if pm else 0.0
+        wide = any(m3 - m1 > m["bound"] * abs(med)
+                   for m1, m3, med in ((p1, p3, pm), (c1, c3, cm)))
+        dominates = (max(c.values()) < min(p.values()) if lower
+                     else min(c.values()) > max(p.values()))
+        bound = ("EXCEEDED" if worse > m["bound"]
+                 else "unresolved" if wide and not dominates else "within")
         print(f"  {name} [{m['unit']}]: parent median {pm:.3f} (q1 {p1:.3f}, q3 {p3:.3f}, "
               f"n {len(p)}) | change median {cm:.3f} (q1 {c1:.3f}, q3 {c3:.3f}, n {len(c)})")
         print(f"    delta {cm - pm:+.3f} ({(cm - pm) / pm * 100 if pm else 0.0:+.1f}%), "
               f"change won {wins}/{a.pairs} pairs, parent IQR {p3 - p1:.3f}")
-        print(f"    gain: {'MET' if claimed else 'not met'}; bound {m['bound']}: "
-              f"{'within' if worse <= m['bound'] else 'EXCEEDED'}")
+        print(f"    gain: {'MET' if claimed else 'not met'}; bound {m['bound']}: {bound} "
+              f"(IQR/median parent {(p3 - p1) / pm if pm else 0.0:.3f}, "
+              f"change {(c3 - c1) / cm if cm else 0.0:.3f})")
 
 
 if __name__ == "__main__":
