@@ -2,12 +2,15 @@ package graft.ml
 
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
-import org.apache.spark.ml.classification.GBTClassifier
+import org.apache.spark.ml.classification.{GBTClassificationModel, GBTClassifier,
+  LogisticRegression}
+import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
 import org.apache.spark.ml.regression.IsotonicRegression
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
 import graft.queries.{KernelCache, QuerySpec}
@@ -183,8 +186,7 @@ object MlCatalog {
     fn = (s, dir) => {
       import s.implicits._
       scopedCaches(s) {
-        val (auc, logloss, accuracy) = gbtMetrics(s, dir, categorical = true)
-        Seq((auc, logloss, accuracy))
+        Seq(classifierMetrics(gbtScored(s, dir, categorical = true)))
           .toDF("valid_auc", "valid_logloss", "valid_accuracy_at_06")
       }
     },
@@ -194,49 +196,24 @@ object MlCatalog {
     // a committed envelope, not only in sweep snapshots
     headline = true)
 
-  /** Shared GBT train/eval body for m05 and its spec. `categorical`
-    * toggles the reference's categorical item feature
-    * (train_module.py:313-338 trains LightGBM with `course_id_int`
-    * categorical at :333): the part brand reached through the q12-style
-    * lineitem ⟕ part join, StringIndexer'd with alphabetAsc (M6 parity)
-    * — a genuine per-item signal next to the 5 numeric line-level
-    * features. GBTClassifier has no native categorical channel, so the
-    * indexed value enters the assembler as an ordinal split feature,
-    * the standard spark.ml encoding for low-cardinality categoricals.
-    */
-  private[graft] def gbtMetrics(s: SparkSession, dir: String,
-      categorical: Boolean): (Double, Double, Double) = {
-    val scored = gbtScored(s, dir, categorical)
-    val auc = exactAuc(scored)
-    // logloss as a plain aggregation (SURVEY.md §2.10 UDF note (a)):
-    // clamp p away from {0,1} exactly like sklearn's log_loss eps.
-    val eps = 1e-15
-    val Row0 = scored.agg(
-      (-avg(col("label") * log(greatest(least(col("p"), lit(1 - eps)), lit(eps))) +
-        (lit(1.0) - col("label")) *
-          log(greatest(least(lit(1.0) - col("p"), lit(1 - eps)), lit(eps)))))
-        .as("logloss"),
-      avg(when((col("p") >= 0.6) === (col("label") === 1.0), 1.0).otherwise(0.0))
-        .as("accuracy"))
-      .head()
-    (auc, Row0.getDouble(0), Row0.getDouble(1))
-  }
-
-  /** Deterministic exact areaUnderROC over a scored frame's `label` +
-    * `rawPrediction` columns. `BinaryClassificationEvaluator` is NOT
-    * reproducible within a session: its curve runs through an RDD
-    * sortByKey whose RangePartitioner samples boundaries with an
-    * rdd.id-derived seed, so the numBins=1000 downsampling chunks AND
-    * the final FP reduction grouping both shift between calls — MlSpec
-    * (and the driver's r14 run) caught the AUC wobbling by 1 ulp
-    * across two evaluations of the SAME cached scored frame. This
-    * computes the identical quantity — the exact trapezoidal ROC area
-    * with tie groups as diagonal segments — via the midrank form of
-    * the Mann-Whitney U statistic:
-    * AUC = (Σ_{positives} midrank − P(P+1)/2) / (P·N), ranks ascending
-    * by the class-1 raw margin. Doubled midranks are integers (a tie
-    * group of size g ending at ascending cumulative count c has
-    * 2·midrank = 2c − g + 1), so every aggregate here is
+  /** The return classifier's metric triple — AUC, logloss and
+    * accuracy@0.6 (train_module.py:345-369) — over a scored frame's
+    * `label`, `rawPrediction` and `probability` columns, from ONE pass
+    * over the frame: a per-margin rollup of (g rows, pos positives).
+    *
+    * AUC: `BinaryClassificationEvaluator` is NOT reproducible within a
+    * session: its curve runs through an RDD sortByKey whose
+    * RangePartitioner samples boundaries with an rdd.id-derived seed,
+    * so the numBins=1000 downsampling chunks AND the final FP reduction
+    * grouping both shift between calls — MlSpec caught the AUC
+    * wobbling by 1 ulp across two evaluations of the SAME cached scored
+    * frame. This computes the identical
+    * quantity — the exact trapezoidal ROC area with tie groups as
+    * diagonal segments — via the midrank form of the Mann-Whitney U
+    * statistic: AUC = (Σ_{positives} midrank − P(P+1)/2) / (P·N),
+    * ranks ascending by the class-1 raw margin. Doubled midranks are
+    * integers (a tie group of size g ending at ascending cumulative
+    * count c has 2·midrank = 2c − g + 1), so the rank sum is
     * integer-exact and partition-order-independent; the one floating
     * division happens once on the driver. DECIMAL(38,0) for the rank
     * sum per the q109 headroom rule (Σ ≤ 2·P·n crosses 2^63 near
@@ -247,29 +224,45 @@ object MlCatalog {
     * ever forms, and because ranks of distinct values are chunking-
     * independent integers, the value is bit-identical no matter where
     * the range sampler drops its boundaries.
+    *
+    * Logloss and accuracy: GBT and logistic regression both map the
+    * class-1 margin through a sigmoid, so p is constant within a margin
+    * group, which adds pos·(−log p) + (g − pos)·(−log(1 − p)) to the
+    * loss (p clamped like sklearn's log_loss eps) and pos (p ≥ 0.6) or
+    * g − pos to the correct count. The loss terms sum as DECIMAL(38,18),
+    * independent of the order the range sampler leaves the groups in (a
+    * double sum is not, and MlSpec asserts `m1 == m2`). An empty frame
+    * yields NaN for all three; a one-class frame NaN AUC.
     */
-  private[graft] def exactAuc(scored: DataFrame): Double = {
-    val margin = element_at(
-      org.apache.spark.ml.functions.vector_to_array(col("rawPrediction")), 2)
+  private[graft] def classifierMetrics(scored: DataFrame): (Double, Double, Double) = {
+    val margin = element_at(vector_to_array(col("rawPrediction")), 2)
     val perScore = scored
       .groupBy(margin.as("cents")) // kernel's value-column contract
-      .agg(count(lit(1)).as("d1"), sum(col("label")).cast("long").as("d2"))
+      .agg(count(lit(1)).as("d1"), sum(col("label")).cast("long").as("d2"),
+        max(classOneP).as("p"))
     val ranked = graft.queries.Catalog
       .rangePrefixSums(scored.sparkSession, perScore)
       .withColumnRenamed("d1", "g").withColumnRenamed("d2", "pos")
       .withColumnRenamed("c1", "c")
+    val eps = 1e-15
+    def nll(q: Column): Column = -log(greatest(least(q, lit(1 - eps)), lit(eps)))
+    val neg = col("g") - col("pos")
     val r = ranked.agg(
-      sum(col("pos").cast(org.apache.spark.sql.types.DecimalType(38, 0)) *
+      sum(col("pos").cast(DecimalType(38, 0)) *
         (col("c") * 2 - col("g") + 1)).as("rank2"),
-      sum(col("pos")).as("p"), sum(col("g")).as("n")).head()
+      sum(col("pos")).as("p"), sum(col("g")).as("n"),
+      sum((col("pos") * nll(col("p")) + neg * nll(lit(1.0) - col("p")))
+        .cast(DecimalType(38, 18))).as("loss"),
+      sum(when(col("p") >= 0.6, col("pos")).otherwise(neg)).as("correct")).head()
     // an empty frame sums to NULL everywhere, the rank sum included
-    if (r.isNullAt(2) || r.getLong(2) == 0) Double.NaN
+    if (r.isNullAt(2) || r.getLong(2) == 0) (Double.NaN, Double.NaN, Double.NaN)
     else {
-      val rank2 = r.getDecimal(0).doubleValue()
       val p = r.getLong(1).toDouble
       val n = r.getLong(2).toDouble
-      if (p == 0 || n - p == 0) Double.NaN
-      else (rank2 / 2.0 - p * (p + 1) / 2.0) / (p * (n - p))
+      val auc =
+        if (p == 0 || n - p == 0) Double.NaN
+        else (r.getDecimal(0).doubleValue() / 2.0 - p * (p + 1) / 2.0) / (p * (n - p))
+      (auc, r.getDecimal(3).doubleValue() / n, r.getLong(4).toDouble / n)
     }
   }
 
@@ -288,12 +281,54 @@ object MlCatalog {
       categorical: Boolean): DataFrame =
     gbtScoredCache(s, (dir, categorical))(gbtScoredBuild(s, dir, categorical))
 
-  /** Featurized (train, valid) split shared by m05's model and m13's
-    * learning curve — one place for the feature contract.
+  /** The return classifier's feature columns in assembler order
+    * (docs/GBT_CONTRACT.md); m22 names each permuted slot from it.
+    */
+  private[graft] val returnFeatureCols: Seq[String] = Seq("l_quantity",
+    "l_extendedprice", "l_discount", "l_tax", "l_linenumber", "brand_idx")
+
+  /** The return classifier's feature contract over the caller's
+    * lineitem frame: `label` (l_returnflag = 'R'), the part brand
+    * reached through the q12-style broadcast lineitem ⟕ part join and
+    * StringIndexer'd with alphabetAsc (M6 parity), and the `features`
+    * vector over [[returnFeatureCols]], without `brand_idx` unless
+    * `categorical`. The brand is the reference's categorical item
+    * feature (train_module.py:313-338 trains LightGBM with
+    * `course_id_int` categorical at :333) — a genuine per-item signal
+    * next to the 5 numeric line-level features. GBTClassifier has no
+    * native categorical channel, so the indexed value enters the
+    * assembler as an ordinal split feature, the standard spark.ml
+    * encoding for low-cardinality categoricals.
+    */
+  private[graft] def returnFeatures(dir: String, li: DataFrame,
+      categorical: Boolean): DataFrame = {
+    val withBrand = li
+      .withColumn("label", when(col("l_returnflag") === "R", 1.0).otherwise(0.0))
+      .join(broadcast(Tables.part(li.sparkSession, dir)
+        .select(col("p_partkey"), col("p_brand"))),
+        col("l_partkey") === col("p_partkey"))
+    val indexed = new StringIndexer().setInputCol("p_brand")
+      .setOutputCol("brand_idx").setStringOrderType("alphabetAsc")
+      .fit(withBrand).transform(withBrand)
+    new VectorAssembler()
+      .setInputCols(returnFeatureCols.filter(categorical || _ != "brand_idx").toArray)
+      .setOutputCol("features")
+      .transform(indexed)
+  }
+
+  /** The return classifier's estimator, pinned by docs/GBT_CONTRACT.md. */
+  private def returnGbt: GBTClassifier =
+    new GBTClassifier()
+      .setMaxIter(10).setMaxDepth(4).setStepSize(0.05).setSeed(42L)
+
+  /** Class-1 probability of a scored frame's `probability` vector. */
+  private val classOneP: Column = element_at(vector_to_array(col("probability")), 2)
+
+  /** Featurized (train, valid) split shared by m05's model, m13's
+    * learning curve and m22's permutations.
     */
   private[graft] def gbtData(s: SparkSession, dir: String,
-      categorical: Boolean): (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame) = {
+      categorical: Boolean): (DataFrame, DataFrame) = {
     // Round-14 (guide §1/§2.6): the whole GBT pipeline inherited the
     // parquet scan's 3 splits — profiled at sf0.1, the two featurize-
     // materialization jobs ran 3 tasks and all 40 boosting level-jobs
@@ -315,20 +350,8 @@ object MlCatalog {
     // the measured sweet spot here). Metric bands re-checked at all
     // three SFs after the change (MlSpec + manual sf0.1 run).
     val mlParts = sys.env.getOrElse("SPARK_GRAFT_ML_PARTS", "16").toInt
-    val li = Tables.lineitem(s, dir)
-      .repartition(mlParts)
-      .withColumn("label", when(col("l_returnflag") === "R", 1.0).otherwise(0.0))
-    val withBrand = li
-      .join(broadcast(Tables.part(s, dir).select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
-    val indexed = new StringIndexer().setInputCol("p_brand")
-      .setOutputCol("brand_idx").setStringOrderType("alphabetAsc")
-      .fit(withBrand).transform(withBrand)
-    val numericCols = Array("l_quantity", "l_extendedprice", "l_discount",
-      "l_tax", "l_linenumber")
-    val feats = new VectorAssembler()
-      .setInputCols(if (categorical) numericCols :+ "brand_idx" else numericCols)
-      .setOutputCol("features")
+    val feats = returnFeatures(dir, Tables.lineitem(s, dir).repartition(mlParts),
+      categorical)
     // Round-15 note (tried, measured, REVERTED): persisting the
     // featurized PRE-SPLIT frame here (to stop the 3-split scan chain
     // re-executing ~6× per m05 — a profiled ~3.9 s) was read as making
@@ -343,10 +366,11 @@ object MlCatalog {
     // Re-run isolated on local[4] after round 15, m05 read 0.512286
     // both with and without the persist, so the isolated 0.5284 did
     // not reproduce; it equals the then-stale pin to four digits. The
-    // wobble was the evaluator's own ([[exactAuc]] replaced it). The
-    // 1.04× bench delta still does not pay for the risk; the DF-level
-    // train cache below stays the only cache, as shipped in round 14.
-    val Array(train, valid) = feats.transform(indexed)
+    // wobble was the evaluator's own ([[classifierMetrics]] replaced
+    // it). The 1.04× bench delta still does not pay for the risk; the
+    // DF-level train cache below stays the only cache, as shipped in
+    // round 14.
+    val Array(train, valid) = feats
       .select("label", "features").randomSplit(Array(0.8, 0.2), seed = 42L)
     (train, valid)
   }
@@ -355,25 +379,21 @@ object MlCatalog {
     * importance must re-SCORE six perturbed validation frames with the
     * SAME model, which the scored-frame memo alone can't serve.
     */
-  private val gbtModelCache = KernelCache[(String, Boolean),
-    org.apache.spark.ml.classification.GBTClassificationModel]("gbt_model")
+  private val gbtModelCache =
+    KernelCache[(String, Boolean), GBTClassificationModel]("gbt_model")
 
   private[graft] def gbtModel(s: SparkSession, dir: String,
-      categorical: Boolean)
-      : org.apache.spark.ml.classification.GBTClassificationModel =
+      categorical: Boolean): GBTClassificationModel =
     gbtModelCache(s, (dir, categorical)) {
       val (train, _) = gbtData(s, dir, categorical)
-      new GBTClassifier()
-        .setMaxIter(10).setMaxDepth(4).setStepSize(0.05).setSeed(42L)
-        .fit(train.cache())
+      returnGbt.fit(train.cache())
     }
 
   private def gbtScoredBuild(s: SparkSession, dir: String,
-      categorical: Boolean): org.apache.spark.sql.DataFrame = {
+      categorical: Boolean): DataFrame = {
     val (_, valid) = gbtData(s, dir, categorical)
     gbtModel(s, dir, categorical).transform(valid)
-      .withColumn("p",
-        element_at(org.apache.spark.ml.functions.vector_to_array(col("probability")), 2))
+      .withColumn("p", classOneP)
       .cache()
   }
 
@@ -493,7 +513,7 @@ object MlCatalog {
     * cost is the m05 profile ×, at most, 1.75.
     */
   private[graft] def learningCurve(s: SparkSession,
-      dir: String): Seq[(Long, Long, Double)] = {
+      dir: String): Seq[(Long, Long, Double)] = scopedCaches(s) {
     val (train, valid) = gbtData(s, dir, categorical = true)
     val Array(p25, p25b, p50) =
       train.randomSplit(Array(0.25, 0.25, 0.5), seed = 7L)
@@ -501,10 +521,7 @@ object MlCatalog {
     Seq(25L -> p25, 50L -> p25.unionByName(p25b), 100L -> train).map {
       case (pct, t) =>
         val tc = t.cache()
-        val model = new GBTClassifier()
-          .setMaxIter(10).setMaxDepth(4).setStepSize(0.05).setSeed(42L)
-          .fit(tc)
-        val auc = exactAuc(model.transform(vc))
+        val (auc, _, _) = classifierMetrics(returnGbt.fit(tc).transform(vc))
         (pct, tc.count(), auc)
     }
   }
@@ -512,9 +529,7 @@ object MlCatalog {
   val m13LearningCurve: QuerySpec = QuerySpec(
     fn = (s, dir) => {
       import s.implicits._
-      scopedCaches(s) {
-        learningCurve(s, dir).toDF("train_frac_pct", "n_train", "valid_auc")
-      }
+      learningCurve(s, dir).toDF("train_frac_pct", "n_train", "valid_auc")
     },
     oracle = None)
 
@@ -533,34 +548,26 @@ object MlCatalog {
     * assembly is one pass, fold filters are map-side.
     */
   private[graft] def crossValidation(s: SparkSession,
-      dir: String): Seq[(Long, Long, Long, Double)] = {
-    val li = Tables.lineitem(s, dir)
-      .withColumn("label", when(col("l_returnflag") === "R", 1.0).otherwise(0.0))
-      .withColumn("fold",
-        pmod(col("l_orderkey") * 7 + col("l_linenumber"), lit(5)).cast("int"))
-    val withBrand = li
-      .join(broadcast(Tables.part(s, dir).select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
-    val indexed = new StringIndexer().setInputCol("p_brand")
-      .setOutputCol("brand_idx").setStringOrderType("alphabetAsc")
-      .fit(withBrand).transform(withBrand)
-    val feats = new VectorAssembler()
-      .setInputCols(Array("l_quantity", "l_extendedprice", "l_discount",
-        "l_tax", "l_linenumber", "brand_idx"))
-      .setOutputCol("features")
-    val all = feats.transform(indexed).select("fold", "label", "features").cache()
-    try {
-      (0 until 5).map { f =>
-        val train = all.filter(col("fold") =!= f)
-        val valid = all.filter(col("fold") === f)
-        val model = new org.apache.spark.ml.classification.LogisticRegression()
-          .setMaxIter(20).setRegParam(0.01)
-          .fit(train)
-        val auc = exactAuc(model.transform(valid))
-        (f.toLong, train.count(), valid.count(), auc)
-      }
-    } finally { all.unpersist(); () }
+      dir: String): Seq[(Long, Long, Long, Double)] = scopedCaches(s) {
+    val all = foldedFeatures(s, dir).cache()
+    (0 until 5).map { f =>
+      val train = all.filter(col("fold") =!= f)
+      val valid = all.filter(col("fold") === f)
+      val (auc, _, _) = classifierMetrics(foldLr.fit(train).transform(valid))
+      (f.toLong, train.count(), valid.count(), auc)
+    }
   }
+
+  /** m14/m19's features over the folds (7·orderkey + linenumber) mod 5. */
+  private[graft] def foldedFeatures(s: SparkSession, dir: String): DataFrame =
+    returnFeatures(dir, Tables.lineitem(s, dir).withColumn("fold",
+      pmod(col("l_orderkey") * 7 + col("l_linenumber"), lit(5)).cast("int")),
+      categorical = true)
+      .select("fold", "label", "features")
+
+  /** m14/m19's estimator: the streaming scorer's logistic regression. */
+  private[graft] def foldLr: LogisticRegression =
+    new LogisticRegression().setMaxIter(20).setRegParam(0.01)
 
   /** SPLIT-CONFORMAL prediction sets (Vovk et al. 2005; Papadopoulos
     * et al. 2002 inductive form) over the lineitem return classifier —
@@ -586,65 +593,44 @@ object MlCatalog {
     * cross the driver, never the fold), and a test-fold rollup to 4
     * counters — nothing fact-sized shuffles.
     */
-  private[graft] def conformal(s: SparkSession,
-      dir: String): Seq[(Long, Long, Double, Long, Long, Long, Long, Long)] = {
-    val li = Tables.lineitem(s, dir)
-      .withColumn("label", when(col("l_returnflag") === "R", 1.0).otherwise(0.0))
-      .withColumn("fold",
-        pmod(col("l_orderkey") * 7 + col("l_linenumber"), lit(5)).cast("int"))
-    val withBrand = li
-      .join(broadcast(Tables.part(s, dir).select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
-    val indexed = new StringIndexer().setInputCol("p_brand")
-      .setOutputCol("brand_idx").setStringOrderType("alphabetAsc")
-      .fit(withBrand).transform(withBrand)
-    val feats = new VectorAssembler()
-      .setInputCols(Array("l_quantity", "l_extendedprice", "l_discount",
-        "l_tax", "l_linenumber", "brand_idx"))
-      .setOutputCol("features")
-    val all = feats.transform(indexed).select("fold", "label", "features").cache()
-    try {
-      val model = new org.apache.spark.ml.classification.LogisticRegression()
-        .setMaxIter(20).setRegParam(0.01)
-        .fit(all.filter(col("fold") <= 2))
-      val p1 = element_at(
-        org.apache.spark.ml.functions.vector_to_array(col("probability")), 2)
-      // nonconformity of the TRUE label: 1 − p̂(y|x)
-      val cal = model.transform(all.filter(col("fold") === 3))
-        .select(when(col("label") === 1.0, lit(1.0) - p1).otherwise(p1).as("s"))
-        .cache()
-      val test = model.transform(all.filter(col("fold") === 4))
-        .select(col("label"), p1.as("p")).cache()
-      val nCal = cal.count()
-      Seq(0.10, 0.20).map { alpha =>
-        val rank = math.ceil((nCal + 1) * (1.0 - alpha)).toLong
-        val qhat =
-          if (rank > nCal) 1.0 // degenerate: every candidate label included
-          else cal.orderBy(col("s")).limit(rank.toInt)
-            .agg(max(col("s"))).head().getDouble(0)
-        val in1 = lit(1.0) - col("p") <= qhat
-        val in0 = col("p") <= qhat
-        val r = test.agg(
-          count(lit(1)).as("n_test"),
-          sum(when(col("label") === 1.0, in1.cast("long"))
-            .otherwise(in0.cast("long"))).as("covered"),
-          sum((in1 && in0).cast("long")).as("both"),
-          sum((!in1 && !in0).cast("long")).as("empty")).head()
-        val nTest = r.getLong(0)
-        val both = r.getLong(2); val empty = r.getLong(3)
-        ((alpha * 100).round, nCal, qhat, nTest, r.getLong(1),
-          nTest - both - empty, both, empty)
-      }
-    } finally { all.unpersist(); () }
+  private[graft] def conformal(s: SparkSession, dir: String)
+      : Seq[(Long, Long, Double, Long, Long, Long, Long, Long)] = scopedCaches(s) {
+    val all = foldedFeatures(s, dir).cache()
+    val model = foldLr.fit(all.filter(col("fold") <= 2))
+    // nonconformity of the TRUE label: 1 − p̂(y|x)
+    val cal = model.transform(all.filter(col("fold") === 3))
+      .select(when(col("label") === 1.0, lit(1.0) - classOneP).otherwise(classOneP)
+        .as("s"))
+      .cache()
+    val test = model.transform(all.filter(col("fold") === 4))
+      .select(col("label"), classOneP.as("p")).cache()
+    val nCal = cal.count()
+    Seq(0.10, 0.20).map { alpha =>
+      val rank = math.ceil((nCal + 1) * (1.0 - alpha)).toLong
+      val qhat =
+        if (rank > nCal) 1.0 // degenerate: every candidate label included
+        else cal.orderBy(col("s")).limit(rank.toInt)
+          .agg(max(col("s"))).head().getDouble(0)
+      val in1 = lit(1.0) - col("p") <= qhat
+      val in0 = col("p") <= qhat
+      val r = test.agg(
+        count(lit(1)).as("n_test"),
+        sum(when(col("label") === 1.0, in1.cast("long"))
+          .otherwise(in0.cast("long"))).as("covered"),
+        sum((in1 && in0).cast("long")).as("both"),
+        sum((!in1 && !in0).cast("long")).as("empty")).head()
+      val nTest = r.getLong(0)
+      val both = r.getLong(2); val empty = r.getLong(3)
+      ((alpha * 100).round, nCal, qhat, nTest, r.getLong(1),
+        nTest - both - empty, both, empty)
+    }
   }
 
   val m19ConformalSets: QuerySpec = QuerySpec(
     fn = (s, dir) => {
       import s.implicits._
-      scopedCaches(s) {
-        conformal(s, dir).toDF("alpha_pct", "n_cal", "qhat", "n_test",
-          "covered", "singleton", "both", "empty")
-      }
+      conformal(s, dir).toDF("alpha_pct", "n_cal", "qhat", "n_test",
+        "covered", "singleton", "both", "empty")
     },
     oracle = None)
 
@@ -1392,7 +1378,7 @@ object MlCatalog {
   val m22PermutationImportance: QuerySpec = QuerySpec(
     fn = (s, dir) => {
       import s.implicits._
-      import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
+      import org.apache.spark.ml.functions.array_to_vector
       scopedCaches(s) {
         val (_, valid0) = gbtData(s, dir, categorical = true)
         val valid = valid0
@@ -1416,11 +1402,9 @@ object MlCatalog {
           val x3 = (x2 * lit(1597334677L)) % lit(2147483647L)
           x3.bitwiseXOR(shiftright(x3, 13))
         }
-        val base = exactAuc(model.transform(valid))
-        val featNames = Seq("l_quantity", "l_extendedprice", "l_discount",
-          "l_tax", "l_linenumber", "brand_idx")
+        val base = classifierMetrics(model.transform(valid))._1
         val p = s.sparkContext.defaultParallelism
-        val rows = featNames.zipWithIndex.map { case (name, i) =>
+        val rows = returnFeatureCols.zipWithIndex.map { case (name, i) =>
           val salted = valid
             .withColumn("h", mix(col("k") + lit(1000003L * (i + 1))))
             .repartition(p, col("h"))
@@ -1441,7 +1425,7 @@ object MlCatalog {
             .withColumn("features", array_to_vector(expr(
               s"transform(fa, (x, j) -> CASE WHEN j = $i THEN pf ELSE x END)")))
             .select(col("label"), col("features"))
-          (name, base, exactAuc(model.transform(permuted)))
+          (name, base, classifierMetrics(model.transform(permuted))._1)
         }
         rows.toDF("feature", "base_auc", "perm_auc")
           .withColumn("auc_drop", col("base_auc") - col("perm_auc"))

@@ -289,17 +289,18 @@ object ExplainSpec {
       "offset prefix-sum over per-partition totals (rangePrefixSums kernel behind the eager barrier); bounded by the shuffle partition count",
     "q310_mann_kendall" ->
       "row_number over the daily rollup (eager barrier); day domain calendar-bounded (~2370 rows at any SF)",
-    // exactAuc (deterministic midrank AUC, round 15) runs the
-    // rangePrefixSums kernel over the distinct-margin rollup inside
-    // every GBT/LR metric evaluation — same offsets-window class
+    // classifierMetrics (deterministic midrank AUC, logloss and
+    // accuracy from one per-margin rollup) runs the rangePrefixSums
+    // kernel over the distinct-margin rollup inside every GBT/LR metric
+    // evaluation — same offsets-window class
     "m05_gbt_eval" ->
-      "offset prefix-sum over per-partition totals (rangePrefixSums kernel inside exactAuc); bounded by the shuffle partition count",
+      "offset prefix-sum over per-partition totals (rangePrefixSums kernel inside classifierMetrics); bounded by the shuffle partition count",
     "m13_learning_curve" ->
-      "offset prefix-sum over per-partition totals (rangePrefixSums kernel inside exactAuc, 3 fits); bounded by the shuffle partition count",
+      "offset prefix-sum over per-partition totals (rangePrefixSums kernel inside classifierMetrics, 3 fits); bounded by the shuffle partition count",
     "m14_cross_validation" ->
-      "offset prefix-sum over per-partition totals (rangePrefixSums kernel inside exactAuc, 5 folds); bounded by the shuffle partition count",
+      "offset prefix-sum over per-partition totals (rangePrefixSums kernel inside classifierMetrics, 5 folds); bounded by the shuffle partition count",
     "m22_permutation_importance" ->
-      "offset prefix-sum over per-partition totals (rangePrefixSums kernel inside exactAuc, 7 evaluations); bounded by the shuffle partition count")
+      "offset prefix-sum over per-partition totals (rangePrefixSums kernel inside classifierMetrics, 7 evaluations); bounded by the shuffle partition count")
 
   /** Non-scalar nested-loop joins (no equi-key, neither side provably
     * ≤1 row) whose |L|·|R| candidate volume is bounded by a DOMAIN the

@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
+
 import graft.ml.MlCatalog
 
 /** M7/M8 GBT contract (reference train_module.py:313-369) and the
@@ -8,9 +14,12 @@ import graft.ml.MlCatalog
   */
 class MlSpec extends SparkSpec {
 
+  private def gbtMetrics(categorical: Boolean): (Double, Double, Double) =
+    MlCatalog.classifierMetrics(MlCatalog.gbtScored(spark, sf0001, categorical))
+
   test("GBT classifier beats chance and the categorical item feature does not hurt (M7/M8)") {
-    val (aucCat, logloss, acc) = MlCatalog.gbtMetrics(spark, sf0001, categorical = true)
-    val (aucNum, _, _) = MlCatalog.gbtMetrics(spark, sf0001, categorical = false)
+    val (aucCat, logloss, acc) = gbtMetrics(categorical = true)
+    val (aucNum, _, _) = gbtMetrics(categorical = false)
     assert(aucCat > 0.5, s"categorical-feature AUC $aucCat not better than chance")
     assert(logloss > 0.0 && acc > 0.0 && acc <= 1.0)
     // the reference's per-item categorical (train_module.py:333) is the
@@ -36,8 +45,8 @@ class MlSpec extends SparkSpec {
   }
 
   test("GBT contract metrics are deterministic and match docs/GBT_CONTRACT.md") {
-    val m1 = MlCatalog.gbtMetrics(spark, sf0001, categorical = true)
-    val m2 = MlCatalog.gbtMetrics(spark, sf0001, categorical = true)
+    val m1 = gbtMetrics(categorical = true)
+    val m2 = gbtMetrics(categorical = true)
     // seeded determinism: identical training twice in one session
     assert(m1 == m2, s"seeded GBT training not reproducible: $m1 vs $m2")
     // committed-band tie to docs/GBT_CONTRACT.md (guards hyperparameter
@@ -145,7 +154,7 @@ class MlSpec extends SparkSpec {
     assert(rows.map(_._1).sorted === Array("brand_idx", "l_discount",
       "l_extendedprice", "l_linenumber", "l_quantity", "l_tax"))
     // base AUC is the SAME fitted model m05 evaluates
-    val (m05Auc, _, _) = MlCatalog.gbtMetrics(spark, sf0001, categorical = true)
+    val (m05Auc, _, _) = gbtMetrics(categorical = true)
     rows.foreach { case (f, base, perm, drop) =>
       assert(math.abs(base - m05Auc) < 1e-9,
         s"$f base $base != m05 AUC $m05Auc")
@@ -174,7 +183,6 @@ class MlSpec extends SparkSpec {
     // inertia (sum of squared distances to assigned centers) must beat
     // the k=1 baseline: total squared distance to the global mean
     val inertia = summary.head._3.toDouble / 1e6
-    import org.apache.spark.sql.functions._
     val e = Tables.embeddings(spark, sf0001)
       .select(posexplode(col("embedding")).as(Seq("d", "x")))
     val k1 = e.groupBy(col("d"))
@@ -186,19 +194,96 @@ class MlSpec extends SparkSpec {
       s"inertia $inertia outside (0, k=1 bound $k1)")
   }
 
-  test("m03/m05 leave no persisted RDDs behind (scoped caches, VERDICT r3 #7)") {
+  test("ML entries and a direct conformal call leave no persisted RDDs behind (scoped caches)") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    MlCatalog.all("m03_als_eval").fn(spark, sf0001).collect()
-    MlCatalog.all("m05_gbt_eval").fn(spark, sf0001).collect()
+    Seq("m03_als_eval", "m05_gbt_eval", "m13_learning_curve", "m14_cross_validation",
+      "m19_conformal_sets", "m22_permutation_importance")
+      .foreach(MlCatalog.all(_).fn(spark, sf0001).collect())
+    MlCatalog.conformal(spark, sf0001)
     val leaked = sc.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"leaked persisted RDD ids: $leaked")
   }
 
-  test("exactAuc is NaN on an empty scored frame") {
+  test("classifierMetrics is NaN on an empty scored frame") {
     import spark.implicits._
-    val empty = Seq.empty[(Double, org.apache.spark.ml.linalg.Vector)]
-      .toDF("label", "rawPrediction")
-    assert(MlCatalog.exactAuc(empty).isNaN)
+    val empty = Seq.empty[(Double, Vector, Vector)]
+      .toDF("label", "rawPrediction", "probability")
+    val (auc, logloss, acc) = MlCatalog.classifierMetrics(empty)
+    assert(auc.isNaN && logloss.isNaN && acc.isNaN, s"($auc, $logloss, $acc)")
+  }
+
+  test("classifierMetrics' one pass equals the two-pass reference (AUC and accuracy exact)") {
+    import spark.implicits._
+    val m05 = MlCatalog.gbtScored(spark, sf0001, categorical = true)
+    val folds = MlCatalog.foldedFeatures(spark, sf0001)
+    val lrFold = MlCatalog.foldLr.fit(folds.filter(col("fold") =!= 0))
+      .transform(folds.filter(col("fold") === 0))
+    // 2000 rows over 7 margins, labels independent of the margin: every
+    // tie group mixes both classes, and p straddles the 0.6 threshold
+    val margins = Seq(-0.6, -0.3, 0.0, 0.1, 0.2, 0.25, 0.5)
+    val ties = (0 until 2000).map { i =>
+      val m = margins(i * 3 % margins.length)
+      val p = 1.0 / (1.0 + math.exp(-2 * m))
+      (if (i % 5 == 0) 1.0 else 0.0, Vectors.dense(-m, m), Vectors.dense(1 - p, p))
+    }.toDF("label", "rawPrediction", "probability")
+    val oneClass = m05.filter(col("label") === 0.0)
+    Seq("m05" -> m05, "m14 fold 0" -> lrFold, "ties" -> ties, "one class" -> oneClass)
+      .foreach { case (name, scored) =>
+        val (auc, logloss, acc) = MlCatalog.classifierMetrics(scored)
+        val (rAuc, rLogloss, rAcc) = MlSpec.Reference.metrics(scored)
+        assert(auc == rAuc || (auc.isNaN && rAuc.isNaN), s"$name auc $auc vs $rAuc")
+        assert(acc == rAcc, s"$name accuracy $acc vs $rAcc")
+        assert(math.abs(logloss - rLogloss) <= 1e-12 * math.abs(rLogloss),
+          s"$name logloss $logloss vs $rLogloss")
+      }
+    assert(MlCatalog.classifierMetrics(oneClass)._1.isNaN)
+  }
+}
+
+object MlSpec {
+
+  /** The two-pass formulation `MlCatalog` evaluated with before the
+    * per-margin fold: the midrank AUC over its own rollup, then a
+    * row-level aggregate for logloss and accuracy@0.6 — kept as the
+    * reference `classifierMetrics` must equal.
+    */
+  object Reference {
+    def metrics(scored: DataFrame): (Double, Double, Double) = {
+      val eps = 1e-15
+      val p = element_at(vector_to_array(col("probability")), 2)
+      val r = scored.agg(
+        (-avg(col("label") * log(greatest(least(p, lit(1 - eps)), lit(eps))) +
+          (lit(1.0) - col("label")) *
+            log(greatest(least(lit(1.0) - p, lit(1 - eps)), lit(eps)))))
+          .as("logloss"),
+        avg(when((p >= 0.6) === (col("label") === 1.0), 1.0).otherwise(0.0))
+          .as("accuracy"))
+        .head()
+      (auc(scored), r.getDouble(0), r.getDouble(1))
+    }
+
+    def auc(scored: DataFrame): Double = {
+      val margin = element_at(vector_to_array(col("rawPrediction")), 2)
+      val perScore = scored
+        .groupBy(margin.as("cents"))
+        .agg(count(lit(1)).as("d1"), sum(col("label")).cast("long").as("d2"))
+      val ranked = graft.queries.Catalog
+        .rangePrefixSums(scored.sparkSession, perScore)
+        .withColumnRenamed("d1", "g").withColumnRenamed("d2", "pos")
+        .withColumnRenamed("c1", "c")
+      val r = ranked.agg(
+        sum(col("pos").cast(DecimalType(38, 0)) *
+          (col("c") * 2 - col("g") + 1)).as("rank2"),
+        sum(col("pos")).as("p"), sum(col("g")).as("n")).head()
+      if (r.isNullAt(2) || r.getLong(2) == 0) Double.NaN
+      else {
+        val rank2 = r.getDecimal(0).doubleValue()
+        val p = r.getLong(1).toDouble
+        val n = r.getLong(2).toDouble
+        if (p == 0 || n - p == 0) Double.NaN
+        else (rank2 / 2.0 - p * (p + 1) / 2.0) / (p * (n - p))
+      }
+    }
   }
 }

@@ -7,7 +7,11 @@
 Runs each checkout's own `perfbench/run.py --trace 0` (from that
 checkout's root, as it requires) N times per side, in pairs: pair i
 (from 0) uses seed i+1 on both sides and BENCHMARK.json's run_seconds,
-and which side runs first alternates from pair to pair. Each run's metrics line is printed as it lands. At the end, for
+and which side runs first alternates from pair to pair. Before each run it
+waits, at most IDLE_WAIT_S seconds, until the 1-minute load average per core
+is at or below the `LOAD_PER_CORE` that checkout's `perfbench/run.py`
+declares, so that run's idle check can hold; it prints the load average each
+run started at. Each run's metrics line is printed as it lands. At the end, for
 every end-to-end metric BENCHMARK.json declares, it prints each side's
 median and quartiles, the number of pairs the change won (ties count for
 neither side), and two verdicts:
@@ -26,9 +30,34 @@ out. Nothing under either checkout's `perfbench/` is touched.
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
+import time
+
+# The longest wait for an idle box before a run starts anyway; the 1-minute
+# load average halves in about 42 s once a run's load is gone.
+IDLE_WAIT_S = 300
+
+
+def load_per_core(root):
+    """The idle threshold `root`'s own perfbench/run.py checks against."""
+    with open(os.path.join(root, "perfbench", "run.py")) as fh:
+        m = re.search(r"^LOAD_PER_CORE = ([0-9.]+)", fh.read(), re.M)
+    if not m:
+        sys.exit(f"no LOAD_PER_CORE in {root}/perfbench/run.py")
+    return float(m.group(1))
+
+
+def wait_idle(limit):
+    """Sleep until the 1-minute load average per core is <= `limit`, or
+    IDLE_WAIT_S has passed; return the load average at the end."""
+    cores = os.cpu_count() or 1
+    deadline = time.monotonic() + IDLE_WAIT_S
+    while os.getloadavg()[0] > limit * cores and time.monotonic() < deadline:
+        time.sleep(5)
+    return os.getloadavg()[0]
 
 
 def run_once(root, workload, seed, seconds):
@@ -65,12 +94,16 @@ def main():
         bench = json.load(fh)
     seconds = bench["run_seconds"]
     sides = {"parent": a.parent_dir, "change": a.change_dir}
+    idle = {side: load_per_core(root) for side, root in sides.items()}
     runs = {"parent": [], "change": []}  # (pair, metrics) of correct runs
     failures = {"parent": 0, "change": 0}
     for i in range(a.pairs):
         seed = i + 1
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
+            load = wait_idle(idle[side])
+            print(f"pair {i} seed {seed} {side}: starting at loadavg_1m {load:.2f}",
+                  flush=True)
             metrics, err = run_once(sides[side], a.workload, seed, seconds)
             if err:
                 failures[side] += 1
