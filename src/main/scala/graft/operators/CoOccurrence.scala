@@ -5,27 +5,31 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** J4 co-occurrence mining (the reference's course-pair knowledge base,
-  * `train_module.py:397-405`) as a reusable operator with the skew
-  * control SURVEY.md §7.4 risk 5 calls for.
+  * `train_module.py:397-405`) as the one keyed pair self-join operator,
+  * with the skew control SURVEY.md §7.4 risk 5 calls for. The (key,
+  * item) projection is hash-partitioned by the key ONCE: that exchange
+  * serves the distinct (equal rows co-locate under an equal key), the
+  * cap window and the self-join.
   *
   * The self-join fan-out of a key with k items is k² pairs — one
   * power user (a crawler, a bot) with 10⁵ items would emit 10¹⁰ rows
-  * at 100 TB. `maxItemsPerKey` bounds that: each key contributes at
-  * most its k smallest items (deterministic, so reruns agree). Keys
-  * under the cap are EXACT; capped keys degrade gracefully (their
-  * rarest pairs drop first under the item ordering). Residual shuffle
-  * skew within the join is AQE skew-split territory.
+  * at 100 TB. The self-join has no exchange of its own, so AQE's
+  * skew-join split cannot split a hot key: `maxItemsPerKey` is the skew
+  * bound. Each key contributes at most its k smallest items
+  * (deterministic, so reruns agree). Keys under the cap are EXACT;
+  * capped keys degrade gracefully (their rarest pairs drop first).
   */
 object CoOccurrence {
 
-  /** Distinct co-occurring item pairs per key with counts.
+  /** Distinct co-occurring item pairs (i1 < i2) per key with counts
+    * (`cnt` = the number of keys holding both items).
     *
     * @param maxItemsPerKey None = exact (q14 semantics); Some(k) =
     *   cap each key's contribution at its k smallest items.
     */
   def pairs(df: DataFrame, keyCol: String, itemCol: String,
       maxItemsPerKey: Option[Int] = None): DataFrame = {
-    val base = df.select(col(keyCol).as("k"), col(itemCol).as("item")).distinct()
+    val base = keyedItems(df, keyCol, itemCol)
     val capped = maxItemsPerKey match {
       case None => base
       case Some(cap) =>
@@ -38,6 +42,14 @@ object CoOccurrence {
       .groupBy(col("a.item").as("i1"), col("b.item").as("i2"))
       .agg(count(lit(1)).as("cnt"))
   }
+
+  /** The distinct (k, item) rows [[pairs]] joins, hash-partitioned by k.
+    * A caller that also reads them builds them here, so ReuseExchange
+    * serves both from the one exchange. */
+  def keyedItems(df: DataFrame, keyCol: String, itemCol: String): DataFrame =
+    df.select(col(keyCol).as("k"), col(itemCol).as("item"))
+      .repartition(col("k"))
+      .distinct()
 
   /** Top-N pairs by frequency — the knowledge-base cut the reference
     * keeps (`Counter.most_common(50)`, `run_consumer.py:247`).

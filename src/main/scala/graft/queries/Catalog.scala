@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Rounds
+import graft.operators.{CoOccurrence, Rounds}
 
 /** One named query: the Spark-side plan builder plus (when the semantics are
   * ANSI-SQL-expressible) an equivalent DuckDB SQL string for the driver's
@@ -297,23 +297,8 @@ object Catalog {
 
   private def coPairCounts(s: SparkSession, dir: String): DataFrame =
     coPairCache(s, dir) {
-      // Round 15 (guide §2.4 share one exchange): partition the
-      // projection by the JOIN key before the dedup — HashPartitioning
-      // on l_orderkey satisfies the distinct's clustering requirement
-      // (equal (ok, pk) rows co-locate under equal ok) AND the
-      // self-join's, so the build runs ONE full-data exchange instead
-      // of two (the old shape shuffled by (ok, pk) for distinct, then
-      // re-shuffled both join sides by ok; ReuseExchange dedupes the
-      // two identical branches either way).
-      val op = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_partkey"))
-        .repartition(col("l_orderkey"))
-        .distinct()
-      op.as("a").join(op.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .groupBy(col("a.l_partkey").as("p1"), col("b.l_partkey").as("p2"))
-        .agg(count(lit(1)).as("co"))
+      CoOccurrence.pairs(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
+        .select(col("i1").as("p1"), col("i2").as("p2"), col("cnt").as("co"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
@@ -322,8 +307,9 @@ object Catalog {
     * pair counts → top 50, served from the shared [[coPairCounts]]
     * kernel. Scale: the one genuinely skew-sensitive computation —
     * a power order with k parts makes k² pairs. The distinct pre-pass
-    * bounds k, AQE skew-join splits hot partitions; for 100 TB add a
-    * per-order pair cap before the join (documented in ops.Dedup).
+    * bounds k; the self-join shares the kernel's one exchange, so AQE
+    * cannot split a hot order — at 100 TB cap it with
+    * `CoOccurrence.pairs`' `maxItemsPerKey` (the retrain KB's 1000).
     */
   val q14PartPairs: QuerySpec = QuerySpec(
     fn = (s, dir) =>
@@ -1178,14 +1164,17 @@ object Catalog {
       val bc = Rounds.gate(dir, edges.count())
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .select(col("src").as("v"), col("deg"))
-      var ranks = deg.select(col("v"), lit(1000000L).as("pr"))
-      for (_ <- 1 to 5) {
-        val share = ranks.join(deg, "v")
-          .select(col("v").as("src"),
-            expr("(850000 * (pr div deg)) div 1000000").as("contrib"))
-        ranks = edges.join(bc(share), "src")
-          .groupBy(col("dst")).agg(sum(col("contrib")).as("s"))
-          .select(col("dst").as("v"), (lit(150000L) + col("s")).as("pr"))
+      def step(share: DataFrame): DataFrame = edges.join(bc(share), "src")
+        .groupBy(col("dst")).agg(sum(col("contrib")).as("s"))
+        .select(col("dst").as("v"), (lit(150000L) + col("s")).as("pr"))
+      // every seed rank is 10^6, so round 1's share reads deg alone (a
+      // ranks ⋈ deg join would leave AQE to pick its broadcast side by
+      // stage-completion order)
+      val seed = deg.select(col("v").as("src"),
+        expr("(850000 * (1000000 div deg)) div 1000000").as("contrib"))
+      val ranks = (2 to 5).foldLeft(step(seed)) { (r, _) =>
+        step(r.join(deg, "v").select(col("v").as("src"),
+          expr("(850000 * (pr div deg)) div 1000000").as("contrib")))
       }
       ranks.join(deg, "v")
         .orderBy(col("pr").desc, col("v")).limit(20)
@@ -4902,16 +4891,17 @@ object Catalog {
     */
   val q117FrequentTriples: QuerySpec = QuerySpec(
     fn = (s, dir) => {
-      val op = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_partkey")).distinct()
+      // distinct (order, part) rows partitioned by order once: neither
+      // candidate join below needs an exchange of its own
+      val op = CoOccurrence.keyedItems(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
+        .select(col("k").as("l_orderkey"), col("item").as("l_partkey"))
       val pairs = op.as("a").join(op.as("b"),
           col("a.l_orderkey") === col("b.l_orderkey") &&
             col("a.l_partkey") < col("b.l_partkey"))
         .select(col("a.l_orderkey").as("ok"),
           col("a.l_partkey").as("p1"), col("b.l_partkey").as("p2"))
-      val freqPairs = pairs.groupBy(col("p1"), col("p2"))
-        .agg(count(lit(1)).as("pc"))
-        .filter(col("pc") >= 2)
+      val freqPairs = coPairCounts(s, dir)
+        .filter(col("co") >= 2)
         .select(col("p1"), col("p2"))
       val candidates = pairs
         .join(freqPairs, Seq("p1", "p2"), "left_semi")

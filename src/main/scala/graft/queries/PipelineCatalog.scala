@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.CoOccurrence
 
 /** Training-data pipeline operators (dedup, similarity search, text
   * analysis, multimodal columns) over the `documents` / `embeddings`
@@ -122,6 +123,8 @@ object PipelineCatalog {
           concat_ws("-", col(s"mh${4 * b}"), col(s"mh${4 * b + 1}"),
             col(s"mh${4 * b + 2}"), col(s"mh${4 * b + 3}"))): _*))
           .as(Seq("band_idx", "band_sig")))
+      // not CoOccurrence.pairs: on it q149, this kernel's first reader,
+      // read 1.10x and 1.13x the hand-rolled join at sf0.1
       bands.as("a").join(bands.as("b"),
           col("a.band_idx") === col("b.band_idx") &&
             col("a.band_sig") === col("b.band_sig") &&
@@ -324,15 +327,21 @@ object PipelineCatalog {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
+  /** PPJoin candidates (d1 < d2) of q35 and q296's prefix blocker. Not
+    * [[CoOccurrence.pairs]]: at sf0.1 its layout ran q35 1.49x and q296
+    * 1.36x slower (20-22 jobs vs 16-17) at the same exchange count. */
+  private def prefixCandidates(s: SparkSession, dir: String): DataFrame = {
+    val pref = prefixRows(s, dir)
+    pref.as("a").join(pref.as("b"),
+        col("a.shingle") === col("b.shingle") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+      .distinct()
+  }
+
   private def ngramNearDupPairs(s: SparkSession, dir: String): DataFrame =
     nearDupPairCache(s, dir) {
-      val pref = prefixRows(s, dir)
-      val cand = pref.as("a").join(pref.as("b"),
-          col("a.shingle") === col("b.shingle") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-        .distinct()
-      verifyJaccard(s, dir, cand, 0.8)
+      verifyJaccard(s, dir, prefixCandidates(s, dir), 0.8)
         .orderBy(col("d1"), col("d2"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
@@ -3748,6 +3757,28 @@ object PipelineCatalog {
                   THEN 'train' ELSE 'test' END AS split
       FROM sized ORDER BY doc_id"""))
 
+  /** Every source pair (s1 < s2) with its distinct-shingle intersection
+    * `inter` (0 when none) and set sizes n1, n2: q140's report, q172's truth. */
+  private def sourceOverlap(s: SparkSession, dir: String): DataFrame = {
+    val srcSh = shingleRows(s, dir)
+      .join(Tables.documents(s, dir).select(col("doc_id"), col("source")),
+        Seq("doc_id"))
+      .select(col("source"), col("shingle"))
+    // the sizes read the kernel's deduped rows: one exchange for both
+    val sizes = CoOccurrence.keyedItems(srcSh, "shingle", "source")
+      .groupBy(col("item").as("source")).agg(count(lit(1)).as("n"))
+    val inter = CoOccurrence.pairs(srcSh, "shingle", "source")
+      .select(col("i1").as("s1"), col("i2").as("s2"), col("cnt").as("inter"))
+    // |sources|-row cross — broadcast the build side so the planner
+    // emits a tiny BNLJ rather than a CartesianProduct exchange
+    sizes.select(col("source").as("s1"), col("n").as("n1"))
+      .crossJoin(broadcast(sizes.select(col("source").as("s2"), col("n").as("n2"))))
+      .filter(col("s1") < col("s2"))
+      .join(inter, Seq("s1", "s2"), "left")
+      .select(col("s1"), col("s2"),
+        coalesce(col("inter"), lit(0L)).as("inter"), col("n1"), col("n2"))
+  }
+
   /** Source-overlap audit — pairwise shingle overlap between SOURCES,
     * the corpus-level redundancy matrix behind mixture weighting
     * decisions (two feeds sharing most of their n-grams should not
@@ -3757,33 +3788,15 @@ object PipelineCatalog {
     * containment are one division away — never rounded here, per the
     * q49/q60 rationals invariant); zero-overlap pairs are kept so the
     * report is the complete |sources|²/2 matrix. Scale: rides the
-    * shared shingle cache; the (source, shingle) dedup is one shuffle,
+    * shared shingle cache; the (source, shingle) rows shuffle once by
+    * shingle for the dedup and the self-join ([[CoOccurrence.pairs]]),
     * the self-join fans out per shingle bounded by |sources| per key
     * (never per document) and the output is |sources|-bounded. At
     * 100 TB with thousands of feeds, MinHash per source replaces the
     * exact intersection — same report shape, q36's estimator.
     */
   val q140SourceOverlap: QuerySpec = QuerySpec(
-    fn = (s, dir) => {
-      val srcSh = shingleRows(s, dir)
-        .join(Tables.documents(s, dir).select(col("doc_id"), col("source")),
-          Seq("doc_id"))
-        .select(col("source"), col("shingle")).distinct()
-      val sizes = srcSh.groupBy(col("source")).agg(count(lit(1)).as("n"))
-      val inter = srcSh.as("a").join(srcSh.as("b"),
-          col("a.shingle") === col("b.shingle") && col("a.source") < col("b.source"))
-        .select(col("a.source").as("s1"), col("b.source").as("s2"))
-        .groupBy(col("s1"), col("s2")).agg(count(lit(1)).as("inter"))
-      // |sources|-row cross — broadcast the build side so the planner
-      // emits a tiny BNLJ rather than a CartesianProduct exchange
-      sizes.select(col("source").as("s1"), col("n").as("n1"))
-        .crossJoin(broadcast(sizes.select(col("source").as("s2"), col("n").as("n2"))))
-        .filter(col("s1") < col("s2"))
-        .join(inter, Seq("s1", "s2"), "left")
-        .select(col("s1"), col("s2"),
-          coalesce(col("inter"), lit(0L)).as("inter"), col("n1"), col("n2"))
-        .orderBy(col("s1"), col("s2"))
-    },
+    fn = (s, dir) => sourceOverlap(s, dir).orderBy(col("s1"), col("s2")),
     oracle = Some(s"""
       WITH sh AS ($shinglesSql),
       e AS (SELECT DISTINCT d.source, u.s AS shingle
@@ -5431,11 +5444,9 @@ object PipelineCatalog {
       val sk = ev.groupBy(col("event_type"))
         .agg(ThetaSketch.sketchAgg(col("user_id")).as("sk"),
           countDistinct(col("user_id")).as("exact_n"))
-      val exactInter = ev.distinct().as("a").join(ev.distinct().as("b"),
-          col("a.user_id") === col("b.user_id") &&
-            col("a.event_type") < col("b.event_type"))
-        .select(col("a.event_type").as("t1"), col("b.event_type").as("t2"))
-        .groupBy(col("t1"), col("t2")).agg(count(lit(1)).as("exact_inter"))
+      val exactInter = CoOccurrence.pairs(ev, "user_id", "event_type")
+        .select(col("i1").as("t1"), col("i2").as("t2"),
+          col("cnt").as("exact_inter"))
       sk.select(col("event_type").as("t1"), col("sk").as("sk1"),
           col("exact_n").as("exact_n1"))
         .crossJoin(broadcast(sk.select(col("event_type").as("t2"),
@@ -5482,21 +5493,10 @@ object PipelineCatalog {
           min(expr(s"(1*tid + 0) % $P")).as("mh0"),
           (1 to 15).map(i =>
             min(expr(s"((2*$i+1)*tid + ${12345 * i}) % $P")).as(s"mh$i")): _*)
-      val srcSh = shingleRows(s, dir).join(src, Seq("doc_id"))
-        .select(col("source"), col("shingle")).distinct()
-      val sizes = srcSh.groupBy(col("source")).agg(count(lit(1)).as("n"))
-      val inter = srcSh.as("a").join(srcSh.as("b"),
-          col("a.shingle") === col("b.shingle") && col("a.source") < col("b.source"))
-        .select(col("a.source").as("s1"), col("b.source").as("s2"))
-        .groupBy(col("s1"), col("s2")).agg(count(lit(1)).as("inter"))
       val match16 = (0 to 15)
         .map(i => when(col(s"sa.mh$i") === col(s"sb.mh$i"), 1L).otherwise(0L))
         .reduce(_ + _)
-      sizes.select(col("source").as("s1"), col("n").as("n1"))
-        .crossJoin(broadcast(sizes.select(col("source").as("s2"), col("n").as("n2"))))
-        .filter(col("s1") < col("s2"))
-        .join(inter, Seq("s1", "s2"), "left")
-        .withColumn("inter", coalesce(col("inter"), lit(0L)))
+      sourceOverlap(s, dir)
         .join(broadcast(sig.as("sa")), col("s1") === col("sa.source"))
         .join(broadcast(sig.as("sb")), col("s2") === col("sb.source"))
         .select(col("s1"), col("s2"), match16.as("match16"), col("inter"),
@@ -7019,12 +7019,7 @@ object PipelineCatalog {
     */
   val q296BlockingQuality: QuerySpec = QuerySpec(
     fn = (s, dir) => {
-      val pref = prefixRows(s, dir)
-      val candP = pref.as("a").join(pref.as("b"),
-          col("a.shingle") === col("b.shingle") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-        .distinct().localCheckpoint(true)
+      val candP = prefixCandidates(s, dir).localCheckpoint(true)
       // round 15: the LSH candidate set is the shared persisted
       // [[lshBandCandidates]] kernel (was a private checkpointed copy
       // of the same bands self-join — guide §2.4)
