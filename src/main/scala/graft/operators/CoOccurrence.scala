@@ -1,21 +1,21 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** J4 co-occurrence mining (the reference's course-pair knowledge base,
-  * `train_module.py:397-405`) as the one keyed pair self-join operator,
-  * with the skew control SURVEY.md §7.4 risk 5 calls for. The (key,
-  * item) projection is hash-partitioned by the key ONCE: that exchange
-  * serves the distinct (equal rows co-locate under an equal key), the
-  * cap window and the self-join.
+  * `train_module.py:397-405`) as the one keyed pair operator, with the
+  * skew control SURVEY.md §7.4 risk 5 calls for. Like the reference's
+  * per-learner course lists, each key's distinct items are gathered into
+  * one sorted set: the grouping by key is the ONE exchange of the (key,
+  * item) projection, and its map-side partial aggregate drops repeated
+  * rows before they shuffle. Pairs are generated from each set, so there
+  * is no self-join for the planner to shuffle, re-shuffle or broadcast.
   *
-  * The self-join fan-out of a key with k items is k² pairs — one
-  * power user (a crawler, a bot) with 10⁵ items would emit 10¹⁰ rows
-  * at 100 TB. The self-join has no exchange of its own, so AQE's
-  * skew-join split cannot split a hot key: `maxItemsPerKey` is the skew
-  * bound. Each key contributes at most its k smallest items
+  * The fan-out of a key with k items is k² pairs — one power user (a
+  * crawler, a bot) with 10⁵ items would emit 10¹⁰ rows at 100 TB, all
+  * from the one task that holds its set. `maxItemsPerKey` is the skew
+  * bound: each key contributes at most its k smallest items
   * (deterministic, so reruns agree). Keys under the cap are EXACT;
   * capped keys degrade gracefully (their rarest pairs drop first).
   */
@@ -29,27 +29,32 @@ object CoOccurrence {
     */
   def pairs(df: DataFrame, keyCol: String, itemCol: String,
       maxItemsPerKey: Option[Int] = None): DataFrame = {
-    val base = keyedItems(df, keyCol, itemCol)
-    val capped = maxItemsPerKey match {
-      case None => base
-      case Some(cap) =>
-        val w = Window.partitionBy(col("k")).orderBy(col("item"))
-        base.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= cap).drop("__rn")
-    }
-    capped.as("a").join(capped.as("b"),
-        col("a.k") === col("b.k") && col("a.item") < col("b.item"))
-      .groupBy(col("a.item").as("i1"), col("b.item").as("i2"))
+    val sets = itemSets(df, keyCol, itemCol)
+    val items = maxItemsPerKey.fold(col("items"))(cap => slice(col("items"), 1, cap))
+    // the set is sorted and distinct, so every item after position p
+    // is greater than the one at p
+    sets.select(items.as("items"))
+      .select(col("items"), posexplode(col("items")).as(Seq("p", "i1")))
+      .select(col("i1"), explode(slice(col("items"), col("p") + 2,
+        size(col("items")) - col("p") - 1)).as("i2"))
+      .groupBy(col("i1"), col("i2"))
       .agg(count(lit(1)).as("cnt"))
   }
 
-  /** The distinct (k, item) rows [[pairs]] joins, hash-partitioned by k.
-    * A caller that also reads them builds them here, so ReuseExchange
+  /** The distinct (k, item) rows [[pairs]] counts, hash-partitioned by
+    * k. A caller that also reads them builds them here, so ReuseExchange
     * serves both from the one exchange. */
   def keyedItems(df: DataFrame, keyCol: String, itemCol: String): DataFrame =
-    df.select(col(keyCol).as("k"), col(itemCol).as("item"))
-      .repartition(col("k"))
-      .distinct()
+    itemSets(df, keyCol, itemCol).select(col("k"), explode(col("items")).as("item"))
+
+  /** Each non-null key's distinct non-null items, sorted ascending. The
+    * item filter changes no set (collect_set skips nulls); it is pushed
+    * into the scan, where a sibling branch's join infers the same one,
+    * so the two scans' exchanges stay reusable. */
+  private def itemSets(df: DataFrame, keyCol: String, itemCol: String): DataFrame =
+    df.filter(col(keyCol).isNotNull && col(itemCol).isNotNull)
+      .groupBy(col(keyCol).as("k"))
+      .agg(array_sort(collect_set(col(itemCol))).as("items"))
 
   /** Top-N pairs by frequency — the knowledge-base cut the reference
     * keeps (`Counter.most_common(50)`, `run_consumer.py:247`).

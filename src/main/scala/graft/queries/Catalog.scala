@@ -303,13 +303,12 @@ object Catalog {
     }
 
   /** J4 self-join co-occurrence (course pairs, train_module.py:397-405):
-    * distinct (order, part) → equi-join on order + theta (`<`) dedup →
-    * pair counts → top 50, served from the shared [[coPairCounts]]
-    * kernel. Scale: the one genuinely skew-sensitive computation —
-    * a power order with k parts makes k² pairs. The distinct pre-pass
-    * bounds k; the self-join shares the kernel's one exchange, so AQE
-    * cannot split a hot order — at 100 TB cap it with
-    * `CoOccurrence.pairs`' `maxItemsPerKey` (the retrain KB's 1000).
+    * each order's distinct parts → its (p1 < p2) pairs → pair counts →
+    * top 50, served from the shared [[coPairCounts]] kernel. Scale:
+    * the one genuinely skew-sensitive computation — a power order with
+    * k parts makes k² pairs in the one task holding its part set; at
+    * 100 TB cap it with `CoOccurrence.pairs`' `maxItemsPerKey` (the
+    * retrain KB's 1000).
     */
   val q14PartPairs: QuerySpec = QuerySpec(
     fn = (s, dir) =>
@@ -4891,8 +4890,8 @@ object Catalog {
     */
   val q117FrequentTriples: QuerySpec = QuerySpec(
     fn = (s, dir) => {
-      // distinct (order, part) rows partitioned by order once: neither
-      // candidate join below needs an exchange of its own
+      // distinct (order, part) rows partitioned by order once: op and
+      // its pair self-join share that one exchange
       val op = CoOccurrence.keyedItems(Tables.lineitem(s, dir), "l_orderkey", "l_partkey")
         .select(col("k").as("l_orderkey"), col("item").as("l_partkey"))
       val pairs = op.as("a").join(op.as("b"),

@@ -123,14 +123,10 @@ object PipelineCatalog {
           concat_ws("-", col(s"mh${4 * b}"), col(s"mh${4 * b + 1}"),
             col(s"mh${4 * b + 2}"), col(s"mh${4 * b + 3}"))): _*))
           .as(Seq("band_idx", "band_sig")))
-      // not CoOccurrence.pairs: on it q149, this kernel's first reader,
-      // read 1.10x and 1.13x the hand-rolled join at sf0.1
-      bands.as("a").join(bands.as("b"),
-          col("a.band_idx") === col("b.band_idx") &&
-            col("a.band_sig") === col("b.band_sig") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-        .distinct()
+      CoOccurrence.pairs(
+          bands.select(struct(col("band_idx"), col("band_sig")).as("bucket"), col("doc_id")),
+          "bucket", "doc_id")
+        .select(col("i1").as("d1"), col("i2").as("d2"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
@@ -327,17 +323,11 @@ object PipelineCatalog {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  /** PPJoin candidates (d1 < d2) of q35 and q296's prefix blocker. Not
-    * [[CoOccurrence.pairs]]: at sf0.1 its layout ran q35 1.49x and q296
-    * 1.36x slower (20-22 jobs vs 16-17) at the same exchange count. */
-  private def prefixCandidates(s: SparkSession, dir: String): DataFrame = {
-    val pref = prefixRows(s, dir)
-    pref.as("a").join(pref.as("b"),
-        col("a.shingle") === col("b.shingle") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()
-  }
+  /** PPJoin candidates (d1 < d2, distinct) of q35 and q296's prefix
+    * blocker: docs sharing a prefix shingle. */
+  private def prefixCandidates(s: SparkSession, dir: String): DataFrame =
+    CoOccurrence.pairs(prefixRows(s, dir), "shingle", "doc_id")
+      .select(col("i1").as("d1"), col("i2").as("d2"))
 
   private def ngramNearDupPairs(s: SparkSession, dir: String): DataFrame =
     nearDupPairCache(s, dir) {
@@ -3764,7 +3754,7 @@ object PipelineCatalog {
       .join(Tables.documents(s, dir).select(col("doc_id"), col("source")),
         Seq("doc_id"))
       .select(col("source"), col("shingle"))
-    // the sizes read the kernel's deduped rows: one exchange for both
+    // the sizes read the kernel's per-shingle sets: one exchange for both
     val sizes = CoOccurrence.keyedItems(srcSh, "shingle", "source")
       .groupBy(col("item").as("source")).agg(count(lit(1)).as("n"))
     val inter = CoOccurrence.pairs(srcSh, "shingle", "source")
@@ -3789,9 +3779,9 @@ object PipelineCatalog {
     * q49/q60 rationals invariant); zero-overlap pairs are kept so the
     * report is the complete |sources|²/2 matrix. Scale: rides the
     * shared shingle cache; the (source, shingle) rows shuffle once by
-    * shingle for the dedup and the self-join ([[CoOccurrence.pairs]]),
-    * the self-join fans out per shingle bounded by |sources| per key
-    * (never per document) and the output is |sources|-bounded. At
+    * shingle into per-shingle source sets ([[CoOccurrence.pairs]]), the
+    * pairs fan out per shingle bounded by |sources| per key (never per
+    * document) and the output is |sources|-bounded. At
     * 100 TB with thousands of feeds, MinHash per source replaces the
     * exact intersection — same report shape, q36's estimator.
     */

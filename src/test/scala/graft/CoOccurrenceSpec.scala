@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
@@ -58,7 +60,7 @@ class CoOccurrenceSpec extends SparkSpec {
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
-  test("pairs shuffles the (key, item) projection once below the self-join (capped and uncapped)") {
+  test("pairs shuffles the (key, item) projection once, deduped map-side, with no self-join (capped and uncapped)") {
     withAuditConf {
       // a persisted co_pairs kernel would stand in for the whole plan
       graft.queries.Catalog.clearCaches(spark)
@@ -66,12 +68,14 @@ class CoOccurrenceSpec extends SparkSpec {
       Seq(None, Some(1000)).foreach { cap =>
         val plan = CoOccurrence.pairs(li, "l_orderkey", "l_partkey", cap)
           .queryExecution.executedPlan
-        def shuffles(p: org.apache.spark.sql.execution.SparkPlan) =
-          p.collect { case e: ShuffleExchangeLike => e }.size
-        val joins = plan.collect { case j: SortMergeJoinExec => j }
-        assert(joins.size == 1, s"cap=$cap: expected one sort-merge self-join:\n$plan")
-        assert(shuffles(joins.head) == 1, s"cap=$cap: below the self-join:\n$plan")
-        assert(shuffles(plan) == 2, s"cap=$cap: the build plus the pair rollup:\n$plan")
+        def shuffles(p: SparkPlan) = p.collect { case e: ShuffleExchangeLike => e }
+        assert(plan.collect { case j: BaseJoinExec => j }.isEmpty,
+          s"cap=$cap: expected no join:\n$plan")
+        assert(shuffles(plan).size == 2, s"cap=$cap: the key grouping plus the pair rollup:\n$plan")
+        val byKey = shuffles(plan).filter(e => shuffles(e).size == 1)
+        assert(byKey.size == 1 &&
+          byKey.head.child.collect { case a: BaseAggregateExec => a }.nonEmpty,
+          s"cap=$cap: repeated rows drop before the key exchange:\n$plan")
       }
     }
   }
