@@ -79,9 +79,10 @@ object RetryProbe {
             observedFailures.incrementAndGet()
       })
 
-    // Probe 1 — the distributed prefix-sum kernel (q166/q184/q185
-    // family): range exchange + pid-keyed local cumsum + eagerly
-    // materialized multi-consumer barrier + broadcast offsets join.
+    // Probe 1 — the distributed prefix-scan kernel
+    // (operators.PrefixScan, the q166/q184/q185 family): range exchange
+    // + pid-keyed local cumsum + eagerly materialized multi-consumer
+    // barrier + broadcast offsets join.
     // The injection sits between the rollup aggregate and
     // repartitionByRange, so the range partitioner's SAMPLE job and
     // the localCheckpoint materialization both retry through it.
@@ -93,7 +94,8 @@ object RetryProbe {
           sum(when(col("o_orderstatus") === "F", 1L).otherwise(0L)).as("d1"),
           sum(when(col("o_orderstatus") === "O", 1L).otherwise(0L)).as("d2"))
         .select(fo(col("cents"), on).as("cents"), col("d1"), col("d2"))
-      queries.Catalog.rangePrefixSums(spark, rollup)
+      operators.PrefixScan.runningSums(rollup, Seq("cents"), "c1" -> col("d1"),
+          "c2" -> col("d2"))
         .select(col("cents"), col("c1"), col("c2"))
         .orderBy(col("cents"))
     }

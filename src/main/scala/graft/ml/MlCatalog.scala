@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.operators.PrefixScan
 import graft.queries.{KernelCache, QuerySpec}
 
 /** The reference's ML operator surface (SURVEY.md §2.10) re-expressed on
@@ -218,7 +219,7 @@ object MlCatalog {
     * division happens once on the driver. DECIMAL(38,0) for the rank
     * sum per the q109 headroom rule (Σ ≤ 2·P·n crosses 2^63 near
     * n ≈ 2×10⁹ validation rows). The cumulative count comes from the
-    * shared [[graft.queries.Catalog.rangePrefixSums]] distributed
+    * shared [[graft.operators.PrefixScan]] distributed
     * prefix-sum (range-partition on the margin, local cumsum, offsets
     * behind a broadcast join) — no single-task sort of the score grid
     * ever forms, and because ranks of distinct values are chunking-
@@ -237,13 +238,10 @@ object MlCatalog {
   private[graft] def classifierMetrics(scored: DataFrame): (Double, Double, Double) = {
     val margin = element_at(vector_to_array(col("rawPrediction")), 2)
     val perScore = scored
-      .groupBy(margin.as("cents")) // kernel's value-column contract
-      .agg(count(lit(1)).as("d1"), sum(col("label")).cast("long").as("d2"),
+      .groupBy(margin.as("margin"))
+      .agg(count(lit(1)).as("g"), sum(col("label")).cast("long").as("pos"),
         max(classOneP).as("p"))
-    val ranked = graft.queries.Catalog
-      .rangePrefixSums(scored.sparkSession, perScore)
-      .withColumnRenamed("d1", "g").withColumnRenamed("d2", "pos")
-      .withColumnRenamed("c1", "c")
+    val ranked = PrefixScan.runningSums(perScore, Seq("margin"), "c" -> col("g"))
     val eps = 1e-15
     def nll(q: Column): Column = -log(greatest(least(q, lit(1 - eps)), lit(eps)))
     val neg = col("g") - col("pos")

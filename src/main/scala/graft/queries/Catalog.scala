@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{CoOccurrence, Rounds}
+import graft.operators.{CoOccurrence, PrefixScan, Rounds}
 
 /** One named query: the Spark-side plan builder plus (when the semantics are
   * ANSI-SQL-expressible) an equivalent DuckDB SQL string for the driver's
@@ -1779,7 +1779,7 @@ object Catalog {
     * and d_sum = 2m (a built-in handshake check). Physical shape: the
     * final `labels` frame feeds THREE consumers (n/d rollup + both
     * endpoint joins) so it is eagerly materialized
-    * (`localCheckpoint(true)`, the rangePrefixSums multi-consumer
+    * (`localCheckpoint(true)`, the [[PrefixScan]] multi-consumer
     * rule); the endpoint joins are hash joins on the vertex key. At
     * 100 TB the LP labels come from the same iteration and everything
     * downstream is one vertex-keyed and one community-keyed shuffle.
@@ -1975,7 +1975,7 @@ object Catalog {
     * output presentation-sized while the windows still compute over
     * every row. Scale: one priority-keyed shuffle; within-partition
     * sort parallelizes per key — the q19 class (at corpus scale a
-    * global-ordered variant swaps in rangePrefixSums, the q97/q166
+    * global-ordered variant swaps in [[PrefixScan]], the q97/q166
     * distributed-CDF kernel).
     */
   val q254RankFractions: QuerySpec = QuerySpec(
@@ -2246,7 +2246,7 @@ object Catalog {
     * The rank windows run over the per-part ROLLUP — |parts|-bounded
     * by construction (the fact table shuffles once into the rollup;
     * ExplainSpec.windowAllowlist names the bound; at corpus scale the
-    * global-ordered variant swaps in the rangePrefixSums distributed
+    * global-ordered variant swaps in the [[PrefixScan]] distributed
     * CDF kernel, the q166 shape). BIGINT headroom (q109 rule):
     * n(n²−1) crosses 2^63 at n ≈ 2.1×10⁶ parts — sf0.1 is 2×10⁴;
     * past that both engines move the rational to DECIMAL(38,0).
@@ -2333,7 +2333,7 @@ object Catalog {
     * CTEs (median via row_number = (n+1)//2, identical refusal
     * arithmetic). Scale: each round is one (path)-keyed window + a
     * path-keyed rollup joined back — path cardinality ≤ 2^round; at
-    * corpus scale the per-path median swaps to the rangePrefixSums
+    * corpus scale the per-path median swaps to the [[PrefixScan]]
     * distributed CDF kernel (q166) exactly like every exact-quantile
     * computation here.
     */
@@ -5788,12 +5788,11 @@ object Catalog {
     * double-NOT-EXISTS definition, so the compare crosses two
     * different algorithms (the q94 rule). The "max count over
     * strictly higher balances" is a DISTRIBUTED PREFIX MAX in
-    * descending-balance order, the q166 kernel with max for sum: a
-    * naive value-based range frame (rangeBetween(1, ∞)) re-scans its
-    * frame per row on one task — measured O(n²): 114 s at 10× —
-    * while the per-balance rollup + range-partitioned local running
-    * max + per-partition offset prefix (one row per partition,
-    * broadcast back) is one range exchange and linear work. Scale:
+    * descending-balance order, [[PrefixScan.earlierMax]] over the
+    * per-balance rollup: a naive value-based range frame
+    * (rangeBetween(1, ∞)) re-scans its frame per row on one task —
+    * measured O(n²): 114 s at 10× — while the kernel is one range
+    * exchange and linear work. Scale:
     * the frontier input is the |customers|-sized rollup, one custkey
     * shuffle from the facts; nothing fact-sized ever sorts on one
     * task.
@@ -5812,28 +5811,11 @@ object Catalog {
       val byBal = pts.groupBy(col("bal_cents"))
         .agg(max(col("n_orders")).as("maxn_equal"))
         .withColumn("neg", -col("bal_cents"))
-      val p = s.sparkContext.defaultParallelism
-      val parts = byBal.repartitionByRange(p, col("neg"))
-        .withColumn("pid", spark_partition_id())
-      // strictly-higher balances = strictly-previous rows in desc order
-      val localPrev = Window.partitionBy(col("pid")).orderBy(col("neg"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      // eager barrier: offsets (broadcast) and the final join both read
-      // `cum` — without it the broadcast subtree can recompute the range
-      // exchange with different sampled boundaries and mis-assign every
-      // partition offset (the rangePrefixSums hazard, found via q185)
-      val cum = parts.withColumn("lprev",
-        coalesce(max(col("maxn_equal")).over(localPrev), lit(-1L)))
-        .localCheckpoint(true)
-      val offsets = cum.groupBy(col("pid"))
-        .agg(max(col("maxn_equal")).as("t"))
-        .withColumn("oprev", coalesce(max(col("t")).over(
-          Window.orderBy(col("pid")).rowsBetween(
-            Window.unboundedPreceding, -1)), lit(-1L)))
-        .select(col("pid"), col("oprev"))
-      val pref = cum.join(broadcast(offsets), "pid")
+      // strictly-higher balances = strictly-smaller `neg` keys; NULL
+      // (no higher balance) reads as -1, below every count
+      val pref = PrefixScan.earlierMax(byBal, "neg", "maxn_higher" -> col("maxn_equal"))
         .select(col("bal_cents"), col("maxn_equal"),
-          greatest(col("lprev"), col("oprev")).as("maxn_higher"))
+          coalesce(col("maxn_higher"), lit(-1L)).as("maxn_higher"))
       pts.join(pref, "bal_cents")
         .filter(col("maxn_higher") < col("n_orders") &&
           col("n_orders") === col("maxn_equal"))
@@ -6007,23 +5989,6 @@ object Catalog {
       SELECT v AS part, lbl AS community FROM l3 ORDER BY part"""
     })
 
-  /** Two-sample KOLMOGOROV–SMIRNOV statistic between the F and O
-    * order-value distributions — the nonparametric drift test (the
-    * continuous-distribution complement of q88's chi-square and
-    * q136's moment drift), EXACT: D = max |F₁(x) − F₂(x)| evaluated
-    * at every distinct value, cross-multiplied to the integer
-    * |c₁·n₂ − c₂·n₁| over denominator n₁·n₂ (the q49/q60 rational
-    * contract — no float CDF ever forms). The global CDF does NOT use
-    * a global-sort window: the per-value rollup range-partitions on
-    * the value, each partition cumsums LOCALLY (window keyed by
-    * spark_partition_id — equal keys never split across range
-    * partitions), and partition offsets — one row per partition —
-    * prefix-sum on the driver side of a broadcast join. That is the
-    * distributed prefix-sum every exact quantile/CDF computation uses
-    * at scale; wall-clock is one cents shuffle + one range exchange,
-    * no single-task sort of the data. BIGINT: c·n crosses 2^63 at
-    * n ≈ 3·10⁹ per side (q109 escalation documented).
-    */
   /** F/O per-value count rollup shared by the KS and Mann–Whitney
     * statistics: one row per distinct order-value cents with the two
     * samples' counts.
@@ -6036,83 +6001,13 @@ object Catalog {
         sum(when(col("o_orderstatus") === "F", 1L).otherwise(0L)).as("d1"),
         sum(when(col("o_orderstatus") === "O", 1L).otherwise(0L)).as("d2"))
 
-  /** DISTRIBUTED prefix sum of (d1, d2) in `cents` order — the scale
-    * pattern behind every exact CDF/rank computation: range-partition
-    * on the value (equal keys never split), cumsum LOCALLY under a
-    * spark_partition_id window, and add per-partition offsets — one
-    * row per partition — prefix-summed behind a broadcast join. No
-    * single-task sort of the data ever forms. Returns the input rows
-    * plus INCLUSIVE cumulative counts c1, c2.
-    */
-  private[graft] def rangePrefixSums(s: SparkSession, rollup: DataFrame): DataFrame = {
-    val p = s.sparkContext.defaultParallelism
-    val parts = rollup.repartitionByRange(p, col("cents"))
-      .withColumn("pid", spark_partition_id())
-    val local = Window.partitionBy(col("pid")).orderBy(col("cents"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // EAGER barrier, load-bearing for correctness: `cum` feeds both the
-    // offsets aggregate (broadcast side) and the final join. Without a
-    // materialization the broadcast subtree can RECOMPUTE the range
-    // exchange with freshly sampled boundaries — pids then disagree
-    // between the two consumers and every partition past the first gets
-    // a wrong offset (observed on q185: block-constant errors of ±10-20,
-    // one block per partition). localCheckpoint pins one boundary
-    // sample; the rollup is value-domain-sized, so the materialization
-    // is cheap.
-    val cum = parts
-      .withColumn("lc1", sum(col("d1")).over(local))
-      .withColumn("lc2", sum(col("d2")).over(local))
-      .localCheckpoint(true)
-    val offsets = cum.groupBy(col("pid"))
-      .agg(sum(col("d1")).as("t1"), sum(col("d2")).as("t2"))
-      .withColumn("o1", coalesce(sum(col("t1")).over(
-        Window.orderBy(col("pid")).rowsBetween(
-          Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("o2", coalesce(sum(col("t2")).over(
-        Window.orderBy(col("pid")).rowsBetween(
-          Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("o1"), col("o2"))
-    cum.join(broadcast(offsets), "pid")
-      .withColumn("c1", col("lc1") + col("o1"))
-      .withColumn("c2", col("lc2") + col("o2"))
-      .drop("lc1", "lc2", "o1", "o2", "pid")
-  }
-
-  /** Lateness of each row's event time behind the running high-water
-    * mark of all STRICTLY-EARLIER accessions — the q162 distributed
-    * prefix max with a RANGE frame (ties on the accession key see the
-    * same predecessor set on both engines, so duplicate accession keys
-    * — lineitem's replicated orderkeys — stay deterministic) and the
-    * q185 eager-barrier rule. Input (acc, tv) integer pairs; output one
-    * `late = max(0, prevmax − tv)` per row.
-    */
-  private def accessionLateness(s: SparkSession, rows: DataFrame): DataFrame = {
-    val p = s.sparkContext.defaultParallelism
-    val parts = rows.repartitionByRange(p, col("acc"))
-      .withColumn("pid", spark_partition_id())
-    val localPrev = Window.partitionBy(col("pid")).orderBy(col("acc"))
-      .rangeBetween(Window.unboundedPreceding, -1)
-    val cum = parts
-      .withColumn("lprev", coalesce(max(col("tv")).over(localPrev), lit(0L)))
-      .localCheckpoint(true)
-    val offsets = cum.groupBy(col("pid"))
-      .agg(max(col("tv")).as("t"))
-      .withColumn("oprev", coalesce(max(col("t")).over(
-        Window.orderBy(col("pid")).rowsBetween(
-          Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("oprev"))
-    cum.join(broadcast(offsets), "pid")
-      .select(greatest(lit(0L),
-        greatest(col("lprev"), col("oprev")) - col("tv")).as("late"))
-  }
-
   /** Watermark-lag audit — the measurement every `withWatermark(delay)`
     * in the streaming layer depends on but none of the batch catalog
     * produced: how OUT-OF-ORDER does each feed arrive? Lateness of row
     * i = max(0, max_{j≺i} t_j − t_i) over the feed's ACCESSION order —
     * how far behind the high-water mark the row lands, the exact
     * quantity a watermark delay must dominate for the ST9 operators to
-    * never drop it. Two feeds through the shared [[accessionLateness]]
+    * never drop it. Two feeds through the shared [[PrefixScan.earlierMax]]
     * kernel: `events` in event_id order (FINDING: the fixture feed is
     * perfectly ordered — one bucket-0 row saying "watermark 0
     * suffices" IS the audit's answer there) and `lineitem` ship dates
@@ -6120,10 +6015,8 @@ object Catalog {
     * disordered (the fixture ships lines up to years behind the
     * running mark), which exercises the full bucket curve. The global
     * running max never uses a partitionless window (the q162 O(n²)/
-    * single-task class): range-partition on the accession key,
-    * strictly-previous RANGE-frame local max (tie-deterministic under
-    * lineitem's duplicate orderkeys), per-partition offsets
-    * prefix-maxed behind a broadcast, q185 eager barrier. Lateness in
+    * single-task class): the kernel's RANGE frame keeps it
+    * tie-deterministic under lineitem's duplicate orderkeys. Lateness in
     * whole SECONDS on integer arithmetic for both feeds (micros÷10⁶;
     * day-gaps ×86400), q131-style log2 buckets per feed; the top
     * nonempty bucket's max_late_s is that feed's watermark floor and
@@ -6138,9 +6031,13 @@ object Catalog {
         .select(col("l_orderkey").as("acc"),
           datediff(to_date(col("l_shipdate")), lit("1970-01-01"))
             .cast("bigint").as("tv"))
-      val evLate = accessionLateness(s, ev)
+      // lateness behind the strictly-earlier accessions' high-water mark
+      def lateness(rows: DataFrame): DataFrame =
+        PrefixScan.earlierMax(rows, "acc", "prev" -> col("tv"))
+          .select(greatest(lit(0L), coalesce(col("prev"), lit(0L)) - col("tv")).as("late"))
+      val evLate = lateness(ev)
         .select(lit("events").as("feed"), expr("late div 1000000").as("late_s"))
-      val liLate = accessionLateness(s, li)
+      val liLate = lateness(li)
         .select(lit("lineitem_ship").as("feed"), (col("late") * 86400L).as("late_s"))
       evLate.unionByName(liLate)
         .select(col("feed"),
@@ -6174,11 +6071,25 @@ object Catalog {
              CAST(max(late_s) AS BIGINT) AS max_late_s
       FROM u GROUP BY feed, bucket ORDER BY feed, bucket"""))
 
+  /** Two-sample KOLMOGOROV–SMIRNOV statistic between the F and O
+    * order-value distributions — the nonparametric drift test (the
+    * continuous-distribution complement of q88's chi-square and
+    * q136's moment drift), EXACT: D = max |F₁(x) − F₂(x)| evaluated
+    * at every distinct value, cross-multiplied to the integer
+    * |c₁·n₂ − c₂·n₁| over denominator n₁·n₂ (the q49/q60 rational
+    * contract — no float CDF ever forms). The global CDF is the
+    * [[PrefixScan.runningSums]] of the per-value rollup — the
+    * distributed prefix sum every exact quantile/CDF computation uses
+    * at scale, never a global-sort window; wall-clock is one cents
+    * shuffle + one range exchange, no single-task sort of the data.
+    * BIGINT: c·n crosses 2^63 at n ≈ 3·10⁹ per side (q109 escalation
+    * documented).
+    */
   val q166KsStatistic: QuerySpec = QuerySpec(
     fn = (s, dir) => {
       val rollup = foValueRollup(s, dir)
       val totals = rollup.agg(sum(col("d1")).as("n1"), sum(col("d2")).as("n2"))
-      rangePrefixSums(s, rollup)
+      PrefixScan.runningSums(rollup, Seq("cents"), "c1" -> col("d1"), "c2" -> col("d2"))
         .join(broadcast(totals))
         .select(col("n1"), col("n2"),
           abs(col("c1") * col("n2") - col("c2") * col("n1")).as("diff"))
@@ -6217,7 +6128,7 @@ object Catalog {
     * prev+1..prev+d, average (2·prev+d+1)/2, so sample 1 contributes
     * d₁·(2·prev+d+1) to 2·R₁ — all integers, no halves ever
     * materialize; 2·U₁ = 2·R₁ − n₁(n₁+1) ships alongside. The
-    * cumulative `prev` comes from the same [[rangePrefixSums]]
+    * cumulative `prev` comes from the same [[PrefixScan.runningSums]]
     * distributed prefix sum (exclusive = inclusive − own counts).
     * Scale: identical profile to q166 — one cents shuffle + one range
     * exchange; 2·R₁ ≈ n² crosses 2^63 near 3·10⁹ total rows (q109
@@ -6227,7 +6138,7 @@ object Catalog {
     fn = (s, dir) => {
       val rollup = foValueRollup(s, dir)
       val totals = rollup.agg(sum(col("d1")).as("n1"), sum(col("d2")).as("n2"))
-      rangePrefixSums(s, rollup)
+      PrefixScan.runningSums(rollup, Seq("cents"), "c1" -> col("d1"), "c2" -> col("d2"))
         .select(col("d1"), col("d2"),
           (col("c1") - col("d1") + col("c2") - col("d2")).as("prev"),
           (col("d1") + col("d2")).as("d"))
@@ -6339,7 +6250,7 @@ object Catalog {
   /** CRAMÉR–VON MISES two-sample statistic (Cramér 1928; two-sample
     * form Anderson 1962) between the same F/O order-value samples —
     * the third leg of the exact distribution-comparison suite on the
-    * shared [[rangePrefixSums]] kernel: q166's KS reacts to the WORST
+    * shared [[PrefixScan]] kernel: q166's KS reacts to the WORST
     * single CDF gap, q167's U to a median shift, CvM to the INTEGRAL
     * of squared CDF gaps — the whole-distribution sensitivity that
     * catches many-small-gaps drift KS underweights. Computational
@@ -6364,7 +6275,7 @@ object Catalog {
       def d19(c: Column) = c.cast("decimal(19,0)")
       val rollup = foValueRollup(s, dir)
       val totals = rollup.agg(sum(col("d1")).as("n1"), sum(col("d2")).as("n2"))
-      rangePrefixSums(s, rollup)
+      PrefixScan.runningSums(rollup, Seq("cents"), "c1" -> col("d1"), "c2" -> col("d2"))
         .join(broadcast(totals))
         .select(col("n1"), col("n2"),
           (d19(col("d1") + col("d2")) *
@@ -6556,7 +6467,7 @@ object Catalog {
     * double seconds). Scale: one user_id shuffle builds gaps; the
     * rank windows partition by event_type over the gap rows — same
     * parallelism class as q103; at extreme per-type volumes the
-    * nearest-rank windows swap for the q166 rangePrefixSums CDF or
+    * nearest-rank windows swap for the q166 [[PrefixScan]] CDF or
     * the q61/q171 sketch path, same contract.
     */
   val q176InterEventGaps: QuerySpec = QuerySpec(
@@ -6684,7 +6595,7 @@ object Catalog {
     * integer metrics, the three bucket digits (3 = best), and the
     * concatenated segment label. Scale: one custkey shuffle for the
     * rollup; thresholds are rank windows over the rollup — at
-    * fact-sized customer counts they swap for the q166 rangePrefixSums
+    * fact-sized customer counts they swap for the q166 [[PrefixScan]]
     * CDF, same value-threshold contract.
     */
   val q178RfmSegmentation: QuerySpec = QuerySpec(
@@ -6705,7 +6616,7 @@ object Catalog {
         val ord = if (asc) col(metric).asc else col(metric).desc
         val w = Window.orderBy(ord, col("o_custkey"))
         // rank windows over the customer rollup: acceptable at fixture
-        // scale, rangePrefixSums past it (see scaladoc); the window is
+        // scale, PrefixScan past it (see scaladoc); the window is
         // partitionless but its consumer keeps only 2 rows
         val ranked = rfm
           .withColumn("rn", row_number().over(w).cast("bigint"))
@@ -7107,7 +7018,7 @@ object Catalog {
     * Horvitz–Thompson estimator divides by). Exactly m total hits by
     * telescoping, all integer arithmetic (a random-start variant adds
     * a seeded offset < W/m — same plan). The prefix sum is the q166
-    * rangePrefixSums kernel keyed on partkey — NO single-task global
+    * [[PrefixScan.runningSums]] kernel keyed on partkey — NO single-task global
     * sort, the whole reason PPS usually gets approximated at scale.
     * The weighted complement of q22's uniform arithmetic sample;
     * q68's quota sampler allocates BETWEEN strata, this samples
@@ -7122,17 +7033,12 @@ object Catalog {
           expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("w"))
         .groupBy(col("l_partkey")).agg(sum(col("w")).as("w"))
         .filter(col("w") > 0)
-      // kernel contract: ordering key column named `cents`, summands
-      // d1/d2 — partkey is the frame order, d2 unused
-      val rollup = wts.select(col("l_partkey").as("cents"),
-        col("w").as("d1"), lit(0L).as("d2"))
       val tot = wts.agg(sum(col("w")).as("big_w"))
-      rangePrefixSums(s, rollup)
+      PrefixScan.runningSums(wts, Seq("l_partkey"), "cum_w" -> col("w"))
         .crossJoin(broadcast(tot))
-        .select(col("cents").as("l_partkey"), col("d1").as("w"),
-          col("c1").as("cum_w"), col("big_w"),
-          (expr(s"(c1 * $m) div big_w") -
-            expr(s"((c1 - d1) * $m) div big_w")).as("n_hits"))
+        .select(col("l_partkey"), col("w"), col("cum_w"), col("big_w"),
+          (expr(s"(cum_w * $m) div big_w") -
+            expr(s"((cum_w - w) * $m) div big_w")).as("n_hits"))
         .filter(col("n_hits") > 0)
         .orderBy(col("l_partkey"))
     },
@@ -7164,7 +7070,7 @@ object Catalog {
     * orders with no line items never close (the q177 referential gap
     * surfaces here as a tail that never drains — real backlog
     * reports have exactly this class). The prefix sum rides the q166
-    * rangePrefixSums kernel (d1 = net delta per day) — no single-task
+    * [[PrefixScan.runningSums]] kernel (the net delta per day) — no single-task
     * sort; output is |calendar days| rows with the open count and
     * that day's open/close volumes. The event-boundary rollup is also
     * how q92's SCD validity intervals aggregate at scale.
@@ -7188,13 +7094,13 @@ object Catalog {
         .groupBy(col("d"))
         .agg(sum(col("n_open")).as("n_opened"),
           sum(col("n_close")).as("n_closed"))
-      val rollup = deltas.select(
-        expr("datediff(d, DATE'1970-01-01')").cast("bigint").as("cents"),
-        (col("n_opened") - col("n_closed")).as("d1"),
-        col("n_opened").as("d2"))
-      rangePrefixSums(s, rollup)
-        .select(col("cents").as("epoch_day"), col("c1").as("n_open_orders"),
-          col("d2").as("n_opened"), (col("d2") - col("d1")).as("n_closed"))
+      val days = deltas.select(
+        expr("datediff(d, DATE'1970-01-01')").cast("bigint").as("epoch_day"),
+        col("n_opened"), col("n_closed"))
+      PrefixScan.runningSums(days, Seq("epoch_day"),
+          "n_open_orders" -> (col("n_opened") - col("n_closed")))
+        .select(col("epoch_day"), col("n_open_orders"), col("n_opened"),
+          col("n_closed"))
         .orderBy(col("epoch_day"))
     },
     oracle = Some("""
@@ -7344,7 +7250,7 @@ object Catalog {
     * cumulative count reaches ⌈i·n/10⌉ (nearest-rank, the q103
     * convention), emitted with its exact rank and the bucket's actual
     * row count — the self-audit showing how close to n/10 each depth
-    * landed under ties. The CDF is the rangePrefixSums kernel over the
+    * landed under ties. The CDF is the [[PrefixScan]] kernel over the
     * distinct-value rollup (the q128/q161 statistics feed at any
     * scale, no single-task sort); boundary extraction joins the
     * 10-row rank table against the CDF — one broadcast, one shuffle.
@@ -7355,8 +7261,7 @@ object Catalog {
         .select(expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
         .groupBy(col("cents"))
         .agg(count(lit(1)).as("d1"))
-        .withColumn("d2", lit(0L))
-      val cdf = rangePrefixSums(s, rollup)
+      val cdf = PrefixScan.runningSums(rollup, Seq("cents"), "c1" -> col("d1"))
       val tot = rollup.agg(sum(col("d1")).as("n"))
       val ranks = s.range(1, 11).toDF("bucket")
         .crossJoin(broadcast(tot))
@@ -7403,7 +7308,7 @@ object Catalog {
     * after it (two filtered min-aggregates on one user shuffle — no
     * ordered window needed), delay in integer MICROSECONDS; then the
     * population n / p50 / p90 / max, with the percentiles as exact
-    * nearest-ranks extracted from a rangePrefixSums CDF over the
+    * nearest-ranks extracted from a [[PrefixScan]] CDF over the
     * delay rollup (the q188 boundary-extraction shape — converting
     * users are fact-scaled, so no partitionless rank window ever sees
     * them; the q178 lesson). Never-converting users are excluded by
@@ -7422,8 +7327,8 @@ object Catalog {
         .agg(min(col("us")).as("purchase_us"))
         .select((col("purchase_us") - col("signup_us")).as("delay_us"))
       val rollup = delays.groupBy(col("delay_us").as("cents"))
-        .agg(count(lit(1)).as("d1")).withColumn("d2", lit(0L))
-      val cdf = rangePrefixSums(s, rollup)
+        .agg(count(lit(1)).as("d1"))
+      val cdf = PrefixScan.runningSums(rollup, Seq("cents"), "c1" -> col("d1"))
       val tot = rollup.agg(sum(col("d1")).as("n"))
       val ranks = tot.select(col("n"),
         expr("(n + 1) div 2").as("r50"), expr("n - (n div 10)").as("r90"))
@@ -8450,7 +8355,7 @@ object Catalog {
     * 3·Q1 — pure BIGINT). Complements q103's median/MAD (robust
     * center/spread) with the robust TAIL rule every data-quality
     * screen applies. Scale: one rank-window pass per status over the
-    * facts (the q103 class — rangePrefixSums is the documented
+    * facts (the q103 class — [[PrefixScan]] is the documented
     * extreme-volume swap), quartile rows broadcast back as a 3-row
     * join; counting is map-side.
     */
@@ -8787,7 +8692,7 @@ object Catalog {
     * distribution level). Per interior decile: each variant's exact
     * nearest-rank boundary (q103/q188 convention) and the integer
     * cents difference. The two-variant CDF is ONE pass of the shared
-    * [[rangePrefixSums]] kernel — the (d1, d2) slots carry the A/B
+    * [[PrefixScan]] kernel — the (d1, d2) slots carry the A/B
     * counts exactly as q166/q167 carry the F/O samples — so the whole
     * query is the q188 equi-depth machinery run two-sample: one cents
     * shuffle + one range exchange, 9-row broadcast rank table, no
@@ -8805,7 +8710,8 @@ object Catalog {
         .groupBy(col("cents"))
         .agg(sum(when(col("va"), 1L).otherwise(0L)).as("d1"),
           sum(when(!col("va"), 1L).otherwise(0L)).as("d2"))
-      val cdf = rangePrefixSums(s, rollup)
+      val cdf = PrefixScan.runningSums(rollup, Seq("cents"), "c1" -> col("d1"),
+        "c2" -> col("d2"))
       val totals = rollup.agg(sum(col("d1")).as("n1"), sum(col("d2")).as("n2"))
       val ranks = s.range(1, 10).toDF("decile")
         .crossJoin(broadcast(totals))
@@ -8869,7 +8775,7 @@ object Catalog {
     * round, and a cumulative product's numerator explodes — the
     * per-t table IS the portable statistic). The at-risk count is a
     * REVERSE running sum over the lifetime rollup (calendar-bounded —
-    * ≤ |days| rows, allowlisted; the rangePrefixSums kernel on the
+    * ≤ |days| rows, allowlisted; the [[PrefixScan]] kernel on the
     * negated key is the fact-scale swap). Scale: one custkey shuffle
     * to lifetimes, one rollup, domain-sized window.
     */
@@ -10143,7 +10049,7 @@ object Catalog {
     * domain calendar-bounded ≤ |days| rows) feeds a prefix-sum +
     * running-min window over that bounded rollup — the
     * ExplainSpec-allowlisted class whose fact-scale swap is
-    * rangePrefixSums (q166's kernel); the fact table itself is
+    * [[PrefixScan]] (q166's kernel); the fact table itself is
     * touched exactly once.
     */
   val q281PageHinkley: QuerySpec = QuerySpec(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.CoOccurrence
+import graft.operators.{CoOccurrence, PrefixScan}
 
 /** Training-data pipeline operators (dedup, similarity search, text
   * analysis, multimodal columns) over the `documents` / `embeddings`
@@ -2884,12 +2884,10 @@ object PipelineCatalog {
     * recall/cost readout that tells you what a window of 8 buys.
     *
     * SCALE-CORRECT RANKS, the point of the entry: no global-sort
-    * window anywhere — ranks come from the q162/q166 distributed
-    * prefix-sum shape (range-partition on (key, doc_id), LOCAL
-    * row_number under a spark_partition_id window, per-partition
-    * counts prefix-summed behind a broadcast join, with the q185
-    * eager-barrier localCheckpoint pinning ONE boundary sample for
-    * both consumers), and the within-w window join is the 1-D grid
+    * window anywhere — ranks are the inclusive running sum of a
+    * constant 1 in (key, doc_id) order on the [[PrefixScan]] kernel
+    * (one range exchange, local folds, per-partition offsets behind a
+    * broadcast join), and the within-w window join is the 1-D grid
     * trick (q292's in one dimension): probe side explodes to blocks
     * {⌊r/w⌋, ⌊r/w⌋+1}, index side keys ⌊r/w⌋, equi-join then the
     * exact rank-distance filter — each true pair matched exactly
@@ -2903,23 +2901,10 @@ object PipelineCatalog {
     val w = 8
     QuerySpec(
       fn = (s, dir) => {
-        def ranks(rows: DataFrame): DataFrame = {
-          val p = s.sparkContext.defaultParallelism
-          val parts = rows.repartitionByRange(p, col("k"), col("doc_id"))
-            .withColumn("pid", spark_partition_id())
-          val local = Window.partitionBy(col("pid"))
-            .orderBy(col("k"), col("doc_id"))
-          val cum = parts
-            .withColumn("lr", row_number().over(local).cast("long"))
-            .localCheckpoint(true) // q185 rule: one boundary sample
-          val offsets = cum.groupBy(col("pid")).agg(count(lit(1)).as("t"))
-            .withColumn("o", coalesce(sum(col("t")).over(
-              Window.orderBy(col("pid")).rowsBetween(
-                Window.unboundedPreceding, -1)), lit(0L)))
-            .select(col("pid"), col("o"))
-          cum.join(broadcast(offsets), "pid")
-            .select(col("doc_id"), (col("lr") + col("o")).as("r"))
-        }
+        // 1-based rank in (k, doc_id) order
+        def ranks(rows: DataFrame): DataFrame =
+          PrefixScan.runningSums(rows, Seq("k", "doc_id"), "r" -> lit(1L))
+            .select(col("doc_id"), col("r"))
         def cand(ranked: DataFrame): DataFrame = {
           val probe = ranked.select(col("doc_id").as("da"),
             col("r").as("ra"),

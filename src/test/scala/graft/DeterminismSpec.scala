@@ -1,7 +1,7 @@
 package graft
 
 /** Results must not depend on the partition layout — the failure class
-  * behind the rangePrefixSums boundary-recompute bug (block-constant
+  * behind the PrefixScan boundary-recompute bug (block-constant
   * offset errors) and the reason every rank/fold in the catalog
   * carries explicit tiebreaks. Representative queries from each risky
   * family (prefix-sum kernel, global-order extraction, deterministic

@@ -236,6 +236,14 @@ object ExplainSpec {
     * catalog query not listed here whose partitionless window input it
     * cannot prove bounded.
     */
+  /** The one window of [[graft.operators.PrefixScan]] that has no
+    * partition: the fold over its per-partition totals, one row per
+    * range partition. Every entry whose only such window is the
+    * kernel's shares this reason.
+    */
+  private val prefixScanOffsets =
+    "offset fold over per-partition totals (operators.PrefixScan); bounded by the shuffle partition count"
+
   val windowAllowlist: Map[String, String] = Map(
     "m07_roc_points" ->
       "window input = per-threshold rollup; thr domain is the fixed 11-value ROC grid",
@@ -248,59 +256,58 @@ object ExplainSpec {
     "q144_top_quarter_supplier" ->
       "window input = groupBy(l_suppkey) revenue rollup; bounded by |suppliers|",
     "q162_pareto_frontier" ->
-      "offset prefix-max over per-partition totals; bounded by the shuffle partition count",
+      prefixScanOffsets,
     "q166_ks_statistic" ->
-      "offset prefix-sum over per-partition totals; bounded by the shuffle partition count",
+      prefixScanOffsets,
     "q167_mann_whitney_u" ->
-      "offset prefix-sum over per-partition totals; bounded by the shuffle partition count",
+      prefixScanOffsets,
     "q178_rfm_segmentation" ->
-      "threshold rank windows over the per-customer rollup (2 rows kept); rangePrefixSums is the documented fact-scale swap",
+      "threshold rank windows over the per-customer rollup (2 rows kept); PrefixScan.runningSums is the documented fact-scale swap",
     "q184_pps_sample" ->
-      "offset prefix-sum over per-partition totals; bounded by the shuffle partition count",
+      prefixScanOffsets,
     "q206_ranking_metrics" ->
       "cumulative-hits window over the limit-50 popular cut joined with its per-rank hit rollup; rank domain fixed at k=50",
     "q219_quantile_effect" ->
-      "offset prefix-sum over per-partition totals (rangePrefixSums kernel); bounded by the shuffle partition count",
+      prefixScanOffsets,
     "q220_survival_stats" ->
-      "reverse at-risk sum over the lifetime rollup; lifetime domain is calendar-bounded (≤|days| rows) — rangePrefixSums on the negated key is the fact-scale swap",
+      "reverse at-risk sum over the lifetime rollup; lifetime domain is calendar-bounded (≤|days| rows) — PrefixScan.runningSums on the negated key is the fact-scale swap",
     "q185_open_orders_per_day" ->
-      "offset prefix-sum over per-partition totals; bounded by the shuffle partition count",
+      prefixScanOffsets,
     "q188_equidepth_histogram" ->
-      "offset prefix-sum over per-partition totals; bounded by the shuffle partition count",
+      prefixScanOffsets,
     "q189_funnel_latency" ->
-      "offset prefix-sum over per-partition totals; bounded by the shuffle partition count",
+      prefixScanOffsets,
     "q298_bh_fdr" ->
       "BH rank window over the groupBy(nation) test rollup; nation domain fixture-fixed at 25",
     "q288_sax_symbols" ->
       "ntile window over the 16-segment PAA rollup (128 calendar days div 8, fixed segment domain)",
     "q281_page_hinkley" ->
-      "prefix-sum + running-min windows over the daily rollup; day domain calendar-bounded (≤|days| rows) — rangePrefixSums is the fact-scale swap",
+      "prefix-sum + running-min windows over the daily rollup; day domain calendar-bounded (≤|days| rows) — PrefixScan.runningSums is the fact-scale swap",
     "q277_cramer_von_mises" ->
-      "offset prefix-sum over per-partition totals (rangePrefixSums kernel); bounded by the shuffle partition count",
+      prefixScanOffsets,
     "q246_watermark_lag" ->
-      "offset prefix-MAX over per-partition high-water marks (accessionLateness kernel, two feeds); bounded by the shuffle partition count",
+      prefixScanOffsets,
     // the four below execute their windows behind eager localCheckpoint
     // barriers — visible only to the round-11 listener capture
     "q265_spearman_ranks" ->
-      "rank windows over the per-part rollup (eager barrier); |parts|-bounded at fixture scale — rangePrefixSums is the documented fact-scale swap",
+      "rank windows over the per-part rollup (eager barrier); |parts|-bounded at fixture scale — PrefixScan.runningSums is the documented fact-scale swap",
     "q304_matrix_profile" ->
       "row_number + 16-row sliding collect over the daily rollup (eager barrier); day domain calendar-bounded (~2370 rows at any SF)",
     "q307_sorted_neighborhood" ->
-      "offset prefix-sum over per-partition totals (rangePrefixSums kernel behind the eager barrier); bounded by the shuffle partition count",
+      prefixScanOffsets,
     "q310_mann_kendall" ->
       "row_number over the daily rollup (eager barrier); day domain calendar-bounded (~2370 rows at any SF)",
     // classifierMetrics (deterministic midrank AUC, logloss and
-    // accuracy from one per-margin rollup) runs the rangePrefixSums
-    // kernel over the distinct-margin rollup inside every GBT/LR metric
-    // evaluation — same offsets-window class
+    // accuracy from one per-margin rollup) runs PrefixScan over the
+    // distinct-margin rollup inside every GBT/LR metric evaluation
     "m05_gbt_eval" ->
-      "offset prefix-sum over per-partition totals (rangePrefixSums kernel inside classifierMetrics); bounded by the shuffle partition count",
+      prefixScanOffsets,
     "m13_learning_curve" ->
-      "offset prefix-sum over per-partition totals (rangePrefixSums kernel inside classifierMetrics, 3 fits); bounded by the shuffle partition count",
+      prefixScanOffsets,
     "m14_cross_validation" ->
-      "offset prefix-sum over per-partition totals (rangePrefixSums kernel inside classifierMetrics, 5 folds); bounded by the shuffle partition count",
+      prefixScanOffsets,
     "m22_permutation_importance" ->
-      "offset prefix-sum over per-partition totals (rangePrefixSums kernel inside classifierMetrics, 7 evaluations); bounded by the shuffle partition count")
+      prefixScanOffsets)
 
   /** Non-scalar nested-loop joins (no equi-key, neither side provably
     * ≤1 row) whose |L|·|R| candidate volume is bounded by a DOMAIN the
@@ -339,7 +346,7 @@ object ExplainSpec {
     "q215_heaps_law" ->
       "10-row decile-cutoff grid band-joined (<=) against per-doc rollups; fan-out bounded by 10",
     "q219_quantile_effect" ->
-      "range probe of the broadcast 9-row quantile-rank table (rangePrefixSums kernel)",
+      "range probe of the broadcast 9-row quantile-rank table (PrefixScan CDF)",
     "q255_jaro_winkler_match" ->
       "|vocab|^2 all-pairs over the DISTINCT name vocabulary by contract (Heaps-bounded; never |rows|^2)",
     "q262_damerau_scores" ->

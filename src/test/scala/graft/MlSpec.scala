@@ -266,12 +266,10 @@ object MlSpec {
     def auc(scored: DataFrame): Double = {
       val margin = element_at(vector_to_array(col("rawPrediction")), 2)
       val perScore = scored
-        .groupBy(margin.as("cents"))
-        .agg(count(lit(1)).as("d1"), sum(col("label")).cast("long").as("d2"))
-      val ranked = graft.queries.Catalog
-        .rangePrefixSums(scored.sparkSession, perScore)
-        .withColumnRenamed("d1", "g").withColumnRenamed("d2", "pos")
-        .withColumnRenamed("c1", "c")
+        .groupBy(margin.as("margin"))
+        .agg(count(lit(1)).as("g"), sum(col("label")).cast("long").as("pos"))
+      val ranked = graft.operators.PrefixScan
+        .runningSums(perScore, Seq("margin"), "c" -> col("g"))
       val r = ranked.agg(
         sum(col("pos").cast(DecimalType(38, 0)) *
           (col("c") * 2 - col("g") + 1)).as("rank2"),

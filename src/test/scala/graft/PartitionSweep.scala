@@ -9,7 +9,7 @@ package graft
   * catalog-wide form of that check. Exclusions: m* ML entries
   * (training is legitimately layout-sensitive) and the sketch/sample
   * no-oracle allowlist (engine-specific values by design). Any diff
-  * found here is either a real layout bug (the rangePrefixSums class)
+  * found here is either a real layout bug (the PrefixScan boundary class)
   * or the q63 FP-midpoint rounding class — both worth a targeted fix.
   * Ran clean over all 315 oracle-backed entries on the round-12 tree
   * at BOTH sf0.001 and sf0.01 (SWEEP_SF_DIR selects the fixture; the
