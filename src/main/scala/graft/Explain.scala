@@ -90,23 +90,25 @@ object Explain {
   /** Physical exchange fingerprint: (shuffle exchanges, broadcast
     * exchanges) in a compiled plan, traversing subqueries AND the
     * cached plans behind InMemoryTableScan leaves (a shuffle added
-    * inside a shared kernel must not hide behind its cache wrapper;
-    * relations are deduped by identity so two scans of one cache count
-    * its exchanges once). Exchange counts are the DETERMINISTIC
-    * complement to the wall-time envelopes: container load moves
-    * seconds (the r11→r12 ratchet saga), but a dropped broadcast hint
-    * or a new shuffle moves these integers on every machine,
-    * identically. PlanBudgetSpec pins them per headline with AQE off
-    * and stat-based broadcast disabled, so the counts reflect the
-    * HINTED plan shape — what the query would do at 100 TB where no
-    * side fits the autoBroadcast threshold by accident.
+    * inside a shared kernel must not hide behind its cache wrapper).
+    * Each plan branch that reads a cache gets its own InMemoryRelation,
+    * so relations are deduped by their shared `cacheBuilder`: a cache
+    * read through two branches counts its exchanges once. Exchange
+    * counts are the DETERMINISTIC complement to the wall-time
+    * envelopes: container load moves seconds (the r11→r12 ratchet
+    * saga), but a dropped broadcast hint or a new shuffle moves these
+    * integers on every machine, identically. PlanBudgetSpec pins them
+    * per headline with AQE off and stat-based broadcast disabled, so
+    * the counts reflect the HINTED plan shape — what the query would do
+    * at 100 TB where no side fits the autoBroadcast threshold by
+    * accident.
     */
   private[graft] def exchangeCounts(
       plan: org.apache.spark.sql.execution.SparkPlan): (Int, Int) = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
-    val seenRelations =
+    val seenCaches =
       java.util.Collections.newSetFromMap(
         new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
     def walk(p: SparkPlan): (Int, Int) = {
@@ -114,7 +116,7 @@ object Explain {
       val bc = p.collectWithSubqueries { case e: BroadcastExchangeLike => e }.size
       val nested = p
         .collectWithSubqueries { case s: InMemoryTableScanExec => s.relation }
-        .filter(r => seenRelations.add(r))
+        .filter(r => seenCaches.add(r.cacheBuilder))
         .map(r => walk(r.cachedPlan))
       (sh + nested.map(_._1).sum, bc + nested.map(_._2).sum)
     }

@@ -76,12 +76,40 @@ object MlCatalog {
       .setUserCol("user").setItemCol("item").setRatingCol("rating")
       .setSeed(42L)
 
+  /** Partitions (or blocks) for `rows` input rows at `rowsPerPart`
+    * each, at least one. The ML fits size their layout with it from
+    * the input's row count, never from the core count: randomSplit
+    * membership, the split-finding sample and ALS's blocking are all
+    * partitioning-dependent, so a core-derived count would make the
+    * model vary with the box rather than with the fixture.
+    */
+  private[graft] def parts(rows: Long, rowsPerPart: Long): Int =
+    math.max(1L, (rows + rowsPerPart - 1) / rowsPerPart).toInt
+
+  /** GBT input partitions for `rows` lineitem rows: sf0.1's 600,000
+    * rows over the 16 partitions the round-14 sweep measured best
+    * (see [[gbtData]]), so sf0.1 keeps 16 and smaller fixtures fewer.
+    */
+  private[graft] def gbtParts(rows: Long): Int = parts(rows, 37500L)
+
+  /** ALS user and item blocks for `ratings` rating rows: sf0.1's
+    * 599,351 ratings over Spark's default of 10 blocks, so sf0.1 keeps
+    * 10 and smaller fixtures fewer. At fixture scale a block is a
+    * per-iteration task whose fixed cost dwarfs its solve.
+    */
+  private[graft] def alsBlocks(ratings: Long): Int = parts(ratings, 60000L)
+
+  /** The fixture-scaled ALS fit: rank 50→16, maxIter 10→5 (the sf≤0.1
+    * ratings table is far below the reference's interaction volume),
+    * blocked by [[alsBlocks]] from the full ratings table's row count.
+    */
+  private def alsFit(train: DataFrame, ratingRows: Long): ALSModel =
+    alsEstimator(rank = 16, maxIter = 5).setNumBlocks(alsBlocks(ratingRows)).fit(train)
+
   private def alsModel(s: SparkSession, dir: String): ALSModel =
     alsCache(s, dir) {
-      // fixture-scaled override: rank 50→16, maxIter 10→5 (the sf≤0.1
-      // ratings table is far below the reference's interaction volume)
       val r = ratings(s, dir).cache()
-      try alsEstimator(rank = 16, maxIter = 5).fit(r)
+      try alsFit(r, r.count())
       finally r.unpersist() // fit is eager; only the model's factors live on
     }
 
@@ -140,8 +168,9 @@ object MlCatalog {
     fn = (s, dir) => {
       import s.implicits._
       scopedCaches(s) {
-        val Array(train, test) = ratings(s, dir).randomSplit(Array(0.8, 0.2), seed = 42L)
-        val model = alsEstimator(rank = 16, maxIter = 5).fit(train.cache())
+        val r = ratings(s, dir)
+        val Array(train, test) = r.randomSplit(Array(0.8, 0.2), seed = 42L)
+        val model = alsFit(train.cache(), r.count())
         val trainPred = model.transform(train).cache()
         val testPred = model.transform(test).cache()
         def m(df: DataFrame, metric: String): Double =
@@ -314,7 +343,11 @@ object MlCatalog {
       .transform(indexed)
   }
 
-  /** The return classifier's estimator, pinned by docs/GBT_CONTRACT.md. */
+  /** The return classifier's estimator, pinned by docs/GBT_CONTRACT.md.
+    * Measured dead end: `setCacheNodeIds(true)` fits the same model
+    * bits, but `ml.gbt` ran 1.0–1.4 s slower cold in each of 3 retrain
+    * A/B pairs.
+    */
   private def returnGbt: GBTClassifier =
     new GBTClassifier()
       .setMaxIter(10).setMaxDepth(4).setStepSize(0.05).setSeed(42L)
@@ -322,56 +355,54 @@ object MlCatalog {
   /** Class-1 probability of a scored frame's `probability` vector. */
   private val classOneP: Column = element_at(vector_to_array(col("probability")), 2)
 
-  /** Featurized (train, valid) split shared by m05's model, m13's
-    * learning curve and m22's permutations.
+  /** Featurized (train, valid) split shared by m05's model and scored
+    * frame, m13's learning curve and m22's permutations, session-
+    * memoized in the `gbt_model` family: before the memo every m05
+    * featurized twice (model, then scored frame), fitting the brand
+    * StringIndexer twice. The memo holds the two lazy frames only and
+    * persists nothing; the fitted indexer is part of their plan.
     */
+  private val gbtDataCache =
+    KernelCache[(String, Boolean), (DataFrame, DataFrame)]("gbt_model")
+
   private[graft] def gbtData(s: SparkSession, dir: String,
-      categorical: Boolean): (DataFrame, DataFrame) = {
-    // Round-14 (guide §1/§2.6): the whole GBT pipeline inherited the
-    // parquet scan's 3 splits — profiled at sf0.1, the two featurize-
-    // materialization jobs ran 3 tasks and all 40 boosting level-jobs
-    // 6 tasks on a 32-core box (18.5 s wall, 15.7 s sum-of-jobs). A
-    // FIXED 16-way round-robin repartition right after the scan
-    // parallelizes featurization, split finding, every stats pass and
-    // the evaluator sort. 16 was MEASURED, not assumed: the level-pass
-    // cost is stats-array-bound, not row-bound, so parallelism is
-    // non-monotone — sf0.1 wall seconds 8→19.6, 16→10.9-12.2 (×3
-    // runs), 24→15.3, 32→33, 64→23 (each task allocates the full
-    // (node,feature,bin) DTStatsAggregator and treeAggregate pays the
-    // merge fan-in, so wide layouts lose more than they gain). Fixed,
-    // not defaultParallelism: randomSplit membership and the split-
-    // finding sample are partitioning-dependent (the documented
-    // m*-class sensitivity), so deriving the count from the core count
-    // would make the MODEL vary across the driver's core-count scaling
-    // runs — 16 keeps it a pure function of the fixture. At cluster
-    // scale SPARK_GRAFT_ML_PARTS overrides (size to ~40k rows/task,
-    // the measured sweet spot here). Metric bands re-checked at all
-    // three SFs after the change (MlSpec + manual sf0.1 run).
-    val mlParts = sys.env.getOrElse("SPARK_GRAFT_ML_PARTS", "16").toInt
-    val feats = returnFeatures(dir, Tables.lineitem(s, dir).repartition(mlParts),
-      categorical)
-    // Round-15 note (tried, measured, REVERTED): persisting the
-    // featurized PRE-SPLIT frame here (to stop the 3-split scan chain
-    // re-executing ~6× per m05 — a profiled ~3.9 s) was read as making
-    // the FITTED MODEL context-sensitive. With the persist, an ISOLATED
-    // MlSpec run read sf0.001 AUC 0.5284 and the FULL-SUITE run 0.5123,
-    // and the evaluator wobbled by 1 ulp between same-session calls
-    // (suspected: randomSplit's per-partition pre-sample sort is not a
-    // total order over (label, vector) ties). This is not a second
-    // cause of docs/GBT_CONTRACT.md's history pair, whose two values
-    // are both UNCACHED: 0.528431 is the pre-round-14 3-split layout,
-    // then the MlSpec pin; 0.512286 is the 16-way layout, pinned since.
-    // Re-run isolated on local[4] after round 15, m05 read 0.512286
-    // both with and without the persist, so the isolated 0.5284 did
-    // not reproduce; it equals the then-stale pin to four digits. The
-    // wobble was the evaluator's own ([[classifierMetrics]] replaced
-    // it). The 1.04× bench delta still does not pay for the risk; the
-    // DF-level train cache below stays the only cache, as shipped in
-    // round 14.
-    val Array(train, valid) = feats
-      .select("label", "features").randomSplit(Array(0.8, 0.2), seed = 42L)
-    (train, valid)
-  }
+      categorical: Boolean): (DataFrame, DataFrame) =
+    gbtDataCache(s, (dir, categorical)) {
+      // Round-14 (guide §1/§2.6): the whole GBT pipeline inherited the
+      // parquet scan's 3 splits — profiled at sf0.1, the two featurize-
+      // materialization jobs ran 3 tasks and all 40 boosting level-jobs
+      // 6 tasks on a 32-core box (18.5 s wall, 15.7 s sum-of-jobs). A
+      // round-robin repartition right after the scan parallelizes
+      // featurization, split finding, every stats pass and the
+      // evaluator sort. The level-pass cost is stats-array-bound, not
+      // row-bound, so parallelism is non-monotone — sf0.1 wall seconds
+      // 8→19.6, 16→10.9-12.2 (×3 runs), 24→15.3, 32→33, 64→23 (each
+      // task allocates the full (node,feature,bin) DTStatsAggregator
+      // and treeAggregate pays the merge fan-in). The count is
+      // [[gbtParts]] of the lineitem rows (one count job): 16 at sf0.1,
+      // as that sweep measured, and 2 at sf0.01 and on the retrain
+      // benchmark's data, where a fixed 16 ran every boosting level as
+      // 16 tasks of about 3k rows and a cold pass spent 5.4 s
+      // deserializing tasks beside 8.3 s running them. Never
+      // defaultParallelism: see [[parts]].
+      //
+      // Layout history of the sf0.001 AUC (docs/GBT_CONTRACT.md):
+      // 0.528431 is the one-partition layout (the scan's own before
+      // round 14, and this rule's since), 0.512286 the fixed 16-way
+      // layout of rounds 14-15. Round 15 also tried persisting the
+      // featurized pre-split frame and read the same pair (isolated
+      // 0.5284, full suite 0.5123); re-run isolated after round 15 it
+      // read 0.512286 with and without the persist, so the layout is
+      // the one cause of that pair, not the persist. The persist was
+      // reverted for a 1.04× bench delta that did not pay for a cached
+      // model input; the DF-level train cache in [[gbtModel]] stays the
+      // only cache.
+      val li = Tables.lineitem(s, dir)
+      val feats = returnFeatures(dir, li.repartition(gbtParts(li.count())), categorical)
+      val Array(train, valid) = feats
+        .select("label", "features").randomSplit(Array(0.8, 0.2), seed = 42L)
+      (train, valid)
+    }
 
   /** The FITTED m05 model itself, session-memoized — m22's permutation
     * importance must re-SCORE six perturbed validation frames with the
@@ -384,7 +415,12 @@ object MlCatalog {
       categorical: Boolean): GBTClassificationModel =
     gbtModelCache(s, (dir, categorical)) {
       val (train, _) = gbtData(s, dir, categorical)
-      returnGbt.fit(train.cache())
+      // unpersisted through the Dataset API once the eager fit is done:
+      // the memoized frame is re-read by m13, whose own cache must not
+      // find a stale entry for the same plan
+      val tc = train.cache()
+      try returnGbt.fit(tc)
+      finally tc.unpersist()
     }
 
   private def gbtScoredBuild(s: SparkSession, dir: String,

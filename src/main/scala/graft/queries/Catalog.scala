@@ -5053,24 +5053,30 @@ object Catalog {
     * 10^-4 grid as BIGINT (price has 2 decimals, discount 2, so the
     * product is exact on that grid; identical round on both engines —
     * the q115 cents idiom one scale finer), and the max-equality
-    * compare is integer, so ties are exact, not float-luck. Scale: one
-    * suppkey agg over the date-pruned scan, then a window max over the
-    * |suppliers|-row rollup — the unpartitioned window is dim-sized,
-    * never fact-sized; supplier names BROADCAST.
+    * compare is integer, so ties are exact, not float-luck. Lines with
+    * no supplier key cannot name a top supplier and are dropped before
+    * the rollup. Scale: one suppkey agg over the date-pruned scan, then
+    * its max as a one-row global aggregate, broadcast and joined back
+    * on revenue equality — no window moves the rollup into one
+    * partition. The explicit null filter keeps both branches of the
+    * join-back one plan (the supplier join would otherwise infer it on
+    * one side only), so ReuseExchange serves the max from the rollup's
+    * shuffle and the fact table is scanned once; supplier names
+    * BROADCAST.
     */
   val q144TopQuarterSupplier: QuerySpec = QuerySpec(
     fn = (s, dir) => {
       val rev = Tables.lineitem(s, dir)
         .filter(col("l_shipdate") >= lit("1999-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1999-04-01").cast("timestamp"))
+          col("l_shipdate") < lit("1999-04-01").cast("timestamp") &&
+          col("l_suppkey").isNotNull)
         .groupBy(col("l_suppkey"))
         .agg(sum(expr(
           "CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT)"))
           .as("revenue_e4"))
       rev
-        .withColumn("max_rev", max(col("revenue_e4")).over(
-          Window.partitionBy(lit(1))))
-        .filter(col("revenue_e4") === col("max_rev"))
+        .join(broadcast(rev.agg(max(col("revenue_e4")).as("max_rev"))),
+          col("revenue_e4") === col("max_rev"))
         .join(broadcast(Tables.supplier(s, dir)
           .select(col("s_suppkey"), col("s_name"))),
           col("l_suppkey") === col("s_suppkey"))
@@ -5084,6 +5090,7 @@ object Catalog {
                    FROM lineitem
                    WHERE l_shipdate >= TIMESTAMP '1999-01-01'
                      AND l_shipdate <  TIMESTAMP '1999-04-01'
+                     AND l_suppkey IS NOT NULL
                    GROUP BY l_suppkey)
       SELECT s_suppkey, s_name, revenue_e4
       FROM rev JOIN supplier ON l_suppkey = s_suppkey

@@ -253,8 +253,6 @@ object ExplainSpec {
       "window input = groupBy(source) rollup; documents.source is a small categorical domain",
     "q88_chisq_contingency" ->
       "window input = groupBy(lang, source) contingency cells; both categorical domains",
-    "q144_top_quarter_supplier" ->
-      "window input = groupBy(l_suppkey) revenue rollup; bounded by |suppliers|",
     "q162_pareto_frontier" ->
       prefixScanOffsets,
     "q166_ks_statistic" ->

@@ -52,9 +52,9 @@ class MlSpec extends SparkSpec {
     // committed-band tie to docs/GBT_CONTRACT.md (guards hyperparameter
     // drift; band absorbs randomSplit's partitioning sensitivity)
     val (auc, logloss, acc) = m1
-    assert(math.abs(auc - 0.512286) < 0.05, s"auc $auc drifted from committed 0.512286")
-    assert(math.abs(logloss - 0.635068) < 0.05, s"logloss $logloss drifted from 0.635068")
-    assert(math.abs(acc - 0.679832) < 0.05, s"accuracy $acc drifted from 0.679832")
+    assert(math.abs(auc - 0.528431) < 0.05, s"auc $auc drifted from committed 0.528431")
+    assert(math.abs(logloss - 0.648658) < 0.05, s"logloss $logloss drifted from 0.648658")
+    assert(math.abs(acc - 0.647875) < 0.05, s"accuracy $acc drifted from 0.647875")
   }
 
   test("m13 learning curve: nested budgets, sane AUC band, no leaked caches") {

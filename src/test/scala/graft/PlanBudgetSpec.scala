@@ -70,7 +70,17 @@ class PlanBudgetSpec extends SparkSpec {
     // partitions its projection by the join key BEFORE the dedup, so
     // one exchange serves both the distinct and the self-join (the old
     // shape shuffled by (ok,pk) then re-shuffled by ok).
-    "q149_minhash_estimate_audit" -> ((14, 0)),
+    // Thirteen rows drop with no plan change when exchangeCounts
+    // dedupes a cache by its shared CachedRDDBuilder instead of by
+    // InMemoryRelation instance (each branch reading a cache gets its
+    // own instance, so a cache read through k branches counted k
+    // times): the documents shingle cache (1 shuffle) read 2-7 times
+    // in q149/q296/q305/q307/q35/q36/q50/q65/q86, a 2-shuffle
+    // aggregate cache over the shingles twice in q149/q296/q305, the
+    // lineitem co-occurrence cache (2) twice in q85/q95/q294/q300, the
+    // 9-shuffle blocking-join cache twice in q305/q307 and q65's
+    // 2-shuffle join cache twice.
+    "q149_minhash_estimate_audit" -> ((10, 0)),
     "q14_part_pairs" -> ((2, 0)),
     "q201_hits_scores" -> ((10, 5)),
     "q206_ranking_metrics" -> ((10, 2)),
@@ -97,32 +107,32 @@ class PlanBudgetSpec extends SparkSpec {
     // than the saved edge re-shuffles cost (Components.scala note).
     "q284_grid_dbscan" -> ((66, 0)),
     "q290_greedy_matching" -> ((7, 12)),
-    "q294_katz_centrality" -> ((8, 6)),
-    "q296_blocking_quality" -> ((39, 0)),
-    "q300_two_sweep_diameter" -> ((18, 22)),
-    "q305_fellegi_sunter" -> ((43, 0)),
-    "q307_sorted_neighborhood" -> ((45, 5)),
-    "q35_ngram_jaccard_neardup" -> ((17, 0)),
-    "q36_minhash_lsh_neardup" -> ((14, 0)),
+    "q294_katz_centrality" -> ((6, 6)),
+    "q296_blocking_quality" -> ((30, 0)),
+    "q300_two_sweep_diameter" -> ((16, 22)),
+    "q305_fellegi_sunter" -> ((26, 0)),
+    "q307_sorted_neighborhood" -> ((31, 5)),
+    "q35_ngram_jaccard_neardup" -> ((12, 0)),
+    "q36_minhash_lsh_neardup" -> ((10, 0)),
     "q40_embedding_lsh_ann" -> ((8, 0)),
     "q47_user_sessions" -> ((2, 0)),
-    "q50_corpus_curation" -> ((22, 0)),
+    "q50_corpus_curation" -> ((17, 0)),
     "q57_embedding_neardup_ann" -> ((7, 0)),
     "q63_embedding_quantize" -> ((1, 0)),
-    "q65_incremental_dedup" -> ((25, 0)),
+    "q65_incremental_dedup" -> ((18, 0)),
     "q66_repetition_stats" -> ((1, 0)),
     "q74_substring_dedup" -> ((5, 0)),
     "q83_zorder_layout" -> ((1, 0)),
     // q85 (12,5)->(11,5): round 1's share is seeded from deg alone
     // (no ranks ⋈ deg join, whose broadcast side AQE picked by stage
     // completion order)
-    "q85_pagerank" -> ((11, 5)),
-    "q86_bloom_decontamination" -> ((9, 2)),
+    "q85_pagerank" -> ((9, 5)),
+    "q86_bloom_decontamination" -> ((6, 2)),
     // q95 (12,0)->(10,1) round 15: the vertex-sized per-part count
     // table broadcasts into both enrichment joins (Rounds.gate;
     // ReuseExchange dedupes the two hints into one broadcast build)
     // instead of sort-merging the symmetric pair table twice
-    "q95_item_similarity" -> ((8, 1)),
+    "q95_item_similarity" -> ((6, 1)),
     "q99_regional_revenue" -> ((3, 3)),
   )
 

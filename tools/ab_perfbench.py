@@ -25,7 +25,10 @@ neither side), and two verdicts:
   run beats every parent run; otherwise within.
 
 Failed or incorrect runs are counted and reported; their metrics are left
-out. Nothing under either checkout's `perfbench/` is touched.
+out. For information only, it then prints each side's median of the per-stage
+figures in the run's report line (`stage.*_ms` for retrain,
+`stream_batch_p50_ms` for score_stream); they enter no verdict. Nothing under
+either checkout's `perfbench/` is touched.
 """
 import argparse
 import json
@@ -60,8 +63,16 @@ def wait_idle(limit):
     return os.getloadavg()[0]
 
 
+def stage_figures(report):
+    """The per-stage figures of a run's report: its `stage.*_ms` and
+    `stream_batch_p50_ms` values."""
+    return {k: v["value"] for k, v in report.items()
+            if k.startswith("stage.") or k == "stream_batch_p50_ms"}
+
+
 def run_once(root, workload, seed, seconds):
-    """The metrics of one `--trace 0` run in `root`, or an error string."""
+    """The metrics and per-stage figures of one `--trace 0` run in `root`,
+    or an error string."""
     cmd = [sys.executable, os.path.join("perfbench", "run.py"), "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     r = subprocess.run(cmd, cwd=root, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
@@ -69,11 +80,14 @@ def run_once(root, workload, seed, seconds):
     lines = r.stdout.strip().splitlines()
     if r.returncode != 0 or not lines:
         why = (r.stderr.strip().splitlines() or [""])[-1]
-        return None, f"exit {r.returncode}: {why}"
+        return None, None, f"exit {r.returncode}: {why}"
     last = json.loads(lines[-1])
     if not last.get("correct") or last.get("failed", 0):
-        return None, f"incorrect: {last.get('failed')} of {last.get('attempted')} ops failed"
-    return {k: v["value"] for k, v in last["metrics"].items()}, None
+        return None, None, (f"incorrect: {last.get('failed')} of {last.get('attempted')} "
+                            "ops failed")
+    report = json.loads(lines[-2]).get("report", {}) if len(lines) > 1 else {}
+    return ({k: v["value"] for k, v in last["metrics"].items()}, stage_figures(report),
+            None)
 
 
 def quartiles(xs):
@@ -96,6 +110,7 @@ def main():
     sides = {"parent": a.parent_dir, "change": a.change_dir}
     idle = {side: load_per_core(root) for side, root in sides.items()}
     runs = {"parent": [], "change": []}  # (pair, metrics) of correct runs
+    stages = {"parent": [], "change": []}  # per-stage figures of correct runs
     failures = {"parent": 0, "change": 0}
     for i in range(a.pairs):
         seed = i + 1
@@ -104,13 +119,15 @@ def main():
             load = wait_idle(idle[side])
             print(f"pair {i} seed {seed} {side}: starting at loadavg_1m {load:.2f}",
                   flush=True)
-            metrics, err = run_once(sides[side], a.workload, seed, seconds)
+            metrics, figures, err = run_once(sides[side], a.workload, seed, seconds)
             if err:
                 failures[side] += 1
                 print(f"pair {i} seed {seed} {side}: FAILED ({err})", flush=True)
             else:
                 runs[side].append((i, metrics))
-                print(f"pair {i} seed {seed} {side}: " + json.dumps(metrics), flush=True)
+                stages[side].append(figures)
+                print(f"pair {i} seed {seed} {side}: " + json.dumps(metrics)
+                      + " stages " + json.dumps(figures), flush=True)
 
     print(f"\n{a.workload}: {a.pairs} pairs, failed runs parent {failures['parent']} "
           f"change {failures['change']}")
@@ -141,6 +158,15 @@ def main():
         print(f"    gain: {'MET' if claimed else 'not met'}; bound {m['bound']}: {bound} "
               f"(IQR/median parent {(p3 - p1) / pm if pm else 0.0:.3f}, "
               f"change {(c3 - c1) / cm if cm else 0.0:.3f})")
+
+    names = sorted({k for side in stages.values() for f in side for k in f})
+    if names:
+        print("  per-stage medians (information only, no verdict):")
+    for name in names:
+        meds = {side: [f[name] for f in figs if name in f] for side, figs in stages.items()}
+        print(f"    {name}: " + " | ".join(
+            f"{side} {statistics.median(xs):.1f} (n {len(xs)})" if xs else f"{side} no data"
+            for side, xs in meds.items()))
 
 
 if __name__ == "__main__":
